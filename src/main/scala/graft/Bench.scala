@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // `--repeat N` (or SPARK_GRAFT_BENCH_REPEAT): time each query N times
+    // `--repeat N`: time each query N times
     // back-to-back and record the per-query MEDIAN — the sf10 protocol
     // fix (r14 verdict #3): single sweeps on this host ride a ±20-35%
     // noise band, and medians put per-query claims on a stable footing
@@ -43,48 +43,19 @@ object Bench {
     // same-code --repeat 3 records disproved. Larger fixtures keep the
     // single-pass default (a tripled sf10 sweep would run ~1h; those
     // records are produced deliberately via sweep.py --repeat 3). An
-    // explicit --repeat or SPARK_GRAFT_BENCH_REPEAT always wins.
+    // explicit --repeat always wins.
     val defaultRepeat = {
       val sfNum = "sf([0-9][0-9.]*)/*$".r
         .findFirstMatchIn(sfDir)
         .flatMap(m => scala.util.Try(m.group(1).stripSuffix(".").toDouble).toOption)
       if (sfNum.exists(_ <= 0.1)) 3 else 1
     }
-    val repeat = math.max(
-      1,
-      repeatArg
-        .orElse(sys.env.get("SPARK_GRAFT_BENCH_REPEAT").map(_.toInt))
-        .getOrElse(defaultRepeat))
+    val repeat = math.max(1, repeatArg.getOrElse(defaultRepeat))
     // optional positional comma-separated name filter (mirrors Verify's):
     // `runMain graft.Bench q_a,q_b` times just those queries at the
-    // driver's exact session config — the isolated-re-measure path that
-    // previously required env-var gymnastics. No args = full inventory.
-    val argFilter = positional.headOption.filter(_.nonEmpty).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Shuffle partitions default to the thread count (the driver's
-    // contract config) but are overridable for scale-proof sweeps:
-    // per-task memory is heap/concurrency ÷ rows-per-partition, so a
-    // 100× fixture on the same heap needs proportionally more, smaller
-    // partitions to keep sorts and partial aggregates in memory (AQE
-    // coalesces the small ones back, so over-partitioning is cheap).
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // Pinned in code, not just build.sbt's forked-JVM -D flag: the
-      // NTZ→TIMESTAMP fixture normalization is session-TZ-dependent, so
-      // a spark-submit launch on a non-UTC host must not shift instants.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // RocksDB state store for the streaming family (see Verify.scala
-      // for the rationale — disk-backed state, bounded executor heap)
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // driver's exact session config. No args = full inventory.
+    val only = positional.headOption.filter(_.nonEmpty).map(_.split(",").toSet)
+    val spark = GraftSession.local()
     // untimed warmup: session/codegen/parquet-reader init otherwise lands
     // on whichever query happens to run first (map iteration order — i.e.
     // an arbitrary query absorbs JIT, janino, broadcast-pool, and footer
@@ -102,27 +73,14 @@ object Bench {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 1).count()
     } catch { case _: Throwable => }
-    // optional comma-separated name filter (local iteration only; the
-    // driver never sets it and times the full inventory)
-    val only = argFilter.orElse(
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet))
-    // shuffle/spill accounting: a task listener accumulates bytes,
-    // snapshotted around each query. ALWAYS ON (r14 — the rounds' best
+    // shuffle/spill accounting: the shared listener accumulates task
+    // bytes, reset before each query. ALWAYS ON (r14 — the rounds' best
     // scale findings all came from bytes evidence, and an opt-in line kept
     // dropping out of recorded sweeps): the bytes line prints BEFORE the
     // compact summary, so the driver's bounded-tail capture still ends on
-    // the untouched contract line. Listener delivery is asynchronous, so
-    // per-query deltas can bleed a late task into the next query — fine
-    // for a scaling record, wrong for sub-second adjudication; use
-    // isolated triples for those. SPARK_GRAFT_BENCH_METRICS=0 is the
-    // kill switch.
-    val metrics = if (sys.env.get("SPARK_GRAFT_BENCH_METRICS").contains("0")) {
-      None
-    } else {
-      val l = new MetricsListener
-      spark.sparkContext.addSparkListener(l)
-      Some(l)
-    }
+    // the untouched contract line.
+    val metrics = new QueryListener
+    spark.sparkContext.addSparkListener(metrics)
     val perQueryMetrics = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // per-run walls under --repeat — the band behind each median, kept in
     // the full record so a median record discloses its spread (r15)
@@ -135,19 +93,13 @@ object Bench {
     def timeOnce(
         name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame
-    ): (Double, Option[String]) = {
-      // isolate per-query timing: drop caches left by previous queries AND
-      // their localCheckpoint result blocks — clearCache() does not touch
-      // checkpoint RDD blocks, and leaving their release to the
-      // ContextCleaner (GC timing) let block churn bleed multi-second
-      // noise into unrelated queries (recorded round-2 outliers). Blocking
-      // unpersist so the next timing starts from a clean block manager.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // drain the async listener bus so the per-query byte deltas are
-      // complete by construction (same rationale as StageProbe's drain)
-      metrics.foreach(_ => org.apache.spark.graft.ListenerBus.drain(spark.sparkContext))
-      val before = metrics.map(_.snapshot())
+    ): (Double, String) = {
+      isolate(spark)
+      // drain the async listener bus so the per-query byte counts are
+      // complete by construction: nothing from the previous query lands
+      // after the reset
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      metrics.reset()
       val t0 = System.nanoTime()
       // 1.0 = ok; -1.0 = failed; -2.0 = the query's own O(n²)-validator
       // guard declined the corpus (labeled validators refuse to run past
@@ -170,13 +122,8 @@ object Bench {
       // capture the end time BEFORE the metrics drain, so the bus wait
       // never inflates the timed number
       val t1 = System.nanoTime()
-      val bytesJson = metrics.map { l =>
-        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-        val b = before.get
-        val a = l.snapshot()
-        s"""{"shuffle_read":${a._1 - b._1},"shuffle_write":${a._2 - b._2},""" +
-          s""""mem_spill":${a._3 - b._3},"disk_spill":${a._4 - b._4}}"""
-      }
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      val bytesJson = metrics.bytes.json
       // failed queries record -1 (guard-skips -2) so the JSON can't
       // masquerade as a fast pass
       (if (outcome > 0) (t1 - t0) / 1e9 else outcome, bytesJson)
@@ -186,7 +133,7 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
       val runs = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val runBytes = scala.collection.mutable.ArrayBuffer.empty[Option[String]]
+      val runBytes = scala.collection.mutable.ArrayBuffer.empty[String]
       var marker = 0.0 // -1/-2 if any run fails/guard-skips
       var i = 1
       // a failed/guard-skipped run ends the repeats — repeating a
@@ -203,7 +150,7 @@ object Bench {
           // the shuffle/spill counters of exactly the run one wants to
           // debug (the wall stays the -1/-2 marker, so the pairing rule
           // "published wall and bytes come from one execution" holds)
-          bytes.foreach(perQueryMetrics(name) = _)
+          perQueryMetrics(name) = bytes
         }
         i += 1
       }
@@ -216,7 +163,7 @@ object Bench {
       val sec =
         if (marker != 0.0) marker
         else runs(medianIdx)
-      if (medianIdx >= 0) runBytes(medianIdx).foreach(perQueryMetrics(name) = _)
+      if (medianIdx >= 0) perQueryMetrics(name) = runBytes(medianIdx)
       if (repeat > 1) perQueryRuns(name) = runs.toSeq
       // one short line per query, printed as it finishes: live progress
       // locally, and the only per-query record that survives a
@@ -227,11 +174,9 @@ object Bench {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    metrics.foreach { _ =>
-      val ms = perQueryMetrics.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      println(s"""{"metric":"bytes","queries":$ms,"sf":"$sfDir"}""")
-    }
+    val ms = perQueryMetrics.map { case (k, v) => s"\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    println(s"""{"metric":"bytes","queries":$ms,"sf":"$sfDir"}""")
     // Complete per-query record → file (the full map is ~8 KB for the
     // 165-query inventory — larger than any bounded tail capture).
     // Overridable for local sweeps; failures keep their -1/-2 markers.
@@ -306,24 +251,15 @@ object Bench {
     false
   }
 
-  /** Cumulative task-level shuffle/spill bytes (see the opt-in note at the
-    * registration site).
+  /** Isolates per-query timing: drops caches left by previous queries AND
+    * their localCheckpoint result blocks — clearCache() does not touch
+    * checkpoint RDD blocks, and leaving their release to the
+    * ContextCleaner (GC timing) let block churn bleed multi-second noise
+    * into unrelated queries (recorded round-2 outliers). Blocking
+    * unpersist so the next timing starts from a clean block manager.
     */
-  private final class MetricsListener extends org.apache.spark.scheduler.SparkListener {
-    import java.util.concurrent.atomic.AtomicLong
-    private val sr = new AtomicLong
-    private val sw = new AtomicLong
-    private val ms = new AtomicLong
-    private val ds = new AtomicLong
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        sr.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        ms.addAndGet(m.memoryBytesSpilled)
-        ds.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot(): (Long, Long, Long, Long) = (sr.get, sw.get, ms.get, ds.get)
+  private[graft] def isolate(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 }

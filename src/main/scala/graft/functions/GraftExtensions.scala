@@ -12,7 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * spark.sql.extensions=graft.functions.GraftExtensions
   * }}}
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * ([[graft.GraftSession]] installs it on every session the engine
+  * builds).
   * The imperative `ensureRegistered` paths remain for sessions the
   * library does not construct — each function has ONE shared builder
   * (`ArrayDot.builder`, `SrpBuckets.builder`), so the two routes resolve

@@ -138,8 +138,7 @@ private[graft] object Caching {
     * deliberately far below a scan split: enough rows per task to
     * amortize the exchange + task launch, small enough that a gate-scale
     * corpus still fans out. Tuned by isolated A/B at sf0.1 (see
-    * OPTIMIZATION_r22.md); overridable per session for sweeps via
-    * `spark.graft.spread.targetSplitBytes`.
+    * OPTIMIZATION_r22.md).
     */
   val SpreadTargetSplitBytes: Long = 64L << 10
 
@@ -153,11 +152,7 @@ private[graft] object Caching {
     val bigEnough = minBytes <= 0L || bytes > BigInt(minBytes)
     if (!bigEnough || df.rdd.getNumPartitions >= p) df
     else {
-      val target = BigInt(
-        df.sparkSession.conf
-          .getOption("spark.graft.spread.targetSplitBytes")
-          .map(_.toLong)
-          .getOrElse(SpreadTargetSplitBytes)).max(1)
+      val target = BigInt(SpreadTargetSplitBytes)
       // size-capped width: small inputs take few partitions; data past
       // p × target takes all cores (identity at real scale is preserved
       // by the under-split guard above)

@@ -1109,20 +1109,17 @@ object ExtQueries {
     //      Like mm_video_real, the gate decodes a 10% doc_id SHARD — the
     //      production shape (decode-validate a shard, not the corpus):
     //      at sf10 full per-row ImageIO decode was the single most
-    //      expensive sweep entry (231 s, 60×) for a validation query.
-    //      spark.graft.mmDecodeFull=true restores whole-corpus decode
-    //      (diverges from the registered shard oracle by design) ----
+    //      expensive sweep entry (231 s, 60×) for a validation query ----
     "mm_decode_real" -> QueryDef(
       (s, d) => {
         import s.implicits._
-        val full = s.conf.getOption("spark.graft.mmDecodeFull").contains("true")
         // Explicit repartition to the core count: the scan projects a
         // single long column, so file-size-based splitting yields a
         // handful of partitions — fine for I/O, badly underparallelized
         // for the CPU-bound ImageIO encode/decode that follows. The
         // shuffled payload is 8 bytes/row; the decode work is ms/row.
         val ids = t(s, d, "documents").select(col("doc_id").cast("long"))
-          .filter(if (full) lit(true) else col("doc_id") % 10 === 0)
+          .filter(col("doc_id") % 10 === 0)
           .as[Long]
           .repartition(s.sparkContext.defaultParallelism)
         ids.mapPartitions { it =>

@@ -819,7 +819,7 @@ object EventStream {
     * many rows it holds — measured at sf10 (r14): the interval join's
     * two state stages ran 590 s/566 s with only 8 s/33 s of CPU (tasks
     * blocked on per-store lifecycle I/O, not work), and at sf0.1 (r15
-    * StageProbe) 32 stores × ~3k rows/store paid ~450–780 ms of
+    * stage probe) 32 stores × ~3k rows/store paid ~450–780 ms of
     * open/commit per (store, batch) — the whole wall of the top three
     * bench entries. So: stores = clamp(rows/32k, 4, parallelism) — a
     * store per ~32k input rows keeps per-store state far under memory
@@ -844,12 +844,16 @@ object EventStream {
   private def stateScopedSession(spark: SparkSession, srcPath: String): SparkSession = {
     val ss = spark.newSession()
     Seq(
-      "spark.sql.streaming.stateStore.providerClass",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
       "spark.sql.session.timeZone",
       "spark.sql.legacy.parquet.nanosAsLong"
     ).foreach(k => spark.conf.getOption(k).foreach(ss.conf.set(k, _)))
-    // Engine defaults for the drains this module owns (r22, StreamProbe
+    // The state store is the drain's own choice, not the caller's: the two
+    // settings below are RocksDB-only, so a registered streaming query
+    // must run on any session a caller builds — including one left on (or
+    // set to) the HDFS-backed default, where join state format v3 fails
+    // with STATE_STORE_MULTIPLE_COLUMN_FAMILIES.
+    graft.GraftSession.StateStoreConf.foreach { case (k, v) => ss.conf.set(k, v) }
+    // Engine defaults for the drains this module owns (r22 per-micro-batch
     // decomposition: per-(store, batch) RocksDB lifecycle — open, put,
     // commit, changelog — is the dominant micro-batch cost, not the data):
     //  - join stateFormatVersion 3 collapses the stream-stream join's FOUR

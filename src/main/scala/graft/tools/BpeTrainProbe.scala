@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-iteration cost attribution for the incremental BPE trainer — the
   * evidence that per-merge work tracks the VOCAB-TOUCH FRACTION (the
   * winning pair's weighted count), not the corpus: the naive loop paid a
@@ -21,16 +19,7 @@ object BpeTrainProbe {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: BpeTrainProbe <sfDir> <numMerges>")
     val (dir, m) = (args(0), args(1).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
 
     val docs = graft.queries.Tables.t(spark, dir, "documents").select("text")
     val iters = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]

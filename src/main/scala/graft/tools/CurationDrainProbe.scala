@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Evidence probe for the `q_stream_curation` files-per-trigger lever:
@@ -18,14 +17,7 @@ object CurationDrainProbe {
     require(args.nonEmpty, "usage: CurationDrainProbe <sfDir> [mft1,mft2,...]")
     val sfDir = args(0)
     val mfts = args.lift(1).getOrElse("1,8,32").split(",").map(_.trim.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     for (mft <- mfts) {
       val t0 = System.nanoTime()
       val out = graft.streaming.EventStream.curationRunOnce(

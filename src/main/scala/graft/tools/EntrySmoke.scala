@@ -1,24 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** The driver's flagship smoke, runnable locally: `SparkEntry.entry` on
   * a fresh session must return rows > 0 at sf0.001.
   *
   * {{{
-  * sbt "runMain graft.tools.EntrySmoke"            # default sf0.001
-  * sbt "runMain graft.tools.EntrySmoke /root/testdata/sf0.01"
+  * sbt "runMain graft.tools.EntrySmoke"
   * }}}
   */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val n = graft.SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n")
     spark.stop()

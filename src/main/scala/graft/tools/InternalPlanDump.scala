@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Formatted plans of the INTERNAL pipelines behind the eagerly-
@@ -20,14 +19,7 @@ object InternalPlanDump {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: InternalPlanDump <sfDir>")
     val d = args(0)
-    val spark = SparkSession.builder()
-      .master("local[8]").appName("internalplandump")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.ArrayDot.ensureRegistered(spark)
+    val spark = graft.GraftSession.local()
     def show(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       println(s"==== $name ====")
       println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))

@@ -216,14 +216,7 @@ object RecallProbe {
     // the standard probe set (`runMain graft.tools.RecallProbe /tmp/sf10
     // pqSweep 200,400,800,1600`)
     val pqSweep = args.length > 1 && args(1) == "pqSweep"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     // `phashBands` arg: the mm_phash_dedup banding tail-recall probe
     // (data-free — planted hashes, not the embeddings table)

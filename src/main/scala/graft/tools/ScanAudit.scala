@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Registry-wide scan fan-out audit (the r14 recipe that caught
   * q_percentile_cont's 15× scan, re-run per the r20 verdict): for every
   * registered query, count how many times each parquet location appears
@@ -23,41 +21,25 @@ object ScanAudit {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScanAudit <sfDir> [query ...]")
     val dir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val exec = args.contains("--exec")
     val names =
       if (args.length > 1) args.drop(1).filterNot(_ == "--exec").toSeq
       else graft.SparkEntry.queries.keys.toSeq
-    // executed-input listener for --exec: recordsRead across all tasks
-    val recIn = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) recIn.addAndGet(te.taskMetrics.inputMetrics.recordsRead)
-    })
+    // executed-input listener for --exec: recordsRead across all stages
+    val listener = new graft.QueryListener
+    spark.sparkContext.addSparkListener(listener)
     val scanRe = ("Location: [A-Za-z]*FileIndex(?:\\([0-9]+ paths\\))? *\\[([^,\\]]+)").r
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        graft.Bench.isolate(spark)
         if (exec) {
           org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-          val before = recIn.get
+          listener.reset()
           fn(spark, dir).queryExecution.toRdd.foreach(_ => ())
           org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-          println(s"[scanaudit] $name execRecordsRead=${recIn.get - before}")
+          println(s"[scanaudit] $name execRecordsRead=${listener.stages.map(_.recordsIn).sum}")
         }
         val plan = fn(spark, dir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -26,7 +26,7 @@ object ArtifactParams {
     * `createDataFrame(...).coalesce(1).write` launched a full Spark job —
     * scheduler latency + commit protocol — to persist a handful of
     * scalars, and that job sat serially on every artifact build chain
-    * (JobProbe r21: the artifact gates are job-latency bound, not
+    * (r21 job-span probe: the artifact gates are job-latency bound, not
     * compute bound). The on-disk format is unchanged: one standard
     * parquet file of required UTF-8 string columns, readable by any
     * engine (and by Spark — TokenPackSpec round-trips it).

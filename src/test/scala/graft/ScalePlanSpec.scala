@@ -357,6 +357,32 @@ class ScalePlanSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
+  test("spreadToParallelism: an under-split scan widens to ceil(bytes / 64 KiB), capped at the cores") {
+    import graft.ops.Caching
+    val dir = Files.createTempDirectory("spread").toString
+    // one file of incompressible hex = one scan partition of a known size
+    def scan(rows: Int): (org.apache.spark.sql.DataFrame, Long) = {
+      spark.range(0, rows, 1, 1).select(sha2(col("id").cast("string"), 256).as("h"))
+        .write.parquet(s"$dir/$rows")
+      val df = spark.read.parquet(s"$dir/$rows")
+      assert(df.rdd.getNumPartitions == 1)
+      (df, df.queryExecution.optimizedPlan.stats.sizeInBytes.toLong)
+    }
+    val target = Caching.SpreadTargetSplitBytes
+    assert(spark.sparkContext.defaultParallelism == 4)
+    for ((rows, band, width) <- Seq(
+        (1400, (target, 2 * target), 2),     // ~100 KB: two tasks, not four
+        (3000, (3 * target, 4 * target), 4), // ~200 KB
+        (6000, (5 * target, 8 * target), 4)  // ~400 KB: ceil = 6 or 7, capped at 4
+    )) {
+      val (df, bytes) = scan(rows)
+      assert(bytes > band._1 && bytes <= band._2, s"$rows rows: $bytes bytes")
+      assert(Caching.spreadToParallelism(df).rdd.getNumPartitions == width, s"$rows rows")
+      // under the call site's minBytes floor the scan keeps its one task
+      assert(Caching.spreadToParallelism(df, minBytes = bytes).rdd.getNumPartitions == 1)
+    }
+  }
+
   test("partition pruning: a type-partitioned layout scans only the selected partition") {
     val dir = Files.createTempDirectory("graft_part_").toFile.getAbsolutePath
     graft.queries.Tables.t(spark, sf("sf0.001"), "events")

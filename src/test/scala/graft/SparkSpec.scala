@@ -12,25 +12,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  // the production session contract (GraftSession installs GraftExtensions,
+  // so imperative ensureRegistered calls become no-ops here, and
+  // GraftExtensionsSpec proves the extension route alone resolves the
+  // functions in a fresh child session), pinned to 4 threads so plan
+  // shapes do not depend on the host
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // the production registration route (spark.sql.extensions=…);
-      // imperative ensureRegistered calls become no-ops on this session,
-      // and GraftExtensionsSpec proves the extension route alone resolves
-      // the functions in a fresh child session
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match the Verify/Bench runtime: RocksDB-backed streaming state
-      .config(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
+    val s = GraftSession.local(cpus = 4, shufflePartitions = 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -157,6 +157,22 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  test("interval join on a caller's HDFS-provider session returns the default session's rows") {
+    // join state format v3 is RocksDB-only: the drain must choose its own
+    // state store, not inherit the caller's
+    val src = sf("sf0.001") + "/events.parquet"
+    def pairs(s: org.apache.spark.sql.SparkSession) = EventStream
+      .intervalJoinRunOnce(s, src, lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds")
+      .select("purchase_id", "click_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val hdfs = spark.newSession()
+    hdfs.conf.set(
+      "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    val got = pairs(hdfs)
+    assert(got.nonEmpty)
+    assert(got == pairs(spark))
+  }
+
   test("stream-static enrichment joins each micro-batch against the dim without state") {
     // the standard streaming enrichment: a fact stream joined to a slowly
     // changing dim snapshot — stateless (no watermark needed), and the dim

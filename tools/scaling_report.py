@@ -5,8 +5,9 @@ against the data-size factor. Usage:
 
     python3 tools/scaling_report.py base.json scaled.json [factor]
 
-Each input file holds the one or two JSON lines Bench prints (the "total"
-line, and with SPARK_GRAFT_BENCH_METRICS=1 the "bytes" line)."""
+Each input file holds the JSON lines Bench records: the "total" line, and
+the "bytes" line (shuffle/spill accounting, always printed; sweep.py
+appends it to the record)."""
 import json
 import sys
 

@@ -66,7 +66,6 @@ def bench(scale, label, repeat=1):
         "SPARK_GRAFT_SHUFFLE_PARTITIONS": partitions,
         "SPARK_DRIVER_MEM": heap,
         "SPARK_GRAFT_BENCH_OUT": str(out),
-        "SPARK_GRAFT_BENCH_METRICS": "1",
     }
     t0 = time.time()
     main_cmd = "runMain graft.Bench" + (f" --repeat {repeat}" if repeat > 1 else "")
