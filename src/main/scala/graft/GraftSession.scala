@@ -12,9 +12,10 @@ import org.apache.spark.sql.SparkSession
   *    instants.
   *  - The Spark UI off.
   *  - The [[StateStoreConf]] state store.
-  *  - [[graft.functions.GraftExtensions]] installed, so the native
-  *    functions resolve from SQL too; the per-load `ensureRegistered`
-  *    calls stay for sessions the engine does not build.
+  *
+  * Nothing else: no extensions, no registered functions. The native
+  * expressions enter queries as Columns (`ExprBridge.column`), so a
+  * registered query runs on a session any caller builds.
   *
   * Building is idempotent (`getOrCreate`): a second call returns the live
   * session.
@@ -42,7 +43,6 @@ object GraftSession {
   def local(cpus: Int, shufflePartitions: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

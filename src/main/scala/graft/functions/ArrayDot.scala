@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -72,30 +70,4 @@ case class ArrayDot(left: Expression, right: Expression) extends BinaryExpressio
       newLeft: Expression,
       newRight: Expression
   ): Expression = copy(left = newLeft, right = newRight)
-}
-
-object ArrayDot {
-  val name = "graft_array_dot"
-
-  /** One builder for both registration routes ([[GraftExtensions]] and
-    * [[ensureRegistered]]) so they can never drift.
-    */
-  val builder: Seq[Expression] => Expression =
-    exprs => ArrayDot(exprs.head, exprs(1))
-
-  /** Idempotent per-session registration so `call_function(name, …)`
-    * resolves in harness-owned sessions built without
-    * `spark.sql.extensions=graft.functions.GraftExtensions`; sessions
-    * built with the extension already have the function.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier(name)
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[ArrayDot].getName, null, name),
-        builder
-      )
-    }
-  }
 }

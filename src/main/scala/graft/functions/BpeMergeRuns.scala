@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -87,35 +85,5 @@ object BpeMergeRuns {
       }
     }
     new GenericArrayData(out.toArray)
-  }
-
-  /** `call_function` builder — the pair arrives as string literals,
-    * consumed at plan build (the [[ShingleRuns]] discipline).
-    */
-  val builder: Seq[Expression] => Expression = exprs => {
-    if (exprs.length != 3) {
-      throw new IllegalArgumentException(
-        s"$name expects exactly 3 arguments (seq ARRAY<STRING>, left STRING literal, " +
-          s"right STRING literal), got ${exprs.length}")
-    }
-    def lit(e: Expression, what: String): String = e.eval(null) match {
-      case s: UTF8String => s.toString
-      case other         => throw new IllegalArgumentException(s"expected string literal for $what, got $other")
-    }
-    BpeMergeRuns(exprs.head, lit(exprs(1), "left"), lit(exprs(2), "right"))
-  }
-
-  /** Idempotent per-session registration (ArrayDot/ShingleRuns recipe;
-    * also wired through GraftExtensions).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier(name)
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[BpeMergeRuns].getName, null, name),
-        builder)
-    }
   }
 }

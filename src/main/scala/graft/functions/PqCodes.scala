@@ -85,8 +85,6 @@ case class PqCodes(
     31 * h + child.hashCode()
   }
 
-  private[graft] def nullSafeEvalPublic(value: Any): Any = nullSafeEval(value)
-
   override protected def nullSafeEval(value: Any): Any = {
     val v = value.asInstanceOf[ArrayData]
     val out = PqCodes.assign(
@@ -152,44 +150,6 @@ case class PqCodes(
 }
 
 object PqCodes {
-  val name = "graft_pq_codes"
-
-  /** Builder for the `call_function` route (the repo's Spark-4 pattern
-    * for native expressions): the codebook arrives as typed LITERAL
-    * arguments that are consumed HERE, at plan build — the resulting
-    * expression carries plain arrays as fields and the literals never
-    * reach generated code (the SrpBuckets discipline).
-    */
-  val builder: Seq[Expression] => Expression = exprs => {
-    import org.apache.spark.sql.catalyst.util.{ArrayData => AD}
-    def asInt(e: Expression): Int = e.eval(null) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other   => throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
-    val codes = exprs(2).eval(null).asInstanceOf[AD].toLongArray()
-    val cvsAd = exprs(3).eval(null).asInstanceOf[AD]
-    val cvs = Array.tabulate(cvsAd.numElements())(i =>
-      cvsAd.getArray(i).toDoubleArray())
-    val cnrms = exprs(4).eval(null).asInstanceOf[AD].toDoubleArray()
-    PqCodes(exprs.head, asInt(exprs(1)), codes, cvs, cnrms)
-  }
-
-  /** Idempotent per-session registration (internal plumbing for
-    * [[graft.ops.Similarity.pqEncodeFromRaw]]).
-    */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val id = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[PqCodes].getName, null, name),
-        builder
-      )
-    }
-  }
-
   /** Shared assignment kernel (interpreted path; the generated code above
     * mirrors it statement for statement — SrpBucketsSpec-style parity is
     * pinned in PqCodesSpec).

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -80,31 +78,5 @@ object ShingleRuns {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** `call_function` builder — width arrives as an int literal, consumed
-    * at plan build (the PqCodes discipline).
-    */
-  val builder: Seq[Expression] => Expression = exprs => {
-    val width = exprs(1).eval(null) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other   => throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
-    ShingleRuns(exprs.head, width)
-  }
-
-  /** Idempotent per-session registration (ArrayDot/SrpBuckets recipe;
-    * also wired through GraftExtensions).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier(name)
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[ShingleRuns].getName, null, name),
-        builder
-      )
-    }
   }
 }

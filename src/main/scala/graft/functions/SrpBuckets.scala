@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -99,31 +97,4 @@ case class SrpBuckets(child: Expression, planesPerTable: Int, tables: Int, dim: 
 
 object SrpBuckets {
   val name = "graft_srp_buckets"
-
-  /** One builder for both registration routes ([[GraftExtensions]] and
-    * [[ensureRegistered]]); `planes`/`tables`/`dim` arrive as literal
-    * int arguments so `call_function` can carry the config.
-    */
-  val builder: Seq[Expression] => Expression = exprs => {
-    def asInt(e: Expression): Int = e.eval(null) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other   => throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
-    SrpBuckets(exprs.head, asInt(exprs(1)), asInt(exprs(2)), asInt(exprs(3)))
-  }
-
-  /** Idempotent registration for harness-owned sessions built without
-    * `spark.sql.extensions=graft.functions.GraftExtensions`.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier(name)
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[SrpBuckets].getName, null, name),
-        builder
-      )
-    }
-  }
 }

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -82,32 +80,4 @@ object TokenRuns {
   @inline private def isTokenByte(b: Byte, alnumOnly: Boolean): Boolean =
     if (alnumOnly) (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
     else !(b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r')
-
-  /** `call_function` builder: the mode arrives as a boolean literal and
-    * is consumed at plan build (the PqCodes discipline — no literal in
-    * generated code, and the flag participates in case-class equality so
-    * the two modes never canonicalize together).
-    */
-  val builder: Seq[Expression] => Expression = exprs => {
-    val alnum = exprs(1).eval(null) match {
-      case b: Boolean => b
-      case other =>
-        throw new IllegalArgumentException(s"expected boolean literal, got $other")
-    }
-    TokenRuns(exprs.head, alnum)
-  }
-
-  /** Idempotent per-session registration (same recipe as ArrayDot /
-    * SrpBuckets / PqCodes; also wired through GraftExtensions).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val id = FunctionIdentifier(name)
-    if (!spark.sessionState.functionRegistry.functionExists(id)) {
-      spark.sessionState.functionRegistry.registerFunction(
-        id,
-        new ExpressionInfo(classOf[TokenRuns].getName, null, name),
-        builder
-      )
-    }
-  }
 }

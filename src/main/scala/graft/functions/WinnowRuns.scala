@@ -64,18 +64,6 @@ object WinnowRuns {
 
   private val Empty = new GenericArrayData(Array.empty[Any])
 
-  /** SQL-route builder (GraftExtensions): k and w arrive as int
-    * literals, consumed at plan build (the ShingleRuns discipline).
-    */
-  val builder: Seq[Expression] => Expression = exprs => {
-    def intLit(e: Expression): Int = e.eval(null) match {
-      case i: Int  => i
-      case l: Long => l.toInt
-      case other   => throw new IllegalArgumentException(s"expected int literal, got $other")
-    }
-    WinnowRuns(exprs.head, intLit(exprs(1)), intLit(exprs(2)))
-  }
-
   /** Shared kernel (interpreted and generated paths). */
   def run(s: UTF8String, k: Int, w: Int): ArrayData = {
     val bytes = s.getBytes

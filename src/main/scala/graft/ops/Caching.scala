@@ -114,9 +114,14 @@ private[graft] object Caching {
     * substrate materialized through [[eagerCheckpoint]] becomes a
     * RELIABLE checkpoint (written to that directory, recoverable across
     * executor loss) with identical values and plan shape (both roots are
-    * the materialized RDD). [[release]] stays correct in both modes: it
-    * unpersists whatever blocks back the frame; reliable checkpoint
-    * FILES are cleaned by the context like any checkpoint dir.
+    * the materialized RDD). The eager reliable checkpoint writes its
+    * files from the one job that computes the frame, so no persist is
+    * needed around it (CheckpointModeSpec counts the rows). [[release]]
+    * stays correct in both modes: it unpersists whatever blocks back the
+    * frame. Reliable checkpoint FILES outlive the frame: Spark deletes
+    * them only when `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * is true, which the engine does not set, so cleaning the directory
+    * is the caller's job.
     */
   def eagerCheckpoint(df: DataFrame): DataFrame = {
     val ss = df.sparkSession

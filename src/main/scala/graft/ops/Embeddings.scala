@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.functions.ArrayDot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -24,10 +23,9 @@ object Embeddings {
     * pass through unscaled with nrm 0.
     */
   def l2Normalize(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    ArrayDot.ensureRegistered(emb.sparkSession)
     emb
       .select(col(idCol).as("vec_id"), asDouble(col(vecCol)).as("v"))
-      .withColumn("nrm", sqrt(call_function(ArrayDot.name, col("v"), col("v"))))
+      .withColumn("nrm", sqrt(Similarity.fastDot(col("v"), col("v"))))
       .withColumn(
         "unit",
         when(col("nrm") > 0, transform(col("v"), x => x / col("nrm"))).otherwise(col("v")))

@@ -1,8 +1,9 @@
 package graft.ops
 
-import graft.functions.ArrayDot
+import graft.functions.{ArrayDot, PqCodes, SrpBuckets}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExprBridge
 
 /** Similarity search over an embedding column (SURVEY.md §2.11).
   *
@@ -52,10 +53,11 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (s, x) => s + x)
 
   /** Codegen'd dot product (ArrayDot) — bitwise-identical to `dot`, used
-    * on the pairwise hot paths. Requires ArrayDot.ensureRegistered on the
-    * session, which every entry point below performs.
+    * on the pairwise hot paths. The expression is built into the Column
+    * directly, so it needs no session setup.
     */
-  def fastDot(a: Column, b: Column): Column = call_function(ArrayDot.name, a, b)
+  def fastDot(a: Column, b: Column): Column =
+    ExprBridge.column(ArrayDot(ExprBridge.expression(a), ExprBridge.expression(b)))
 
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -63,9 +65,6 @@ object Similarity {
 
   private def asDouble(c: Column): Column = c.cast("array<double>")
 
-  /** (cid, v, nrm) projection shared by every entry point; registers the
-    * codegen dot expression on the session.
-    */
   /** The prepped corpus every similarity pipeline starts from:
     * `(cid, v: array<double>, nrm)`. Package-visible so a caller running
     * SEVERAL pipelines over the same corpus (the `ann_recall_at_k`
@@ -76,7 +75,6 @@ object Similarity {
     * pipeline's own build and every oracle replays unchanged.
     */
   private[graft] def prepBase(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    ArrayDot.ensureRegistered(emb.sparkSession)
     emb.select(col(idCol).as("cid"), asDouble(col(vecCol)).as("v"))
       .withColumn("nrm", sqrt(fastDot(col("v"), col("v"))))
   }
@@ -356,7 +354,6 @@ object Similarity {
       subDim: Int,
       nCodes: Int
   ): DataFrame = {
-    ArrayDot.ensureRegistered(emb.sparkSession)
     pqEncodeFromRaw(
       emb.select(col(idCol).cast("long").as("vid"), asDouble(col(vecCol)).as("v")),
       idCol, subspaces, subDim, nCodes)
@@ -450,13 +447,8 @@ object Similarity {
       }
       s += 1
     }
-    graft.functions.PqCodes.ensureRegistered(baseRaw.sparkSession)
-    val codesCol = call_function(
-      graft.functions.PqCodes.name,
-      col("v"), lit(subDim),
-      typedLit(codes.toSeq),
-      typedLit(cvs.map(_.toSeq).toSeq),
-      typedLit(cnrms.toSeq))
+    val codesCol =
+      ExprBridge.column(PqCodes(ExprBridge.expression(col("v")), subDim, codes, cvs, cnrms))
     (codesCol, codes)
   }
 
@@ -535,7 +527,6 @@ object Similarity {
       nCodes: Int,
       rerankK: Int = 0
   ): DataFrame = {
-    ArrayDot.ensureRegistered(emb.sparkSession)
     // ONE prepped corpus persisted for every stage (r21 scan audit: the
     // lazy form executed EIGHT parquet scans of the embedding corpus —
     // codebook slice, LUT queries, shortlist, exact re-rank sides each
@@ -1299,14 +1290,11 @@ object Similarity {
     // collisions. Verified pairs are unaffected either way (null cosine
     // can never clear the threshold); prepBase's fixtures carry no null
     // vectors, so the oracle replay claim stays exact.
-    graft.functions.SrpBuckets.ensureRegistered(base.sparkSession)
     base
       .select(
         col("cid"), col("v"), col("nrm"),
-        posexplode(
-          call_function(
-            graft.functions.SrpBuckets.name,
-            col("v"), lit(planesPerTable), lit(tables), lit(dim)))
+        posexplode(ExprBridge.column(
+          SrpBuckets(ExprBridge.expression(col("v")), planesPerTable, tables, dim)))
           .as(Seq("tbl", "bucket")))
   }
 

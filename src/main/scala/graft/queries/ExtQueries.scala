@@ -1000,12 +1000,11 @@ object ExtQueries {
     //      sums) that pin every element ----
     "emb_normalize" -> QueryDef(
       (s, d) => {
-        graft.functions.ArrayDot.ensureRegistered(s)
         graft.ops.Embeddings.l2Normalize(t(s, d, "embeddings"), "vec_id", "embedding")
           .select(
             col("vec_id"),
             col("nrm"),
-            call_function(graft.functions.ArrayDot.name, col("unit"), col("unit")).as("unit_ip"))
+            graft.ops.Similarity.fastDot(col("unit"), col("unit")).as("unit_ip"))
       },
       Some("""WITH b AS (
              |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,

@@ -62,11 +62,6 @@ object Tables {
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // every registered query loads through here, so this is the one
-    // choke point that guarantees the tokenizer expression resolves no
-    // matter which thread later analyzes the frame
-    graft.functions.TokenRuns.ensureRegistered(s)
-    graft.functions.ShingleRuns.ensureRegistered(s)
     val df = s.read.parquet(s"$dir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }

@@ -2,7 +2,6 @@ package graft.spec
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.types._
 
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -43,17 +42,6 @@ final case class ExportConfig(
 }
 
 object ExportConfig {
-
-  /** Allowed dtype vocabulary (`/root/reference/data_transform.py:37-44`)
-    * mapped to Spark types; see SURVEY.md §1.2 for the exact coercion
-    * semantics each implies.
-    */
-  val dtypeToSpark: Map[String, DataType] = Map(
-    "int64" -> LongType,
-    "float64" -> DoubleType,
-    "datetime64[ns]" -> TimestampType,
-    "string" -> StringType
-  )
 
   private val mapper: ObjectMapper = {
     val m = new ObjectMapper()

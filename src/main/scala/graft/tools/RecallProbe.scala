@@ -99,7 +99,6 @@ object RecallProbe {
       tables: Int,
       config: String
   ): SrpRecall = {
-    graft.functions.ArrayDot.ensureRegistered(emb.sparkSession)
     val corpus = Similarity.plantNearDups(emb, idCol, vecCol, every, idOffset, eps)
     val n = corpus.count()
     // true cosine of each planted (id, id+offset) pair, via one join.

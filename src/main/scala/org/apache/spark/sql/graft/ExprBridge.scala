@@ -5,13 +5,14 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Compile-checked access to the `private[sql]` Column↔Expression
-  * converters. Lets the library construct its native expressions
-  * (TokenRuns/ShingleRuns) directly into a Column instead of routing
-  * through `call_function`, which resolves by NAME in whatever session is
-  * active at ANALYSIS time — a Column built on a thread with no active
-  * session, analyzed in a session not covered by `Tables.t` or
-  * GraftExtensions, would fail with an unresolved function. Direct
-  * construction has no registry dependency at all.
+  * converters: the one way the engine puts its native expressions
+  * (`graft.functions.*`) into a query, as `column(X(expression(c), …))`.
+  * A Column built this way carries the expression itself, so it resolves
+  * in any session, on any thread, with nothing registered — a by-name
+  * function lookup would resolve in whatever session analyzes the frame
+  * and fail in one that never registered the name. Configuration
+  * (codebooks, plane counts, modes) travels as plain Scala fields of the
+  * expression, not as literals decoded again at analysis.
   */
 object ExprBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -32,6 +32,18 @@ class CheckpointModeSpec extends SparkSpec {
     assert(wrote > 0, "reliable checkpoint wrote no files")
   }
 
+  test("eagerCheckpoint: reliable mode computes the frame once") {
+    // the eager checkpoint writes its files from the one job that
+    // computes the frame, so no persist is needed around it
+    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-once").toString
+    val ss = spark.newSession()
+    ss.conf.set("spark.graft.checkpoint.dir", dir)
+    val rows = ss.sparkContext.longAccumulator("checkpointed rows")
+    val tick = udf { (id: Long) => rows.add(1L); id }
+    Caching.eagerCheckpoint(ss.range(0, 1000).select(tick(col("id")).as("id")))
+    assert(rows.value == 1000L)
+  }
+
   test("q_vocab_growth is identical in both checkpoint modes") {
     val fn = SparkEntry.queries("q_vocab_growth")
     val base = fn(spark, sf("sf0.001")).collect().map(_.toSeq).sortBy(_.head.toString)

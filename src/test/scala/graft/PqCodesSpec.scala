@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.PqCodes
+import graft.ops.Similarity.fastDot
 
 import org.apache.spark.sql.functions._
 
@@ -26,9 +27,6 @@ class PqCodesSpec extends SparkSpec {
   private def joinFormEncode: Map[(Long, Long), Long] = {
     val baseRaw = emb.select(col("vec_id").cast("long").as("vid"),
       col("embedding").cast("array<double>").as("v"))
-    graft.functions.ArrayDot.ensureRegistered(spark)
-    def fastDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function(graft.functions.ArrayDot.name, a, b)
     val subCols = (0 until subspaces).map { s =>
       struct(lit(s).as("s"), slice(col("v"), s * subDim + 1, subDim).as("sv"))
     }
@@ -148,7 +146,6 @@ class PqCodesSpec extends SparkSpec {
   }
 
   test("degenerate shapes: short vectors clamp like slice(); zero-norm tail ranks NaN first") {
-    PqCodes.ensureRegistered(spark)
     import spark.implicits._
     // dim 20 < 4 subspaces × 16: subspaces 2 and 3 have empty/short
     // slices → snrm 0 → sim NaN for every code → NaN-safe argmax keeps

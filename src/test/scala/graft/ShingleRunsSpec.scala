@@ -2,7 +2,9 @@ package graft
 
 import graft.functions.ShingleRuns
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExprBridge
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -13,6 +15,9 @@ import org.scalacheck.rng.Seed
   * paths.
   */
 class ShingleRunsSpec extends SparkSpec {
+
+  private def shingleRuns(ts: Column, n: Int): Column =
+    ExprBridge.column(ShingleRuns(ExprBridge.expression(ts), n))
 
   private def hofForm(ts: org.apache.spark.sql.Column, n: Int) = {
     val count = size(ts) - (n - 1)
@@ -30,12 +35,11 @@ class ShingleRunsSpec extends SparkSpec {
       1 -> Gen.oneOf("é", "日本", "x y")))
 
   private def compare(rows: Seq[Seq[String]], ns: Seq[Int]): Unit = {
-    ShingleRuns.ensureRegistered(spark)
     import spark.implicits._
     val df = rows.toDF("ts")
     ns.foreach { n =>
       val got = df.select(
-        call_function(ShingleRuns.name, col("ts"), lit(n)).as("x"),
+        shingleRuns(col("ts"), n).as("x"),
         hofForm(col("ts"), n).as("ref"))
         .collect()
       got.zip(rows).foreach { case (r, in) =>
@@ -53,11 +57,10 @@ class ShingleRunsSpec extends SparkSpec {
   }
 
   test("null tokens inside the array are skipped like concat_ws") {
-    ShingleRuns.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(Tuple1(Seq[String]("a", null, "c", "d"))).toDF("ts")
     val got = df.select(
-      call_function(ShingleRuns.name, col("ts"), lit(2)).as("x"),
+      shingleRuns(col("ts"), 2).as("x"),
       hofForm(col("ts"), 2).as("ref"))
       .collect().head
     assert(got.getSeq[String](0) == got.getSeq[String](1))
@@ -72,13 +75,12 @@ class ShingleRunsSpec extends SparkSpec {
   }
 
   test("interpreted eval equals generated code") {
-    ShingleRuns.ensureRegistered(spark)
     import spark.implicits._
     val rows = Seq(Seq("a", "b", "c", "d"), Seq.empty[String], Seq("x"))
     def run(mode: String): Seq[Seq[String]] = {
       spark.conf.set("spark.sql.codegen.factoryMode", mode)
       try rows.toDF("ts")
-        .select(call_function(ShingleRuns.name, col("ts"), lit(3)))
+        .select(shingleRuns(col("ts"), 3))
         .collect().map(_.getSeq[String](0)).toSeq
       finally spark.conf.unset("spark.sql.codegen.factoryMode")
     }
@@ -86,10 +88,9 @@ class ShingleRunsSpec extends SparkSpec {
   }
 
   test("null array propagates") {
-    ShingleRuns.ensureRegistered(spark)
     import spark.implicits._
     val r = Seq(Tuple1(null: Seq[String])).toDF("ts")
-      .select(call_function(ShingleRuns.name, col("ts"), lit(3)))
+      .select(shingleRuns(col("ts"), 3))
       .collect()
     assert(r.head.isNullAt(0))
   }

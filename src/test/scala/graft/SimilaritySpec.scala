@@ -11,11 +11,13 @@ class SimilaritySpec extends SparkSpec {
 
   test("dot/cosine: hand-checked values") {
     val df = Seq((Seq(1.0, 2.0), Seq(2.0, 3.0))).toDF("a", "b")
-    val (d, c) = df.select(
+    val (d, fd, c) = df.select(
       Similarity.dot(col("a"), col("b")),
+      Similarity.fastDot(col("a"), col("b")),
       Similarity.cosine(col("a"), col("b"))
-    ).as[(Double, Double)].collect().head
+    ).as[(Double, Double, Double)].collect().head
     assert(d == 8.0)
+    assert(fd == 8.0)
     assert(math.abs(c - 8.0 / (math.sqrt(5) * math.sqrt(13))) < 1e-12)
   }
 

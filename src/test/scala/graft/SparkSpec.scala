@@ -12,11 +12,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  // the production session contract (GraftSession installs GraftExtensions,
-  // so imperative ensureRegistered calls become no-ops here, and
-  // GraftExtensionsSpec proves the extension route alone resolves the
-  // functions in a fresh child session), pinned to 4 threads so plan
-  // shapes do not depend on the host
+  // the production session contract (GraftSession: UTC, UI off, RocksDB
+  // state, nothing registered — GraftSessionSpec runs queries on a fresh
+  // child session to pin that), pinned to 4 threads so plan shapes do not
+  // depend on the host
   lazy val session: SparkSession = {
     val s = GraftSession.local(cpus = 4, shufflePartitions = 4)
     s.sparkContext.setLogLevel("ERROR")

@@ -1,9 +1,11 @@
 package graft
 
-import graft.functions.{ArrayDot, SrpBuckets}
+import graft.functions.SrpBuckets
 import graft.ops.Similarity
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExprBridge
 
 /** Pins the [[SrpBuckets]] custom expression to the literal-column form
   * it replaced: same deterministic Rademacher planes (radSign), same
@@ -16,6 +18,9 @@ class SrpBucketsSpec extends SparkSpec {
   private val planes = 4
   private val tables = 12
   private val dim = 64
+
+  private def srpBuckets(v: Column): Column =
+    ExprBridge.column(SrpBuckets(ExprBridge.expression(v), planes, tables, dim))
 
   private def referenceBuckets(v: Array[Double]): Array[Long] =
     Array.tabulate(tables) { t =>
@@ -33,9 +38,8 @@ class SrpBucketsSpec extends SparkSpec {
   }
 
   test("expression output matches the per-plane literal-dot reference on real vectors") {
-    SrpBuckets.ensureRegistered(spark)
     val got = emb
-      .select(col("vec_id"), call_function(SrpBuckets.name, col("v"), lit(planes), lit(tables), lit(dim)).as("bks"))
+      .select(col("vec_id"), srpBuckets(col("v")).as("bks"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
       .toMap
@@ -47,8 +51,7 @@ class SrpBucketsSpec extends SparkSpec {
   }
 
   test("interpreted eval equals generated code (codegen on/off parity)") {
-    SrpBuckets.ensureRegistered(spark)
-    val expr = emb.select(call_function(SrpBuckets.name, col("v"), lit(planes), lit(tables), lit(dim)).as("bks"))
+    val expr = emb.select(srpBuckets(col("v")).as("bks"))
     val withCodegen = expr.collect().map(_.getSeq[Long](0).toArray)
     val prev = spark.conf.get("spark.sql.codegen.wholeStage")
     try {
@@ -60,14 +63,12 @@ class SrpBucketsSpec extends SparkSpec {
   }
 
   test("vectors shorter than dim fold only the shared prefix (ArrayDot min-length contract)") {
-    SrpBuckets.ensureRegistered(spark)
-    ArrayDot.ensureRegistered(spark)
     import spark.implicits._
     val short = Seq((1L, Array.fill(16)(0.5)), (2L, Array.fill(16)(-0.25)))
       .toDF("id", "raw")
       .select(col("id"), col("raw").cast("array<double>").as("v"))
     val got = short
-      .select(col("id"), call_function(SrpBuckets.name, col("v"), lit(planes), lit(tables), lit(dim)).as("bks"))
+      .select(col("id"), srpBuckets(col("v")).as("bks"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray)
       .toMap

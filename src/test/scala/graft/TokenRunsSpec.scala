@@ -2,7 +2,9 @@ package graft
 
 import graft.functions.TokenRuns
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExprBridge
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -20,6 +22,9 @@ import org.scalacheck.rng.Seed
   */
 class TokenRunsSpec extends SparkSpec {
 
+  private def tokenRuns(c: Column, alnumOnly: Boolean): Column =
+    ExprBridge.column(TokenRuns(ExprBridge.expression(c), alnumOnly))
+
   private def regexWs(c: org.apache.spark.sql.Column) =
     filter(split(trim(c), "\\s+"), t => t =!= "")
 
@@ -32,12 +37,11 @@ class TokenRunsSpec extends SparkSpec {
     Gen.listOf(Gen.frequency(3 -> tokenChars, 2 -> sepChars)).map(_.mkString)
 
   private def compare(inputs: Seq[String]): Unit = {
-    TokenRuns.ensureRegistered(spark)
     import spark.implicits._
     val df = inputs.toDF("s")
     val got = df.select(
-      call_function(TokenRuns.name, col("s"), lit(false)).as("ws"),
-      call_function(TokenRuns.name, lower(col("s")), lit(true)).as("alnum"),
+      tokenRuns(col("s"), alnumOnly = false).as("ws"),
+      tokenRuns(lower(col("s")), alnumOnly = true).as("alnum"),
       regexWs(col("s")).as("ws_ref"),
       regexAlnum(col("s")).as("alnum_ref"))
       .collect()
@@ -65,15 +69,14 @@ class TokenRunsSpec extends SparkSpec {
   }
 
   test("interpreted eval equals generated code (codegen on/off parity)") {
-    TokenRuns.ensureRegistered(spark)
     import spark.implicits._
     val inputs = Seq("  Hello,\tWorld!42  ", "naïve — 日本語7", "", "\n\n", "a1B2c3")
     def run(codegen: String): Seq[(Seq[String], Seq[String])] = {
       spark.conf.set("spark.sql.codegen.factoryMode", codegen)
       try inputs.toDF("s")
         .select(
-          call_function(TokenRuns.name, col("s"), lit(false)),
-          call_function(TokenRuns.name, lower(col("s")), lit(true)))
+          tokenRuns(col("s"), alnumOnly = false),
+          tokenRuns(lower(col("s")), alnumOnly = true))
         .collect()
         .map(r => (r.getSeq[String](0), r.getSeq[String](1)))
         .toSeq
@@ -83,14 +86,13 @@ class TokenRunsSpec extends SparkSpec {
   }
 
   test("null propagates; non-string input is rejected at analysis") {
-    TokenRuns.ensureRegistered(spark)
     import spark.implicits._
     val r = Seq[(java.lang.Long, String)]((1L, null)).toDF("id", "s")
-      .select(call_function(TokenRuns.name, col("s"), lit(true)))
+      .select(tokenRuns(col("s"), alnumOnly = true))
       .collect()
     assert(r.head.isNullAt(0))
     val e = intercept[Exception] {
-      Seq(1L).toDF("x").select(call_function(TokenRuns.name, col("x"), lit(true))).collect()
+      Seq(1L).toDF("x").select(tokenRuns(col("x"), alnumOnly = true)).collect()
     }
     assert(e.getMessage.contains("requires string") || e.getMessage.contains("DATATYPE_MISMATCH"))
   }
