@@ -1,31 +1,36 @@
 package graft
 
-import graft.queries.{CoreQueries, Ext2Queries, Ext3Queries, Ext4Queries, Ext5Queries, Ext6Queries, Ext7Queries, ExtQueries, QueryDef, SqlQueries}
+import graft.queries.{AnalyticsQueries, AnnQueries, CurationQueries, DedupQueries, EtlQueries, QueryDef, RelationalQueries, StreamingQueries, TextQueries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7).
   *
   * Every operator from SURVEY.md §2 (and the §2.11 extensions) is
-  * registered here; oracle-backed entries hash-match DuckDB on the same
-  * parquet tables, the rest carry rows-only checks plus ScalaTest specs.
+  * registered here, one `graft.queries` object per operator family;
+  * oracle-backed entries hash-match DuckDB on the same parquet tables,
+  * the rest carry rows-only checks plus ScalaTest specs.
   */
 object SparkEntry {
 
-  /** The single registry assembly — package-visible so SurveyDump (and
-    * any other tooling) enumerates EXACTLY what the driver sees. r18's
-    * SURVEY §8 staleness was SurveyDump holding its own copy of this
-    * concatenation and silently missing a new defs object; one list, no
-    * drift.
+  /** The single registry assembly: the family objects' `defs`, in
+    * family order — package-visible so SurveyDump (and any other
+    * tooling) enumerates EXACTLY what the driver sees. r18's SURVEY §8
+    * staleness was SurveyDump holding its own copy of this concatenation
+    * and silently missing a new defs object; one list, no drift. Names
+    * are unique across families (RegistrySpec pins it): `queries` and
+    * `oracleSql` are built with `.toMap`, which would keep only the last
+    * of two equal names.
     */
   private[graft] val all: Seq[(String, QueryDef)] =
-    CoreQueries.defs ++ SqlQueries.defs ++ ExtQueries.defs ++ Ext2Queries.defs ++ Ext3Queries.defs ++ Ext4Queries.defs ++ Ext5Queries.defs ++ Ext6Queries.defs ++ Ext7Queries.defs
+    EtlQueries.defs ++ RelationalQueries.defs ++ AnalyticsQueries.defs ++ StreamingQueries.defs ++
+      DedupQueries.defs ++ AnnQueries.defs ++ TextQueries.defs ++ CurationQueries.defs
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Exercises the whole spec→extract path: config-driven brand filter,
     * date range, broadcast meta-dimension join, grouped metric aggregation.
     */
   def entry(spark: SparkSession): DataFrame =
-    CoreQueries.analyticExec(spark, "/root/testdata/sf0.001")
+    EtlQueries.analyticExec(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

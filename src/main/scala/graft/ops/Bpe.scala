@@ -424,10 +424,7 @@ object Bpe {
       // spec seam: 0 forces the union+re-aggregate fallback on every
       // merge so both update paths are parity-tested against the naive
       // reference; production callers use the measured default
-      deltaBroadcastMax: Long = DeltaBroadcastMaxPairCount,
-      // diagnostics seam (BpeTrainProbe): called once per completed merge
-      // with (rank, pair, weighted count, iteration wall ms)
-      iterationProbe: (Int, String, Long, Long) => Unit = (_, _, _, _) => ()): (Seq[Merge], DataFrame) = {
+      deltaBroadcastMax: Long = DeltaBroadcastMaxPairCount): (Seq[Merge], DataFrame) = {
     val vocab = wordVocab(docs, textCol).persist(StorageLevel.MEMORY_AND_DISK)
     // live checkpoint generations superseded at the next seqs checkpoint
     val pendingSlices = ArrayBuffer.empty[DataFrame]
@@ -466,7 +463,6 @@ object Bpe {
       // partitions per merge and the rebase resets it.
       val parallelism = docs.sparkSession.sparkContext.defaultParallelism
       while (rank <= numMerges && !exhausted) {
-        val iterStart = System.nanoTime()
         val top = pc.orderBy(col("cnt").desc, col("pair").asc).limit(1).collect()
         if (top.isEmpty) {
           // every word fully merged into one symbol — nothing left to learn
@@ -540,7 +536,6 @@ object Bpe {
             seqs = rebased
             sinceCheckpoint = 0
           }
-          iterationProbe(rank, pair, cnt, (System.nanoTime() - iterStart) / 1000000L)
           rank += 1
         }
       }

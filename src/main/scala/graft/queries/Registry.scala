@@ -1,6 +1,10 @@
 package graft.queries
 
+import graft.util.JsonLog
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.control.NonFatal
 
 /** One registered operator: the Spark implementation plus (where
   * SQL-expressible) a DuckDB oracle that must hash-match it exactly.
@@ -109,5 +113,38 @@ object Tables {
         df
     }
     withTsUs(ranged)
+  }
+}
+
+/** Scratch space for queries that persist an artifact and read it back. */
+object Scratch {
+
+  /** Runs `body` on the directory `/tmp/graft-<name>/<applicationId>`
+    * (or its `sub` child) and deletes that directory when `body` returns
+    * or throws. The path is deterministic within a run and collision-free
+    * across concurrent processes. The value `body` returns must already
+    * be materialized: a lazy frame over the directory would lose its
+    * files to the delete. A `sub` directory's per-application parent is
+    * removed too once its last `sub` is gone.
+    *
+    * A failed cleanup is logged, never thrown: an exception escaping a
+    * `finally` replaces the primary failure, and a leaked scratch
+    * directory is the lesser defect (the next run's overwrite reclaims
+    * it). `NonFatal`, not just `IOException`, because Hadoop's
+    * LocalFileSystem wraps some failures in RuntimeExceptions.
+    */
+  def withDir[T](s: SparkSession, name: String, sub: String = "")(body: String => T): T = {
+    val appDir = new Path(s"/tmp/graft-$name/${s.sparkContext.applicationId}")
+    val dir = if (sub.isEmpty) appDir else new Path(appDir, sub)
+    try body(dir.toString)
+    finally {
+      try {
+        val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+        fs.delete(dir, true)
+        if (dir != appDir && fs.exists(appDir) && fs.listStatus(appDir).isEmpty) fs.delete(appDir, true)
+      } catch {
+        case NonFatal(e) => JsonLog.warning(s"scratch directory cleanup failed for $dir: $e")
+      }
+    }
   }
 }

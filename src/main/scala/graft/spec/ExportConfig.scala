@@ -50,13 +50,6 @@ object ExportConfig {
     m
   }
 
-  /** S3 analogue (`/root/reference/main.py:43-50`, `utils.py:94-125`):
-    * the reference fetches `lfm_configurations.json` from a GCS bucket as
-    * text; offline, the same document comes from a file path.
-    */
-  def loadFile(path: String): Seq[ExportConfig] =
-    parseAll(java.nio.file.Files.readString(java.nio.file.Paths.get(path)))
-
   /** Parse the whole configuration document (object keyed by config_id).
     * Driver-side, tiny — one of the two sanctioned driver materializations
     * (SURVEY.md §7.5.6).

@@ -40,8 +40,7 @@ object InternalPlanDump {
       ops.semanticDedupFromBase(base, k = kCells, threshold = 0.35))
 
     // ann_ivfpq_persisted's query half over a freshly built artifact
-    val dir = s"/tmp/graft-plandump-index/${spark.sparkContext.applicationId}"
-    try {
+    graft.queries.Scratch.withDir(spark, "plandump-index") { dir =>
       ops.buildIvfPqIndex(emb, "vec_id", "embedding",
         nClusters = 8, subspaces = 16, subDim = 4, nCodes = 64, dir)
       val pqRows = spark.read.parquet(s"$dir/pqbook")
@@ -55,10 +54,6 @@ object InternalPlanDump {
           k = 3, queryPred = col("cid") < 50, nProbe = 6,
           subspaces = 16, subDim = 4, nCodes = 64, effRerankK = 50,
           pqRows = Some(pqRows)))
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      catch { case scala.util.control.NonFatal(_) => () }
     }
     spark.stop()
   }

@@ -7,14 +7,14 @@ package graft.util
   * tiny driver-side emitter used by the pipeline for run events.
   */
 object JsonLog {
-  /** JSON string-body escaping for hand-built probe/log lines. Public:
-    * the probe mains (e.g. BpeTrainProbe) interpolate corpus-derived
-    * text (merge pairs routinely contain `"` or `\`) and must escape it
-    * the same way, or the notes pipeline's JSON-line parser breaks.
-    * Surrogates are \u-escaped so a lone surrogate (char-level BPE on
-    * supplementary-plane text) still yields parseable ASCII output.
+  /** JSON string-body escaping for the log lines below: a message can
+    * carry arbitrary text (exception messages, paths, corpus-derived
+    * values) with `"` or `\`, and an unescaped one breaks every JSON-line
+    * parser downstream. Surrogates are \u-escaped so a lone surrogate
+    * (char-level BPE on supplementary-plane text) still yields parseable
+    * ASCII output.
     */
-  def esc(s: String): String =
+  private def esc(s: String): String =
     s.flatMap {
       case '"'                     => "\\\""
       case '\\'                    => "\\\\"

@@ -1,10 +1,10 @@
 package graft
 
 import graft.ops.{Dedup, Similarity, TextOps}
-import graft.queries.{Ext4Queries, Tables}
+import graft.queries.Tables
 import org.apache.spark.sql.functions._
 
-/** Specs for the curation/packaging wave (Ext4Queries): Gopher quality
+/** Specs for the curation/packaging operators: Gopher quality
   * gate, MinHash Jaccard estimates, PQ encoding, shuffle-sharding, and
   * the corpus report.
   */
@@ -123,8 +123,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("q_shuffle_shard: balanced shards, dense in-shard positions, total preservation") {
-    val out = Ext4Queries.defs.toMap.apply("q_shuffle_shard")
-      .fn(spark, sf("sf0.001"))
+    val out = SparkEntry.queries("q_shuffle_shard")(spark, sf("sf0.001"))
       .as[(Long, Long, Long)].collect()
     val n = docs.count()
     assert(out.length == n)
@@ -140,7 +139,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("q_mixture_temperature: smallest source kept whole, rates monotone in size, deterministic") {
-    val fn = Ext4Queries.defs.toMap.apply("q_mixture_temperature").fn
+    val fn = SparkEntry.queries("q_mixture_temperature")
     val kept = fn(spark, sf("sf0.001")).as[(Long, String)].collect()
     val total = docs.groupBy("source").count().as[(String, Long)].collect().toMap
     val keptBySource = kept.groupBy(_._2).view.mapValues(_.length.toLong).toMap
@@ -219,7 +218,7 @@ class CurationOpsSpec extends SparkSpec {
   }
 
   test("q_corpus_report: totals reconcile with the raw table") {
-    val rep = Ext4Queries.defs.toMap.apply("q_corpus_report").fn(spark, sf("sf0.001")).collect()
+    val rep = SparkEntry.queries("q_corpus_report")(spark, sf("sf0.001")).collect()
     assert(rep.map(_.getAs[Long]("n_docs")).sum == docs.count())
     rep.foreach { r =>
       assert(r.getAs[Long]("n_distinct") <= r.getAs[Long]("n_docs"))

@@ -1,12 +1,12 @@
 package graft
 
-import graft.queries.Ext4Queries
+import graft.queries.{EtlQueries, Scratch}
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** The interchange round-trip contract behind `q_{jsonl,orc,csv}_roundtrip`:
-  * the CSV dialect pinned by [[Ext4Queries.csvRoundtripOptions]] must carry
+  * the CSV dialect pinned by `EtlQueries.csvWriteOptions`/`csvReadOptions` must carry
   * every CSV-hostile value shape losslessly (the registry gate's fixture
   * text is benign, so the adversarial shapes are pinned here), and the
   * roundtrip queries must clean their `/tmp/graft-roundtrip/<appId>`
@@ -33,9 +33,9 @@ class RoundtripSpec extends SparkSpec {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 3), schema)
     val dir = java.nio.file.Files.createTempDirectory("csvrt").toString
-    df.write.mode("overwrite").options(Ext4Queries.csvWriteOptions).csv(dir)
+    df.write.mode("overwrite").options(EtlQueries.csvWriteOptions).csv(dir)
     val back = spark.read.schema(schema)
-      .options(Ext4Queries.csvReadOptions).csv(dir)
+      .options(EtlQueries.csvReadOptions).csv(dir)
     val got = back.collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     val want = rows.map(r => r.getLong(0) -> Option(r.getString(1))).toMap
     assert(got === want)
@@ -48,7 +48,7 @@ class RoundtripSpec extends SparkSpec {
       spark.sparkContext.parallelize(Seq(Row(1L, null), Row(2L, "")), 1), schema)
     val dir = java.nio.file.Files.createTempDirectory("csvrt2")
     df.coalesce(1).write.mode("overwrite")
-      .options(Ext4Queries.csvWriteOptions).csv(dir.toString)
+      .options(EtlQueries.csvWriteOptions).csv(dir.toString)
     val part = java.nio.file.Files.list(dir).iterator()
     var lines = Seq.empty[String]
     while (part.hasNext) {
@@ -63,9 +63,22 @@ class RoundtripSpec extends SparkSpec {
   test("roundtrip queries clean their staging directory after materializing") {
     val root = new java.io.File(s"/tmp/graft-roundtrip/${spark.sparkContext.applicationId}")
     for (q <- Seq("q_jsonl_roundtrip", "q_orc_roundtrip", "q_csv_roundtrip")) {
-      val out = Ext4Queries.defs.toMap.apply(q).fn(spark, sf("sf0.001"))
+      val out = SparkEntry.queries(q)(spark, sf("sf0.001"))
       assert(out.count() > 0, s"$q returned no rows")
       assert(!root.exists(), s"$q left staging data under $root")
     }
+  }
+
+  test("Scratch.withDir deletes its directory and rethrows the body's own failure") {
+    var used = ""
+    val e = intercept[IllegalStateException] {
+      Scratch.withDir(spark, "test-scratch") { dir =>
+        used = dir
+        spark.range(3).write.parquet(dir)
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(used.nonEmpty && !new java.io.File(used).exists(), s"$used survived")
   }
 }
