@@ -29,18 +29,9 @@ object Verify {
         errors(name) = s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("")}$cause"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // a tab or CR in oracle SQL, left unescaped, would make the DuckDB
+    // compare's json.load fail and silently zero every correctness result
+    def q(s: String): String = "\"" + graft.util.JsonLog.esc(s) + "\""
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")

@@ -1,0 +1,89 @@
+package graft.auth
+
+import java.io.{IOException, OutputStream}
+import java.net.{HttpURLConnection, URI}
+import scala.io.Source
+
+/** The one outbound HTTP call both remote legs make — the paged extract
+  * ([[graft.sources.HttpPageClient]]) and the BigQuery load job
+  * ([[graft.load.HttpBigQueryLoadClient]]). It opens the connection, sets
+  * the timeouts and the `Authorization: Bearer` header from a
+  * [[CredentialProvider]], writes an optional body, and hands back the
+  * status with whichever body the server sent. Status policy (retry,
+  * exception types, messages) stays with each client.
+  */
+object BearerHttp {
+
+  /** A request body. `chunked` streams it (a length unknown up front,
+    * e.g. a frame's NDJSON); otherwise the connection buffers it and
+    * sends a Content-Length.
+    */
+  final case class Body(contentType: String, chunked: Boolean, write: OutputStream => Unit)
+
+  /** `body` is the response on a 200 and `error` the error stream's
+    * text otherwise (either may be empty). `aborted` is set when the
+    * server answered a non-200 status while the request body was still
+    * being written — it closed the stream without draining it, and the
+    * write died with a transport error.
+    */
+  final case class Response(code: Int, body: String, error: String, aborted: Option[IOException]) {
+    def unauthorized: Boolean = code == 401 || code == 403
+  }
+
+  /** The message for a 401/403 from `call`, with the one fix to name. */
+  def unauthorized(call: String, code: Int, where: String = ""): String =
+    s"$call unauthorized: HTTP $code$where — set GRAFT_AUTH_TOKEN / " +
+      "GRAFT_AUTH_TOKEN_FILE (or the graft.auth.token property) to a valid bearer token"
+
+  /** Transport failures (refused connection, timeout, reset) throw
+    * `IOException`; every status, including 4xx/5xx, returns.
+    */
+  def call(
+      url: String,
+      method: String,
+      creds: CredentialProvider,
+      readTimeoutMillis: Int,
+      body: Option[Body] = None
+  ): Response = {
+    val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
+    conn.setRequestMethod(method)
+    body.foreach { b =>
+      conn.setDoOutput(true)
+      if (b.chunked) conn.setChunkedStreamingMode(64 * 1024)
+      conn.setRequestProperty("Content-Type", b.contentType)
+    }
+    conn.setConnectTimeout(10000)
+    conn.setReadTimeout(readTimeoutMillis)
+    // the reference authenticates through LF client credentials and
+    // application-default credentials; both reduce to a bearer token on
+    // every request
+    creds.token().foreach(t => conn.setRequestProperty("Authorization", s"Bearer $t"))
+    try {
+      val aborted =
+        try {
+          body.foreach { b =>
+            val out = conn.getOutputStream
+            try b.write(out)
+            finally out.close()
+          }
+          None
+        } catch {
+          case e: IOException =>
+            // a server that rejects the request up front (bad
+            // credentials, oversized body) may close the stream before
+            // draining it; if a status is already readable, report THAT
+            // so the caller's actionable message is not masked
+            val early = scala.util.Try(conn.getResponseCode).getOrElse(-1)
+            if (early <= 0 || early == 200) throw e
+            Some(e)
+        }
+      val code = conn.getResponseCode
+      if (code == 200) Response(code, read(conn.getInputStream), "", aborted)
+      else Response(code, "", scala.util.Try(read(conn.getErrorStream)).getOrElse(""), aborted)
+    } finally conn.disconnect()
+  }
+
+  private def read(in: java.io.InputStream): String =
+    if (in == null) ""
+    else try Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+}

@@ -95,10 +95,12 @@ final class BigQuerySink(client: BigQueryLoadClient, datasetId: String) extends 
   }
 }
 
-/** [[TableSink]] over the offline parquet warehouse — what Verify/Bench
-  * and this sandbox's pipeline runs use. Same contract, enforced by
-  * [[Sink.writeParquetEvolving]] (union-schema evolution, type-change
-  * rejection, empty guard).
+/** [[TableSink]] over the offline parquet warehouse. Same contract,
+  * enforced by [[Sink.writeParquetEvolving]] (union-schema evolution,
+  * type-change rejection, empty guard). Nothing in the engine constructs
+  * it — `Pipeline.run` takes a `process` closure, and the callers that
+  * load to parquet call `Sink.writeParquetEvolving` directly;
+  * BigQuerySinkSpec pins it to the [[TableSink]] contract.
   */
 final class ParquetTableSink(spark: org.apache.spark.sql.SparkSession, root: String)
     extends TableSink {

@@ -1,12 +1,12 @@
 package graft.load
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.DataFrame
 
-import graft.auth.CredentialProvider
+import graft.auth.{BearerHttp, CredentialProvider}
 
-import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets.UTF_8
-import scala.io.Source
 import scala.util.control.NonFatal
 
 /** [[BigQueryLoadClient]] over the PUBLIC BigQuery REST v2 load-job wire
@@ -19,7 +19,8 @@ import scala.util.control.NonFatal
   * `com.sun.net.httpserver` stub; a deployment points `base` at the
   * real endpoint.
   *
-  * Wire contract (JDK-only on both ends):
+  * Wire contract (JDK HTTP on both ends; the JSON is built and read with
+  * the Jackson that ships with Spark):
   *  - `POST {base}/upload/bigquery/v2/projects/{project}/jobs?uploadType=multipart`
   *    — part 1 (`application/json`): the load-job configuration
   *    (destinationTable, writeDisposition, schemaUpdateOptions,
@@ -88,15 +89,20 @@ final class HttpBigQueryLoadClient(
     // dispositions/schema options/autodetect are byte-identical on the
     // wire whichever path carries the data
     def config(sourceUris: Seq[String]): String = {
-      val uris =
-        if (sourceUris.isEmpty) ""
-        else s""","sourceUris":[${sourceUris.map(u => "\"" + esc(u) + "\"").mkString(",")}]"""
-      s"""{"configuration":{"load":{
-         |"destinationTable":{"projectId":"${esc(proj)}","datasetId":"${esc(dataset)}","tableId":"${esc(table)}"},
-         |"writeDisposition":"$wireDisposition",
-         |"schemaUpdateOptions":[${schemaUpdateOptions.toSeq.sorted.map(o => "\"" + esc(o) + "\"").mkString(",")}],
-         |"sourceFormat":"NEWLINE_DELIMITED_JSON",
-         |"autodetect":true$uris}}}""".stripMargin.replace("\n", "")
+      val root = mapper.createObjectNode()
+      val load = root.putObject("configuration").putObject("load")
+      load.putObject("destinationTable")
+        .put("projectId", proj).put("datasetId", dataset).put("tableId", table)
+      load.put("writeDisposition", wireDisposition)
+      val opts = load.putArray("schemaUpdateOptions")
+      schemaUpdateOptions.toSeq.sorted.foreach(opts.add)
+      load.put("sourceFormat", "NEWLINE_DELIMITED_JSON")
+      load.put("autodetect", true)
+      if (sourceUris.nonEmpty) {
+        val uris = load.putArray("sourceUris")
+        sourceUris.foreach(uris.add)
+      }
+      mapper.writeValueAsString(root)
     }
     stagingRoot match {
       case None => awaitJob(insertWrapped(insertJob(config(Nil), df)))
@@ -145,90 +151,70 @@ final class HttpBigQueryLoadClient(
     * surface errorResult, return outputRows.
     */
   private def awaitJob(insertBody: String): Long = {
-    val jobId = extractIn(insertBody, "jobReference", "jobId").getOrElse(
+    var status = parse(insertBody, "jobs.insert")
+    val jobId = textAt(status, "jobReference", "jobId").getOrElse(
       throw new BigQuerySink.LoadJobException(s"no jobId in insert response: $insertBody"))
     // bounded wait: a server that never reaches DONE (or answers without
     // status.state) must surface, not spin — the reference's
     // load_job.result() at least raises on its retry deadline
     val deadline = System.nanoTime() + maxWaitMillis * 1000000L
-    var status = insertBody
-    while (!statusField(status, "state").contains("DONE")) {
+    def state = textAt(status, "status", "state")
+    while (!state.contains("DONE")) {
       if (System.nanoTime() > deadline)
         throw new BigQuerySink.LoadJobException(
           s"load job $jobId did not reach DONE within ${maxWaitMillis}ms " +
-            s"(last state: ${statusField(status, "state").getOrElse("<missing>")})")
+            s"(last state: ${state.getOrElse("<missing>")})")
       Thread.sleep(pollMillis)
-      status = get(s"$base/bigquery/v2/projects/$project/jobs/$jobId")
+      status = parse(get(s"$base/bigquery/v2/projects/$project/jobs/$jobId"), "jobs.get")
     }
-    val statusObj = subObject(status, "status").getOrElse("")
-    if (statusObj.contains("\"errorResult\"")) {
-      val msg = extract(statusObj.substring(statusObj.indexOf("\"errorResult\"")), "message")
-        .getOrElse("load job failed")
-      throw new BigQuerySink.LoadJobException(msg)
-    }
-    extractIn(status, "statistics", "outputRows").map(_.toLong).getOrElse(
+    val errorResult = status.path("status").path("errorResult")
+    if (errorResult.isObject)
+      throw new BigQuerySink.LoadJobException(textAt(errorResult, "message").getOrElse("load job failed"))
+    textAt(status, "statistics", "load", "outputRows").map(_.toLong).getOrElse(
       throw new BigQuerySink.LoadJobException(s"no outputRows in DONE job: $status"))
   }
 
-  private def statusField(body: String, key: String): Option[String] =
-    extractIn(body, "status", key)
-
   /** Multipart insert: config part + chunk-streamed NDJSON part. */
   private def insertJob(configJson: String, df: DataFrame): String = {
-    val url = s"$base/upload/bigquery/v2/projects/$project/jobs?uploadType=multipart"
     val boundary = s"graft-bq-${java.util.UUID.randomUUID()}"
-    val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("POST")
-    conn.setDoOutput(true)
-    conn.setChunkedStreamingMode(64 * 1024)
-    conn.setRequestProperty("Content-Type", s"multipart/related; boundary=$boundary")
-    conn.setConnectTimeout(10000)
-    conn.setReadTimeout(120000)
-    // the reference authenticates through application-default
-    // credentials; here the same wire behavior — a bearer token on every
-    // request — comes from the CredentialProvider seam
-    creds.token().foreach(t => conn.setRequestProperty("Authorization", s"Bearer $t"))
-    try {
-      try {
-        val out = conn.getOutputStream
-        try {
-          def w(s: String): Unit = out.write(s.getBytes(UTF_8))
-          w(s"--$boundary\r\nContent-Type: application/json; charset=UTF-8\r\n\r\n")
-          w(configJson)
-          w(s"\r\n--$boundary\r\nContent-Type: application/octet-stream\r\n\r\n")
-          val it = df.toJSON.toLocalIterator()
-          while (it.hasNext) { w(it.next()); w("\n") }
-          w(s"\r\n--$boundary--\r\n")
-        } finally out.close()
-      } catch {
-        case e: java.io.IOException =>
-          // a server that rejects the request up front (bad credentials,
-          // oversized body) may close the stream before draining it; the
-          // write then dies with an opaque transport IOException. If a
-          // response code is already readable, surface THAT — the
-          // actionable auth guidance must not be masked.
-          val early = scala.util.Try(conn.getResponseCode).getOrElse(-1)
-          if (early == 401 || early == 403)
-            throw new BigQuerySink.LoadJobException(
-              s"jobs.insert unauthorized: HTTP $early — set GRAFT_AUTH_TOKEN / " +
-                "GRAFT_AUTH_TOKEN_FILE (or the graft.auth.token property) to a valid bearer token")
-          if (early > 0 && early != 200)
-            throw new BigQuerySink.LoadJobException(
-              s"jobs.insert failed: HTTP $early${errorDetail(conn)} (body stream aborted: $e)")
-          throw e
-      }
-      val code = conn.getResponseCode
-      if (code == 401 || code == 403)
-        throw new BigQuerySink.LoadJobException(
-          s"jobs.insert unauthorized: HTTP $code — set GRAFT_AUTH_TOKEN / " +
-            "GRAFT_AUTH_TOKEN_FILE (or the graft.auth.token property) to a valid bearer token")
-      if (code != 200)
-        throw new BigQuerySink.LoadJobException(
-          s"jobs.insert failed: HTTP $code${errorDetail(conn)}")
-      val in = conn.getInputStream
-      try Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    } finally conn.disconnect()
+    insert(
+      s"$base/upload/bigquery/v2/projects/$project/jobs?uploadType=multipart",
+      BearerHttp.Body(s"multipart/related; boundary=$boundary", chunked = true, out => {
+        def w(s: String): Unit = out.write(s.getBytes(UTF_8))
+        w(s"--$boundary\r\nContent-Type: application/json; charset=UTF-8\r\n\r\n")
+        w(configJson)
+        w(s"\r\n--$boundary\r\nContent-Type: application/octet-stream\r\n\r\n")
+        val it = df.toJSON.toLocalIterator()
+        while (it.hasNext) { w(it.next()); w("\n") }
+        w(s"\r\n--$boundary--\r\n")
+      }))
+  }
+
+  /** Staged insert: plain-JSON `jobs.insert` — the config (with
+    * `sourceUris`) IS the body; no data part.
+    */
+  private def insertJobStaged(configJson: String): String =
+    insert(
+      s"$base/bigquery/v2/projects/$project/jobs",
+      BearerHttp.Body("application/json; charset=UTF-8", chunked = false,
+        _.write(configJson.getBytes(UTF_8))))
+
+  /** Both `jobs.insert` shapes' status handling. A non-200 carries the
+    * server's `error.message` (e.g. a malformed load config) — reporting
+    * only the status code would discard the actionable reason — and an
+    * answer that arrived while the body was still streaming says so.
+    */
+  private def insert(url: String, body: BearerHttp.Body): String = {
+    val r = BearerHttp.call(url, "POST", creds, readTimeoutMillis = 120000, body = Some(body))
+    if (r.unauthorized)
+      throw new BigQuerySink.LoadJobException(BearerHttp.unauthorized("jobs.insert", r.code))
+    if (r.code != 200) {
+      val detail = scala.util.Try(mapper.readTree(r.error)).toOption
+        .flatMap(textAt(_, "error", "message")).fold("")(m => s": $m")
+      throw new BigQuerySink.LoadJobException(
+        s"jobs.insert failed: HTTP ${r.code}$detail" + r.aborted.fold("")(e => s" (body stream aborted: $e)"))
+    }
+    r.body
   }
 
   /** Distributed NDJSON staging: executors write one shard per
@@ -261,164 +247,41 @@ final class HttpBigQueryLoadClient(
       p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
     }
 
-  /** Staged insert: plain-JSON `jobs.insert` — the config (with
-    * `sourceUris`) IS the body; no data part.
-    */
-  private def insertJobStaged(configJson: String): String = {
-    val url = s"$base/bigquery/v2/projects/$project/jobs"
-    val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("POST")
-    conn.setDoOutput(true)
-    conn.setRequestProperty("Content-Type", "application/json; charset=UTF-8")
-    conn.setConnectTimeout(10000)
-    conn.setReadTimeout(120000)
-    creds.token().foreach(t => conn.setRequestProperty("Authorization", s"Bearer $t"))
-    try {
-      val out = conn.getOutputStream
-      try out.write(configJson.getBytes(UTF_8))
-      finally out.close()
-      val code = conn.getResponseCode
-      if (code == 401 || code == 403)
-        throw new BigQuerySink.LoadJobException(
-          s"jobs.insert unauthorized: HTTP $code — set GRAFT_AUTH_TOKEN / " +
-            "GRAFT_AUTH_TOKEN_FILE (or the graft.auth.token property) to a valid bearer token")
-      if (code != 200)
-        throw new BigQuerySink.LoadJobException(
-          s"jobs.insert failed: HTTP $code${errorDetail(conn)}")
-      val in = conn.getInputStream
-      try Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    } finally conn.disconnect()
-  }
-
-  /** Best-effort `: <error.message>` suffix from the server's error body
-    * (`getErrorStream`) — a non-200 jobs.insert carries the actionable
-    * reason there (e.g. a malformed load config), and reporting only the
-    * status code discards it. Never throws: a closed/absent error stream
-    * yields an empty suffix.
-    */
-  private def errorDetail(conn: HttpURLConnection): String =
-    scala.util.Try {
-      val es = conn.getErrorStream
-      if (es == null) ""
-      else {
-        val body = try Source.fromInputStream(es, "UTF-8").mkString finally es.close()
-        extractIn(body, "error", "message").fold("")(m => s": $m")
-      }
-    }.getOrElse("")
-
   private def get(url: String): String = {
-    val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("GET")
-    conn.setConnectTimeout(10000)
-    conn.setReadTimeout(60000)
-    creds.token().foreach(t => conn.setRequestProperty("Authorization", s"Bearer $t"))
-    try {
-      val code = conn.getResponseCode
-      if (code == 401 || code == 403)
-        throw new BigQuerySink.LoadJobException(
-          s"jobs.get unauthorized: HTTP $code for $url — set GRAFT_AUTH_TOKEN / " +
-            "GRAFT_AUTH_TOKEN_FILE (or the graft.auth.token property) to a valid bearer token")
-      if (code != 200)
-        throw new BigQuerySink.LoadJobException(s"jobs.get failed: HTTP $code for $url")
-      val in = conn.getInputStream
-      try Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    } catch {
-      case e: java.io.IOException =>
-        throw new BigQuerySink.LoadJobException(s"jobs.get failed: $e")
-    } finally conn.disconnect()
+    val r =
+      try BearerHttp.call(url, "GET", creds, readTimeoutMillis = 60000)
+      catch {
+        case e: java.io.IOException =>
+          throw new BigQuerySink.LoadJobException(s"jobs.get failed: $e")
+      }
+    if (r.unauthorized)
+      throw new BigQuerySink.LoadJobException(BearerHttp.unauthorized("jobs.get", r.code, s" for $url"))
+    if (r.code != 200)
+      throw new BigQuerySink.LoadJobException(s"jobs.get failed: HTTP ${r.code} for $url")
+    r.body
   }
 }
 
 object HttpBigQueryLoadClient {
 
-  /** The balanced-brace subobject after a TOP-LEVEL `"key": {` — scopes
-    * the field scans below to the subobject that actually owns the
-    * field, so a real v2 response nesting extra objects (an errorResult
-    * whose message quotes 'state', status.errors[] carrying its own
-    * 'message') cannot shadow the field being read. The anchor scan is
-    * string-context-aware AND depth-anchored: a string VALUE containing
-    * e.g. `"status": {`, or a nested object reusing the key, cannot
-    * mis-scope the walk. String contents are likewise skipped during
-    * brace counting.
+  private val mapper = new ObjectMapper
+
+  /** A response body as a JSON tree; a body that does not parse is a
+    * [[BigQuerySink.LoadJobException]] naming the call that returned it.
     */
-  private[graft] def subObject(body: String, key: String): Option[String] = {
-    val quoted = "\"" + key + "\""
-    // pass 1: find `"key"\s*:\s*{` at object depth 1, outside strings
-    var i = 0
-    var depth = 0
-    var inString = false
-    var escaped = false
-    var start = -1
-    while (i < body.length && start < 0) {
-      val c = body.charAt(i)
-      if (inString) {
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == '"') inString = false
-        i += 1
-      } else if (c == '"') {
-        if (depth == 1 && body.startsWith(quoted, i)) {
-          var j = i + quoted.length
-          while (j < body.length && body.charAt(j).isWhitespace) j += 1
-          if (j < body.length && body.charAt(j) == ':') {
-            j += 1
-            while (j < body.length && body.charAt(j).isWhitespace) j += 1
-            if (j < body.length && body.charAt(j) == '{') start = j
-          }
-        }
-        if (start < 0) { inString = true; i += 1 }
-      } else {
-        if (c == '{') depth += 1 else if (c == '}') depth -= 1
-        i += 1
-      }
+  private[graft] def parse(body: String, call: String): JsonNode =
+    try mapper.readTree(body)
+    catch {
+      case e: JsonProcessingException =>
+        throw new BigQuerySink.LoadJobException(s"$call returned a body that is not JSON: ${e.getOriginalMessage}")
     }
-    if (start < 0) return None
-    // pass 2: balanced-brace walk from the anchor
-    i = start
-    depth = 0
-    inString = false
-    escaped = false
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (inString) {
-        if (escaped) escaped = false
-        else if (c == '\\') escaped = true
-        else if (c == '"') inString = false
-      } else c match {
-        case '"' => inString = true
-        case '{' => depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) return Some(body.substring(start, i + 1))
-        case _ =>
-      }
-      i += 1
-    }
-    None
-  }
 
-  /** `extract` scoped to the named subobject — `extractIn(body,
-    * "status", "state")` reads status.state and nothing else.
+  /** The scalar at `path` below `node` as text (`textAt(job, "status",
+    * "state")` reads status.state and nothing else); None when any step
+    * is absent or the value is an object/array.
     */
-  private[graft] def extractIn(body: String, obj: String, key: String): Option[String] =
-    subObject(body, obj).flatMap(extract(_, key))
-
-  /** First value of `"key": "v"` / `"key": v` in a JSON body — the few
-    * fields this client reads (jobId, state, outputRows, message) are
-    * flat strings/numbers, so a field scan over the pre-scoped
-    * subobject (see [[extractIn]]) suffices — no JSON lib in the
-    * sandbox's dependency budget.
-    */
-  private[load] def extract(body: String, key: String): Option[String] = {
-    val k = java.util.regex.Pattern.quote(key)
-    ("\"" + k + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(body).map(_.group(1))
-      .orElse(("\"" + k + "\"\\s*:\\s*([^,}\\s\"]+)").r
-        .findFirstMatchIn(body).map(_.group(1)))
+  private[graft] def textAt(node: JsonNode, path: String*): Option[String] = {
+    val n = path.foldLeft(node)(_.path(_))
+    if (n.isValueNode) Some(n.asText) else None
   }
-
-  private[load] def esc(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
 }

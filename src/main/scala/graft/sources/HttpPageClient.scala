@@ -1,12 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.auth.CredentialProvider
+import graft.auth.{BearerHttp, CredentialProvider}
 
-import java.net.{HttpURLConnection, URI, URLDecoder, URLEncoder}
+import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
-import scala.io.Source
 
 /** The HTTP seam behind [[PagedSource]] (VERDICT r10 #4): the reference's
   * actual I/O is a paged HTTP analytic query
@@ -60,12 +60,46 @@ final class HttpPageClient(
     if (body.isEmpty) Iterator.empty else body.linesIterator
   }
 
+  /** One page of [[PagedSource.page]] over the wire: the pushed query
+    * shape rides the request, and the CSV lines come back parsed by the
+    * read schema's data types into the same typed values. The server
+    * already evaluated filters/projection/cap; nothing is re-filtered
+    * here, which is the point of the pushdown contract. A zero-column
+    * read gets one empty row per line.
+    */
+  def page(p: PagePartition, q: PageQuery): Iterator[Seq[Any]] = {
+    val shape = q.agg match {
+      case None =>
+        Seq("cols" -> q.required.fieldNames.mkString(",")) ++ q.limit.map(l => "limit" -> l.toString)
+      case Some(a) =>
+        Seq("groupBy" -> a.groupCols.mkString(","), "aggs" -> HttpPageClient.encodeAggSpecs(a.aggs).mkString(","))
+    }
+    val types = q.readSchema.fields.map(_.dataType).toSeq
+    fetchLines(
+      Seq("page" -> p.page.toString, "pageSize" -> p.pageSize.toString) ++
+        HttpPageClient.encodeFilters(q.filters).map("filter" -> _) ++ shape
+    ).map { line =>
+      types.zip(line.split(",", -1)).map {
+        case (LongType, s)   => java.lang.Long.parseLong(s): Any
+        case (DoubleType, s) => java.lang.Double.parseDouble(s): Any
+        case (_, s)          => s
+      }
+    }
+  }
+
   private def get(url: String): String = {
     var attempt = 0
     while (true) {
       attempt += 1
-      try return getOnce(url)
-      catch {
+      try {
+        val r = BearerHttp.call(url, "GET", creds, readTimeoutMillis = 60000)
+        if (r.code >= 500)
+          throw new RetryableFetchException(s"page fetch failed: HTTP ${r.code} for $url")
+        if (r.unauthorized)
+          throw new IllegalStateException(BearerHttp.unauthorized("page fetch", r.code, s" for $url"))
+        require(r.code == 200, s"page fetch failed: HTTP ${r.code} for $url")
+        return r.body
+      } catch {
         case e @ (_: RetryableFetchException | _: java.io.IOException) =>
           if (attempt > maxRetries) throw e match {
             case r: RetryableFetchException =>
@@ -76,27 +110,6 @@ final class HttpPageClient(
       }
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  private def getOnce(url: String): String = {
-    val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("GET")
-    conn.setConnectTimeout(10000)
-    conn.setReadTimeout(60000)
-    creds.token().foreach(t => conn.setRequestProperty("Authorization", s"Bearer $t"))
-    try {
-      val code = conn.getResponseCode
-      if (code >= 500)
-        throw new RetryableFetchException(s"page fetch failed: HTTP $code for $url")
-      if (code == 401 || code == 403)
-        throw new IllegalStateException(
-          s"page fetch unauthorized: HTTP $code for $url — set GRAFT_AUTH_TOKEN / " +
-            "GRAFT_AUTH_TOKEN_FILE (or the graft.auth.token property) to a valid bearer token")
-      require(code == 200, s"page fetch failed: HTTP $code for $url")
-      val in = conn.getInputStream
-      try Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    } finally conn.disconnect()
   }
 }
 

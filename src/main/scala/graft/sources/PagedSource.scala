@@ -24,9 +24,9 @@ import scala.jdk.CollectionConverters._
   *   token, no driver-side concat, no memory cliff.
   * - **SupportsPushDownFilters** (the reference pushes its brand IN-list
   *   and date range into the API query): pushed filters are evaluated
-  *   inside the partition reader — standing in for the server-side
-  *   evaluation — and reported back so Catalyst drops the residual Filter
-  *   node.
+  *   by the page server ([[PagedSource.page]] in generator mode, the HTTP
+  *   server otherwise) and reported back so Catalyst drops the residual
+  *   Filter node.
   * - **SupportsPushDownRequiredColumns**: column pruning reaches the
   *   source (the reference requests exactly metrics ∪ dims, P1).
   *
@@ -79,8 +79,8 @@ object PagedSource {
     (brand, f"2024-01-$day%02d", metric)
   }
 
-  /** Server-side filter evaluation shared by the in-memory generator, the
-    * partial-agg reader, and the loopback HTTP stub server — ONE
+  /** Server-side filter evaluation shared by the in-memory generator
+    * ([[page]]) and the loopback HTTP stub servers — ONE
     * definition of what a pushed filter means, so claiming a filter in
     * `pushFilters` can never drift from how it is evaluated.
     */
@@ -99,6 +99,53 @@ object PagedSource {
     case In("date_str", vs)                => vs.exists(_.toString == r._2)
     case IsNotNull(_)                      => true
     case _                                 => true
+  }
+
+  /** What one page returns, as typed values (Long, String, Double): the
+    * rows of `[page·pageSize, +pageSize)` that pass [[accept]], projected
+    * to the pruned columns and capped at the pushed limit — or, when an
+    * aggregation is pushed, the page's per-group partial count/sum/min/max
+    * in [[PushedAgg.outputSchema]] order (the server-side group-by; Spark's
+    * final aggregate merges across pages, so cross-page groups stay
+    * correct). Generator mode serves this in-process; HTTP mode gets the
+    * same values from the server ([[HttpPageClient.page]]).
+    */
+  def page(p: PagePartition, q: PageQuery): Iterator[Seq[Any]] = {
+    val start = p.page.toLong * p.pageSize
+    val end = math.min(start + p.pageSize, p.totalRows)
+    val rows = (start until end).iterator.map(row).filter(accept(q.filters, _))
+    def value(r: (Long, String, Double), c: String): Any = c match {
+      case "brand_id" => r._1
+      case "date_str" => r._2
+      case "metric"   => r._3
+    }
+    q.agg match {
+      case None =>
+        val cols = q.required.fieldNames.toSeq
+        // a partition never needs more than `limit` matching rows for a
+        // global limit — stop generating early (the paged API stops
+        // fetching)
+        q.limit.fold(rows)(rows.take).map(r => cols.map(value(r, _)))
+      case Some(a) =>
+        // (count, sum, min, max) of the metric per group, insertion-ordered;
+        // group state per page is bounded by the page's distinct groups
+        val acc = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], (Long, Double, Double, Double)]
+        rows.foreach { r =>
+          val key = a.groupCols.map(value(r, _))
+          val (c, s, mn, mx) =
+            acc.getOrElse(key, (0L, 0.0, Double.PositiveInfinity, Double.NegativeInfinity))
+          acc(key) = (c + 1, s + r._3, math.min(mn, r._3), math.max(mx, r._3))
+        }
+        acc.iterator.map { case (key, (c, s, mn, mx)) =>
+          key ++ a.aggs.map {
+            case _: CountStar | _: Count => c: Any
+            case _: Sum                  => s: Any
+            case _: Min                  => mn: Any
+            case _: Max                  => mx: Any
+            case f                       => throw new IllegalStateException(s"unsupported pushed agg $f")
+          }
+        }
+    }
   }
 }
 
@@ -145,6 +192,19 @@ final case class PushedAgg(groupCols: Seq[String], aggs: Seq[AggregateFunc]) {
     }
     StructType(groupFields ++ aggFields)
   }
+}
+
+/** The query shape a scan pushes into every page: filters, pruned
+  * columns, per-partition row cap, and an optional partial aggregation.
+  * It travels with the plan to the readers.
+  */
+final case class PageQuery(
+    filters: Seq[Filter],
+    required: StructType,
+    limit: Option[Int],
+    agg: Option[PushedAgg]
+) {
+  def readSchema: StructType = agg.fold(required)(_.outputSchema)
 }
 
 final class PagedScanBuilder(
@@ -212,7 +272,7 @@ final class PagedScanBuilder(
     * brand key, comparisons on the date string — P2/P3); anything else is
     * left for Spark to evaluate as a residual. Claiming a filter the
     * reader does not evaluate would silently return wrong results, so the
-    * column allow-list must match PagedReader.accept exactly.
+    * column allow-list must match [[PagedSource.accept]] exactly.
     */
   private val pushableColumns = Set("brand_id", "date_str")
 
@@ -237,27 +297,24 @@ final class PagedScanBuilder(
     required = requiredSchema
 
   override def build(): Scan =
-    new PagedScan(totalRows, pageSize, pushed, required, limit, agg, endpoint, tokenFile)
+    new PagedScan(totalRows, pageSize, PageQuery(pushed.toSeq, required, limit, agg), endpoint, tokenFile)
 }
 
 final class PagedScan(
     totalRows: Long,
     pageSize: Int,
-    filters: Array[Filter],
-    required: StructType,
-    limit: Option[Int],
-    agg: Option[PushedAgg],
+    q: PageQuery,
     endpoint: Option[String] = None,
     tokenFile: Option[String] = None
 ) extends Scan with Batch {
-  override def readSchema(): StructType = agg.fold(required)(_.outputSchema)
+  override def readSchema(): StructType = q.readSchema
   override def toBatch: Batch = this
 
   override def description(): String =
-    s"graft_paged_source PushedFilters: [${filters.mkString(", ")}], " +
+    s"graft_paged_source PushedFilters: [${q.filters.mkString(", ")}], " +
       s"ReadSchema: ${readSchema().catalogString}" +
-      limit.fold("")(l => s", PushedLimit: $l") +
-      agg.fold("")(a =>
+      q.limit.fold("")(l => s", PushedLimit: $l") +
+      q.agg.fold("")(a =>
         s", PushedAggregation: [groupBy=${a.groupCols.mkString(",")}; ${a.aggs.mkString(", ")}]")
 
   /** One InputPartition per page — the S2 pagination model. A pushed limit
@@ -273,8 +330,8 @@ final class PagedScan(
     val total =
       endpoint.fold(totalRows)(e => new HttpPageClient(e, PagedSource.creds(tokenFile)).totalRows())
     val nPages = ((total + pageSize - 1) / pageSize).toInt
-    val planned = limit match {
-      case Some(l) if filters.isEmpty && agg.isEmpty =>
+    val planned = q.limit match {
+      case Some(l) if q.filters.isEmpty && q.agg.isEmpty =>
         math.min(nPages.toLong, (l.toLong + pageSize - 1) / pageSize).toInt
       case _ => nPages
     }
@@ -282,220 +339,38 @@ final class PagedScan(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PagedReaderFactory(filters, required, limit, agg, endpoint, tokenFile)
+    new PagedReaderFactory(q, endpoint, tokenFile)
 }
 
 final case class PagePartition(page: Int, pageSize: Int, totalRows: Long) extends InputPartition
 
-final class PagedReaderFactory(
-    filters: Array[Filter],
-    required: StructType,
-    limit: Option[Int],
-    agg: Option[PushedAgg],
-    endpoint: Option[String] = None,
-    tokenFile: Option[String] = None
-) extends PartitionReaderFactory {
+/** Picks where a page's rows come from — the in-process generator or the
+  * HTTP server; either way one [[PagedReader]] turns them into rows.
+  */
+final class PagedReaderFactory(q: PageQuery, endpoint: Option[String], tokenFile: Option[String])
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PagePartition]
-    (endpoint, agg) match {
-      case (Some(e), Some(a)) => new HttpPagedAggReader(p, filters, a, e, tokenFile)
-      case (Some(e), None)    => new HttpPagedReader(p, filters, required, limit, e, tokenFile)
-      case (None, Some(a))    => new PagedAggReader(p, filters, a)
-      case (None, None)       => new PagedReader(p, filters, required, limit)
-    }
+    new PagedReader(endpoint.fold(PagedSource.page(p, q))(e =>
+      new HttpPageClient(e, PagedSource.creds(tokenFile)).page(p, q)))
   }
 }
 
-/** Per-page partial aggregation — the "server" computes the group-by and
-  * pages back aggregated rows; Spark's final aggregate merges across
-  * pages. Group state per page is bounded by the page's distinct groups.
-  */
-final class PagedAggReader(p: PagePartition, filters: Array[Filter], agg: PushedAgg)
-    extends PartitionReader[InternalRow] {
-
-  private val it: Iterator[InternalRow] = {
-    val start = p.page.toLong * p.pageSize
-    val end = math.min(start + p.pageSize, p.totalRows)
-    val raw = new PagedReader(p, filters, PagedSource.schema, None)
-    // (count, sum, min, max) per agg slot, keyed by the group tuple
-    val acc = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Array[(Long, Double, Double, Double)]]
-    var i = start - 1
-    while (i + 1 < end) {
-      i += 1
-      val r = PagedSource.row(i)
-      if (raw.acceptRow(r)) {
-        val key: Seq[Any] = agg.groupCols.map {
-          case "brand_id" => r._1
-          case "date_str" => r._2
-        }
-        val slots = acc.getOrElseUpdate(
-          key,
-          Array.fill(agg.aggs.size)((0L, 0.0, Double.PositiveInfinity, Double.NegativeInfinity)))
-        var j = 0
-        while (j < slots.length) {
-          val (c, s, mn, mx) = slots(j)
-          slots(j) = (c + 1, s + r._3, math.min(mn, r._3), math.max(mx, r._3))
-          j += 1
-        }
-      }
-    }
-    acc.iterator.map { case (key, slots) =>
-      val groupVals = key.map {
-        case s: String => UTF8String.fromString(s).asInstanceOf[Any]
-        case other     => other
-      }
-      val aggVals = agg.aggs.zip(slots).map {
-        case (_: CountStar, (c, _, _, _)) => c.asInstanceOf[Any]
-        case (_: Count, (c, _, _, _))     => c.asInstanceOf[Any]
-        case (_: Sum, (_, s, _, _))       => s.asInstanceOf[Any]
-        case (_: Min, (_, _, mn, _))      => mn.asInstanceOf[Any]
-        case (_: Max, (_, _, _, mx))      => mx.asInstanceOf[Any]
-        case (f, _)                       => throw new IllegalStateException(s"unsupported $f")
-      }
-      InternalRow.fromSeq(groupVals ++ aggVals)
-    }
-  }
-
-  private var current: InternalRow = _
-  override def next(): Boolean = { if (it.hasNext) { current = it.next(); true } else false }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Reads one page, applying the pushed filters "server-side" (here: while
-  * generating) and projecting only the pruned columns.
-  */
-final class PagedReader(
-    p: PagePartition,
-    filters: Array[Filter],
-    required: StructType,
-    limit: Option[Int]
-) extends PartitionReader[InternalRow] {
-
-  private val start = p.page.toLong * p.pageSize
-  private val end = math.min(start + p.pageSize, p.totalRows)
-  private var i = start - 1
-  private var emitted = 0
-  private var current: (Long, String, Double) = _
-
-  private[sources] def acceptRow(r: (Long, String, Double)): Boolean =
-    PagedSource.accept(filters.toSeq, r)
-
-  override def next(): Boolean = {
-    // a partition never needs more than `limit` matching rows for a
-    // global limit — stop generating early (the paged API stops fetching)
-    if (limit.exists(emitted >= _)) return false
-    while (i + 1 < end) {
-      i += 1
-      val r = PagedSource.row(i)
-      if (acceptRow(r)) { current = r; emitted += 1; return true }
-    }
-    false
-  }
-
-  override def get(): InternalRow = {
-    val vals = required.fields.map(_.name match {
-      case "brand_id" => current._1.asInstanceOf[Any]
-      case "date_str" => UTF8String.fromString(current._2)
-      case "metric"   => current._3.asInstanceOf[Any]
-    })
-    InternalRow.fromSeq(vals.toSeq)
-  }
-
-  override def close(): Unit = ()
-}
-
-/** Fetches one page over HTTP with the pushed query shape in the request
-  * (filters, pruned columns, per-partition cap) and parses the returned
-  * CSV rows — the wire-backed twin of [[PagedReader]]. The server already
-  * evaluated the filters/projection; nothing is re-filtered here, which
-  * is the point of the pushdown contract.
-  */
-final class HttpPagedReader(
-    p: PagePartition,
-    filters: Array[Filter],
-    required: StructType,
-    limit: Option[Int],
-    endpoint: String,
-    tokenFile: Option[String] = None
-) extends PartitionReader[InternalRow] {
-
-  private val lines: Iterator[String] = {
-    val client = new HttpPageClient(endpoint, PagedSource.creds(tokenFile))
-    val params =
-      Seq("page" -> p.page.toString, "pageSize" -> p.pageSize.toString) ++
-        HttpPageClient.encodeFilters(filters.toSeq).map("filter" -> _) ++
-        Seq("cols" -> required.fieldNames.mkString(",")) ++
-        limit.map(l => "limit" -> l.toString)
-    client.fetchLines(params)
-  }
-
+/** A page's typed values ([[PagedSource.page]]) as InternalRows. */
+final class PagedReader(rows: Iterator[Seq[Any]]) extends PartitionReader[InternalRow] {
   private var current: InternalRow = _
 
   override def next(): Boolean =
-    if (lines.hasNext) { current = parse(lines.next()); true } else false
-
-  private def parse(line: String): InternalRow =
-    if (required.fields.isEmpty) InternalRow.empty
-    else {
-      val parts = line.split(",", -1)
-      val vals = required.fields.zip(parts).map {
-        case (f, s) =>
-          f.name match {
-            case "brand_id" => java.lang.Long.parseLong(s).asInstanceOf[Any]
-            case "date_str" => UTF8String.fromString(s)
-            case "metric"   => java.lang.Double.parseDouble(s).asInstanceOf[Any]
-          }
-      }
-      InternalRow.fromSeq(vals.toSeq)
-    }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
-}
-
-/** Fetches one page's SERVER-AGGREGATED rows — the reference's actual
-  * execution model (the LFM server evaluates the group-by and pages back
-  * pre-aggregated rows); Spark's final aggregate merges across pages.
-  */
-final class HttpPagedAggReader(
-    p: PagePartition,
-    filters: Array[Filter],
-    agg: PushedAgg,
-    endpoint: String,
-    tokenFile: Option[String] = None
-) extends PartitionReader[InternalRow] {
-
-  private val out = agg.outputSchema
-
-  private val lines: Iterator[String] = {
-    val client = new HttpPageClient(endpoint, PagedSource.creds(tokenFile))
-    val params =
-      Seq("page" -> p.page.toString, "pageSize" -> p.pageSize.toString) ++
-        HttpPageClient.encodeFilters(filters.toSeq).map("filter" -> _) ++
-        Seq(
-          "groupBy" -> agg.groupCols.mkString(","),
-          "aggs" -> HttpPageClient.encodeAggSpecs(agg.aggs).mkString(","))
-    client.fetchLines(params)
-  }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (lines.hasNext) { current = parse(lines.next()); true } else false
-
-  private def parse(line: String): InternalRow = {
-    val parts = line.split(",", -1)
-    val vals = out.fields.zip(parts).map {
-      case (f, s) =>
-        f.dataType match {
-          case LongType   => java.lang.Long.parseLong(s).asInstanceOf[Any]
-          case DoubleType => java.lang.Double.parseDouble(s).asInstanceOf[Any]
-          case _          => UTF8String.fromString(s)
-        }
-    }
-    InternalRow.fromSeq(vals.toSeq)
-  }
+    if (rows.hasNext) {
+      val vals = rows.next()
+      current =
+        if (vals.isEmpty) InternalRow.empty
+        else InternalRow.fromSeq(vals.map {
+          case s: String => UTF8String.fromString(s)
+          case v         => v
+        })
+      true
+    } else false
 
   override def get(): InternalRow = current
   override def close(): Unit = ()

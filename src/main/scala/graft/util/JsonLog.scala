@@ -7,14 +7,15 @@ package graft.util
   * tiny driver-side emitter used by the pipeline for run events.
   */
 object JsonLog {
-  /** JSON string-body escaping for the log lines below: a message can
-    * carry arbitrary text (exception messages, paths, corpus-derived
-    * values) with `"` or `\`, and an unescaped one breaks every JSON-line
-    * parser downstream. Surrogates are \u-escaped so a lone surrogate
+  /** JSON string-body escaping for the log lines below and for
+    * [[graft.Verify]]'s JSON dumps: a message can carry arbitrary text
+    * (exception messages, paths, corpus-derived values, oracle SQL) with
+    * `"`, `\` or control characters, and an unescaped one breaks every
+    * JSON parser downstream. Surrogates are \u-escaped so a lone surrogate
     * (char-level BPE on supplementary-plane text) still yields parseable
     * ASCII output.
     */
-  private def esc(s: String): String =
+  private[graft] def esc(s: String): String =
     s.flatMap {
       case '"'                     => "\\\""
       case '\\'                    => "\\\\"

@@ -290,6 +290,34 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("lshIngestAppend: a delta never pairs with its own appended keys") {
+    // the candidate scan overlaps the keys append; it may only ever read
+    // the index as it was before this ingest. Two identical NEW docs would
+    // pair with each other (and themselves), and the copy of a snapshot
+    // doc with itself, if the scan saw the appended keys.
+    val snapshot = docs(
+      1L -> "the quick brown fox jumps over the lazy dog near the river bank",
+      2L -> "spark engines shuffle partitions across executors during wide joins",
+      3L -> "incremental dedup keeps a persisted band index between daily ingests")
+    val fresh = "a brand new document about tokenizers merging byte pairs greedily"
+    val delta = docs(
+      101L -> fresh,
+      102L -> fresh,
+      103L -> "the quick brown fox jumps over the lazy dog near the river bank")
+    val dir = s"/tmp/graft-test-lshpin/${spark.sparkContext.applicationId}"
+    try {
+      Dedup.lshBuildIndex(snapshot, "doc_id", "text", dir)
+      val pairs = Dedup.lshIngestAppend(delta, "doc_id", "text", dir)
+        .as[(Long, Long)].collect().toSet
+      assert(pairs.contains((103L, 1L)), pairs)
+      assert(!pairs.exists { case (a, b) => Set(a, b) == Set(101L, 102L) }, pairs)
+      assert(pairs.forall { case (_, snap) => Set(1L, 2L, 3L)(snap) }, pairs)
+    } finally {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
   test("chunkDedupLocal: within-doc repeats excised, CROSS-doc repeats kept, map-only plan") {
     val df = docs(
       1L -> "a b c d",

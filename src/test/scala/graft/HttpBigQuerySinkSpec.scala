@@ -378,41 +378,51 @@ class HttpBigQuerySinkSpec extends SparkSpec {
   }
 
   test("field scans are scoped: nested error text cannot shadow status/statistics fields") {
-    import graft.load.HttpBigQueryLoadClient.{extractIn, subObject}
+    import graft.load.HttpBigQueryLoadClient.{parse, textAt}
     // a realistic v2 body whose errorResult message QUOTES a state and
     // whose errors[] carries its own message — the shapes that defeat a
     // whole-body first-occurrence scan
-    val body =
+    val body = parse(
       """{"jobReference":{"projectId":"p","jobId":"job_9"},
         |"configuration":{"load":{"destinationTable":{"tableId":"t"}}},
         |"status":{"state":"DONE",
         |  "errors":[{"reason":"invalid","message":"row 3: bad \"state\":\"RUNNING\" literal"}]},
-        |"statistics":{"creationTime":"1700000000","load":{"outputRows":"42"}}}""".stripMargin
-    assert(extractIn(body, "status", "state").contains("DONE"))
-    assert(extractIn(body, "jobReference", "jobId").contains("job_9"))
-    assert(extractIn(body, "statistics", "outputRows").contains("42"))
-    // subobject extraction is balanced-brace aware, not first-} naive
-    assert(subObject(body, "statistics").exists(_.contains("outputRows")))
-    assert(subObject(body, "nope").isEmpty)
+        |"statistics":{"creationTime":"1700000000","load":{"outputRows":"42"}}}""".stripMargin,
+      "jobs.get")
+    assert(textAt(body, "status", "state").contains("DONE"))
+    assert(textAt(body, "jobReference", "jobId").contains("job_9"))
+    assert(textAt(body, "statistics", "load", "outputRows").contains("42"))
+    // the statistics object is read whole, not cut at its first '}'
+    assert(body.path("statistics").toString.contains("outputRows"))
+    assert(textAt(body, "nope", "state").isEmpty && body.path("nope").isMissingNode)
   }
 
-  test("subObject anchors outside strings and at top level only") {
-    import graft.load.HttpBigQueryLoadClient.{extractIn, subObject}
+  test("the response reader anchors outside strings and at top level only") {
+    import graft.load.HttpBigQueryLoadClient.{parse, textAt}
     // an earlier STRING VALUE containing '"status": {' must not anchor
-    // the scan (the defeated shape: a log line quoted inside a message)
-    val trap =
+    // the read (the defeated shape: a log line quoted inside a message)
+    val trap = parse(
       """{"note":"saw \"status\": {\"state\":\"RUNNING\"} in upstream log",
-        |"status":{"state":"DONE"}}""".stripMargin
-    assert(extractIn(trap, "status", "state").contains("DONE"))
-    assert(subObject(trap, "status").contains("""{"state":"DONE"}"""))
+        |"status":{"state":"DONE"}}""".stripMargin,
+      "jobs.get")
+    assert(textAt(trap, "status", "state").contains("DONE"))
+    assert(trap.path("status").toString === """{"state":"DONE"}""")
     // a NESTED object reusing the key must not anchor either — only the
-    // top-level key owns the scan
-    val nested =
+    // top-level key owns the read
+    val nested = parse(
       """{"configuration":{"status":{"state":"NESTED"}},
-        |"status":{"state":"DONE"}}""".stripMargin
-    assert(extractIn(nested, "status", "state").contains("DONE"))
+        |"status":{"state":"DONE"}}""".stripMargin,
+      "jobs.get")
+    assert(textAt(nested, "status", "state").contains("DONE"))
     // key present only nested → no top-level match
-    assert(subObject("""{"outer":{"status":{"state":"X"}}}""", "status").isEmpty)
+    assert(parse("""{"outer":{"status":{"state":"X"}}}""", "jobs.get").path("status").isMissingNode)
+  }
+
+  test("a response body that is not JSON fails as a LoadJobException naming the call") {
+    val e = intercept[BigQuerySink.LoadJobException] {
+      graft.load.HttpBigQueryLoadClient.parse("""{"status":{"state":"DONE"""", "jobs.get")
+    }
+    assert(e.getMessage.startsWith("jobs.get "), e.getMessage)
   }
 
   test("a non-200 insert surfaces the server's error.message, not just the code") {
@@ -441,5 +451,16 @@ class HttpBigQuerySinkSpec extends SparkSpec {
       assert(e.getMessage.contains("400"), e.getMessage)
       assert(e.getMessage.contains("Invalid load configuration"), e.getMessage)
     } finally reject.stop(0)
+  }
+
+  test("a config id with control characters still yields a jobs.insert body a JSON parser accepts") {
+    // the config id comes from the outside export-config document and
+    // reaches the table id through Sink.tableName unchanged
+    configsSeen.clear()
+    val configId = "cfg\tq\"uote\nline"
+    assert(freshSink().load(df(s2, Row(1L, "a")), configId, Sink.WriteTruncate) === 1)
+    val cfg = new com.fasterxml.jackson.databind.ObjectMapper().readTree(configsSeen.asScala.last)
+    assert(cfg.path("configuration").path("load").path("destinationTable").path("tableId").asText ===
+      Sink.tableName(configId))
   }
 }
