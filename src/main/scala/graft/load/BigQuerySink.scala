@@ -2,28 +2,6 @@ package graft.load
 
 import org.apache.spark.sql.DataFrame
 
-/** The destination-agnostic load seam (K1, `/root/reference/data_load.py:7-59`).
-  *
-  * The reference's load stage is a BigQuery JSON load job; this engine's
-  * offline stand-in is evolving parquet ([[Sink.writeParquetEvolving]]).
-  * `TableSink` is the seam between them: `Pipeline.run`'s per-config
-  * `process` closure loads through a `TableSink`, and which warehouse
-  * backs it is an injection decision — [[ParquetTableSink]] in this
-  * sandbox, [[BigQuerySink]] (over a real connector-backed client) in a
-  * deployment. Both enforce the same contract: empty input raises
-  * (`data_load.py:27-33`), destination naming is
-  * `010_warner_dl_lf_{config_id}` (`data_load.py:36`), dispositions map
-  * append/truncate, and schema may only GROW (ALLOW_FIELD_ADDITION,
-  * `data_load.py:40-44`).
-  */
-trait TableSink {
-
-  /** Load one config's transformed frame into its destination table.
-    * @return rows loaded (the reference logs `load_job.output_rows`)
-    */
-  def load(df: DataFrame, configId: String, disposition: Sink.WriteDisposition): Long
-}
-
 /** The client half of the BigQuery load-job contract
   * (`/root/reference/data_load.py:40-59`): what
   * `bigquery.Client.load_table_from_json(..., LoadJobConfig(...))` +
@@ -68,19 +46,27 @@ object BigQuerySink {
   val AllowFieldAddition = "ALLOW_FIELD_ADDITION"
 }
 
-/** [[TableSink]] over a [[BigQueryLoadClient]] — the engine-side half of
-  * `load_data_to_bq`: empty-input guard, fully-qualified
-  * `{project}.{dataset}.010_warner_dl_lf_{config}` naming, disposition
-  * pass-through, ALLOW_FIELD_ADDITION always on (the reference
-  * hard-codes it; `autodetect=True` is implicit — a DataFrame always
-  * carries its schema).
+/** The engine-side half of `load_data_to_bq` over a [[BigQueryLoadClient]]
+  * (K1, reference `data_load.py:7-59`). The offline parquet
+  * warehouse enforces the same contract in [[Sink.writeParquetEvolving]].
   */
-final class BigQuerySink(client: BigQueryLoadClient, datasetId: String) extends TableSink {
+final class BigQuerySink(client: BigQueryLoadClient, datasetId: String) {
 
   def tableId(configId: String): String =
     s"${client.project}.$datasetId.${Sink.tableName(configId)}"
 
-  override def load(
+  /** Load one config's transformed frame into its destination table:
+    *  - empty input raises before any job is submitted
+    *    (`data_load.py:27-33`);
+    *  - the destination is `{project}.{dataset}.010_warner_dl_lf_{config}`
+    *    (`data_load.py:36`);
+    *  - the disposition passes through (append or truncate);
+    *  - schema may only GROW: ALLOW_FIELD_ADDITION is always on, as the
+    *    reference hard-codes it (`data_load.py:40-44`); `autodetect=True`
+    *    is implicit, since a DataFrame always carries its schema.
+    * @return rows loaded (the reference logs `load_job.output_rows`)
+    */
+  def load(
       df: DataFrame,
       configId: String,
       disposition: Sink.WriteDisposition
@@ -92,28 +78,5 @@ final class BigQuerySink(client: BigQueryLoadClient, datasetId: String) extends 
       tableId(configId),
       disposition,
       Set(BigQuerySink.AllowFieldAddition))
-  }
-}
-
-/** [[TableSink]] over the offline parquet warehouse. Same contract,
-  * enforced by [[Sink.writeParquetEvolving]] (union-schema evolution,
-  * type-change rejection, empty guard). Nothing in the engine constructs
-  * it — `Pipeline.run` takes a `process` closure, and the callers that
-  * load to parquet call `Sink.writeParquetEvolving` directly;
-  * BigQuerySinkSpec pins it to the [[TableSink]] contract.
-  */
-final class ParquetTableSink(spark: org.apache.spark.sql.SparkSession, root: String)
-    extends TableSink {
-
-  def path(configId: String): String = s"$root/${Sink.tableName(configId)}"
-
-  override def load(
-      df: DataFrame,
-      configId: String,
-      disposition: Sink.WriteDisposition
-  ): Long = {
-    val n = df.count()
-    Sink.writeParquetEvolving(spark, df, path(configId), disposition)
-    n
   }
 }

@@ -1,10 +1,9 @@
 package graft.load
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
-
-import scala.util.Try
 
 /** K1/K2 — the load stage (`/root/reference/data_load.py:27-59`).
   *
@@ -12,8 +11,9 @@ import scala.util.Try
   * from env (`WRITE_APPEND`/`WRITE_TRUNCATE`), `ALLOW_FIELD_ADDITION` +
   * `autodetect=True` schema evolution, and a hard error on empty input
   * (`data_load.py:27-33`). Offline mapping (SURVEY.md §2.7): parquet with
-  * append/overwrite + `mergeSchema` on read; in production this trait gets a
-  * BigQuery implementation via the spark-bigquery connector.
+  * append/overwrite + `mergeSchema` on read ([[writeParquetEvolving]] is the
+  * one parquet load path); in production [[BigQuerySink]] loads the same
+  * frame through a connector-backed [[BigQueryLoadClient]].
   */
 object Sink {
 
@@ -37,34 +37,6 @@ object Sink {
     */
   def tableName(configId: String): String = s"010_warner_dl_lf_$configId"
 
-  def writeParquet(df: DataFrame, path: String, disposition: WriteDisposition): Unit = {
-    // isEmpty is a cheap limit-1 job; the reference raises ValueError on an
-    // empty record list before submitting the load job.
-    if (df.isEmpty) throw new EmptyInputException(s"no records to load into $path")
-    df.write.mode(disposition.sparkMode).parquet(path)
-  }
-
-  /** Partitioned sink with DYNAMIC partition overwrite: re-running a load
-    * replaces exactly the partitions present in the incoming frame and
-    * leaves every other partition untouched — the idempotent-backfill
-    * semantics a date-partitioned 100 TB table needs (static overwrite
-    * would drop the whole table; append would duplicate the re-run day).
-    * The option is set on the writer, not the session, so the behavior is
-    * explicit per call site.
-    */
-  def writePartitionedDynamic(
-      df: DataFrame,
-      path: String,
-      partitionCols: Seq[String]
-  ): Unit = {
-    if (df.isEmpty) throw new EmptyInputException(s"no records to load into $path")
-    df.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-  }
-
   /** Read side of ALLOW_FIELD_ADDITION: schema union across appended runs. */
   def readMerged(spark: SparkSession, path: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(path)
@@ -83,6 +55,10 @@ object Sink {
     * only ever grows monotonically. After the write, the on-disk merged
     * schema is verified to equal the computed union, failing loudly
     * instead of leaving a silently diverged table. Returns the union.
+    *
+    * Only a destination that does not exist counts as empty: any other
+    * failure to read its schema (a planted file whose type conflicts, a
+    * corrupt footer) propagates before anything is written.
     */
   def writeParquetEvolving(
       spark: SparkSession,
@@ -93,7 +69,10 @@ object Sink {
     if (df.isEmpty) throw new EmptyInputException(s"no records to load into $path")
     val existing: Option[StructType] = disposition match {
       case WriteTruncate => None
-      case WriteAppend   => Try(readMerged(spark, path).schema).toOption
+      case WriteAppend =>
+        val dest = new Path(path)
+        val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        Option.when(fs.exists(dest))(readMerged(spark, path).schema)
     }
     val union = existing match {
       case None => df.schema

@@ -19,7 +19,10 @@ package graft.tools
   * (run/cpu/gc time, max single-task time — the skew signal — task count,
   * records read, shuffle bytes, spill). Per-stage executorRunTime vs task
   * count vs records does not lie where `explain` does (codegen stars show
-  * even when a stage runs interpreted).
+  * even when a stage runs interpreted). It ends with the formatted
+  * physical plan of the frame the last run forced (scan `PushedFilters`
+  * and `ReadSchema`, broadcast vs shuffle joins, partial aggregates,
+  * codegen spans), printed outside the timed region.
   *
   * {{{
   * SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.Probe /root/testdata/sf0.1 ann_ivfpq_append 3"
@@ -39,7 +42,8 @@ object Probe {
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
       l.reset()
       val t0 = System.currentTimeMillis()
-      fn(spark, dir).queryExecution.toRdd.foreach(_ => ())
+      val df = fn(spark, dir)
+      df.queryExecution.toRdd.foreach(_ => ())
       val t1 = System.currentTimeMillis()
       org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
       val wall = t1 - t0
@@ -64,6 +68,7 @@ object Probe {
             f"shufW=${r.shuffleWriteBytes / 1024}%9d KB " +
             f"spill=${r.diskSpillBytes / 1024 / 1024}%5d MB  ${r.name.take(60)}")
         }
+        println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
       }
     }
     // quiesce the state-store maintenance pool before the context stops

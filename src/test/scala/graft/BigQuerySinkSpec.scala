@@ -1,11 +1,10 @@
 package graft
 
-import graft.load.{BigQueryLoadClient, BigQuerySink, ParquetTableSink, Sink, TableSink}
+import graft.load.{BigQueryLoadClient, BigQuerySink, Sink}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{StructField, StructType}
 
-import java.nio.file.Files
 import scala.collection.mutable
 
 /** In-memory double of the BigQuery load-job API
@@ -161,23 +160,6 @@ class BigQuerySinkSpec extends SparkSpec {
     val bq = new InMemoryBigQuery("proj")
     intercept[BigQuerySink.LoadJobException] {
       bq.loadTable(Seq((1, "a")).toDF("k", "v"), "other.ds.t", Sink.WriteAppend, Set.empty)
-    }
-  }
-
-  test("ParquetTableSink honors the same TableSink contract on disk") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("pq-sink").toString
-    val sink: TableSink = new ParquetTableSink(spark, root)
-    assert(sink.load(Seq((1, "a")).toDF("k", "v"), "cfg", Sink.WriteAppend) == 1L)
-    assert(sink.load(Seq((2, 9.5)).toDF("k", "extra"), "cfg", Sink.WriteAppend) == 1L)
-    val merged = Sink.readMerged(spark, s"$root/010_warner_dl_lf_cfg")
-    assert(merged.columns.sorted.toSeq == Seq("extra", "k", "v"))
-    assert(merged.count() == 2)
-    intercept[Sink.SchemaEvolutionException] {
-      sink.load(Seq((3, 1)).toDF("k", "v"), "cfg", Sink.WriteAppend)
-    }
-    intercept[Sink.EmptyInputException] {
-      sink.load(Seq.empty[(Int, String)].toDF("k", "v"), "cfg", Sink.WriteAppend)
     }
   }
 }

@@ -24,6 +24,23 @@ class GraftSessionSpec extends SparkSpec {
     assert(offenders == List("src/main/scala/graft/GraftSession.scala"), offenders)
   }
 
+  test("src/main has exactly the seven mains: Bench, Verify and five tools") {
+    // one-off probe mains outlived the question they answered; a new
+    // diagnostic belongs in Probe, not in another main
+    val pkg = """(?m)^package\s+([\w.]+)""".r
+    val objectDecl = """\bobject\s+(\w+)""".r
+    // each main is named by the last object declared above it
+    val mains = for {
+      p <- mainSources
+      src = Files.readString(p)
+      m <- """def\s+main\(""".r.findAllMatchIn(src)
+    } yield pkg.findFirstMatchIn(src).get.group(1) + "." +
+      objectDecl.findAllMatchIn(src.take(m.start)).toList.last.group(1)
+    assert(mains.sorted == List("graft.Bench", "graft.Verify", "graft.tools.EntrySmoke",
+      "graft.tools.Probe", "graft.tools.RecallProbe", "graft.tools.ScaleGen",
+      "graft.tools.SurveyDump"), mains.sorted)
+  }
+
   test("src/main builds native expressions as Columns, never by registered name") {
     // a by-name lookup resolves only in a session someone registered the
     // name in; ExprBridge.column needs no session setup at all

@@ -5,8 +5,9 @@ import graft.pipeline.Pipeline
 import graft.spec.ExportConfig
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
 
 /** E2E pipeline semantics: per-config fault isolation (E1–E4) and the
   * sink's write dispositions + schema evolution (K1/K2).
@@ -40,20 +41,34 @@ class PipelineSpec extends SparkSpec {
   test("sink: WRITE_TRUNCATE overwrites, WRITE_APPEND accumulates (K1)") {
     val dir = Files.createTempDirectory("sink").toString + "/out"
     val df1 = Seq((1, "a")).toDF("k", "v")
-    Sink.writeParquet(df1, dir, Sink.WriteDisposition.fromString("WRITE_TRUNCATE"))
-    Sink.writeParquet(df1, dir, Sink.WriteDisposition.fromString("WRITE_APPEND"))
+    def load(df: org.apache.spark.sql.DataFrame, disposition: String) =
+      Sink.writeParquetEvolving(spark, df, dir, Sink.WriteDisposition.fromString(disposition))
+    load(df1, "WRITE_TRUNCATE")
+    load(df1, "WRITE_APPEND")
     assert(spark.read.parquet(dir).count() == 2)
-    Sink.writeParquet(df1, dir, Sink.WriteDisposition.fromString("WRITE_TRUNCATE"))
+    load(df1, "WRITE_TRUNCATE")
     assert(spark.read.parquet(dir).count() == 1)
+    // truncate replaces the schema as well as the rows: a narrower frame
+    // leaves exactly its own columns, none carried over from the old table
+    load(Seq(3).toDF("k"), "WRITE_TRUNCATE")
+    assert(Sink.readMerged(spark, dir).columns.toSeq == Seq("k"))
   }
 
   test("sink: schema evolution across appends (ALLOW_FIELD_ADDITION analogue)") {
     val dir = Files.createTempDirectory("sink-evolve").toString + "/out"
-    Sink.writeParquet(Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
-    Sink.writeParquet(Seq((2, "b", 9.5)).toDF("k", "v", "extra"), dir, Sink.WriteAppend)
+    Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
+    Sink.writeParquetEvolving(spark, Seq((2, "b", 9.5)).toDF("k", "v", "extra"), dir, Sink.WriteAppend)
     val merged = Sink.readMerged(spark, dir)
     assert(merged.columns.toSet == Set("k", "v", "extra"))
     assert(merged.filter(col("extra").isNull).count() == 1)
+    // an append that drops `v` keeps the union; one that retypes `v` is
+    // rejected and writes nothing
+    Sink.writeParquetEvolving(spark, Seq((3, 1.5)).toDF("k", "extra"), dir, Sink.WriteAppend)
+    assert(Sink.readMerged(spark, dir).columns.sorted.toSeq == Seq("extra", "k", "v"))
+    intercept[Sink.SchemaEvolutionException] {
+      Sink.writeParquetEvolving(spark, Seq((4, 1)).toDF("k", "v"), dir, Sink.WriteAppend)
+    }
+    assert(Sink.readMerged(spark, dir).count() == 3)
   }
 
   test("sink: write-side evolution null-fills the union and verifies on-disk schema") {
@@ -83,8 +98,33 @@ class PipelineSpec extends SparkSpec {
     val dir = Files.createTempDirectory("sink-empty").toString + "/out"
     val empty = Seq.empty[(Int, String)].toDF("k", "v")
     intercept[Sink.EmptyInputException] {
-      Sink.writeParquet(empty, dir, Sink.WriteAppend)
+      Sink.writeParquetEvolving(spark, empty, dir, Sink.WriteAppend)
     }
+    // on an existing destination the guard fires before truncate touches it
+    Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
+    intercept[Sink.EmptyInputException] {
+      Sink.writeParquetEvolving(spark, empty, dir, Sink.WriteTruncate)
+    }
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("sink: an unreadable destination fails the append before anything is written") {
+    val dir = Files.createTempDirectory("sink-unreadable").toString + "/out"
+    Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
+    // plant a file whose `v` is BIGINT where the destination has STRING:
+    // the merged schema read cannot reconcile the two
+    val planted = Files.createTempDirectory("sink-planted").toString + "/out"
+    Seq((2, 7L)).toDF("k", "v").write.parquet(planted)
+    val part = Files.list(Paths.get(planted)).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    Files.copy(part, Paths.get(dir, "part-planted.parquet"))
+    def listing = Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString).toSet
+    val before = listing
+    val e = intercept[org.apache.spark.SparkException] {
+      Sink.writeParquetEvolving(spark, Seq((3, "c")).toDF("k", "v"), dir, Sink.WriteAppend)
+    }
+    assert(e.getMessage.contains("CANNOT_MERGE"), e)
+    assert(listing == before)
   }
 
   test("table naming matches the reference prefix") {
@@ -131,21 +171,5 @@ class PipelineSpec extends SparkSpec {
       Set("lfm&fact&date_str", "sum:value", "count:event_id"))
     assert(merged.filter(col("`count:event_id`").isNull).count() > 0)
     assert(merged.count() > 0)
-  }
-
-  test("sink: dynamic partition overwrite replaces only the re-run partition") {
-    import spark.implicits._
-    val dest = Files.createTempDirectory("graft_dyn_").toFile.getAbsolutePath
-    val day1 = Seq(("2024-01-01", 1L, 10.0), ("2024-01-01", 2L, 20.0),
-      ("2024-01-02", 3L, 30.0)).toDF("day", "id", "v")
-    Sink.writePartitionedDynamic(day1, dest, Seq("day"))
-    // re-run day 1 with corrected values; day 2 must survive untouched
-    val rerun = Seq(("2024-01-01", 1L, 11.0)).toDF("day", "id", "v")
-    Sink.writePartitionedDynamic(rerun, dest, Seq("day"))
-    // partition directory values are type-inferred (DateType) on read
-    val out = spark.read.parquet(dest)
-      .select(col("day").cast("string"), col("id"), col("v"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(out == Set(("2024-01-01", 1L, 11.0), ("2024-01-02", 3L, 30.0)))
   }
 }

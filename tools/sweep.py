@@ -239,7 +239,8 @@ def main():
         f.write("## Isolated triple-runs (fill in for any apparent outlier)\n\n")
         f.write("  for i in 1 2 3; do SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SF_DIR="
                 f"{BASE_SF} sbt -batch 'runMain graft.Bench <query>'; done\n\n")
-        f.write("## PlanAudit (explain the slowest new/changed queries)\n\n")
+        f.write(f"## graft.tools.Probe {BASE_SF} <query> 1 "
+                "(the formatted plans of the slowest new/changed queries)\n\n")
     print(f"[sweep] notes skeleton -> {notes}", flush=True)
 
 
