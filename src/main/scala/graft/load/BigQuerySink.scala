@@ -56,7 +56,7 @@ final class BigQuerySink(client: BigQueryLoadClient, datasetId: String) {
     s"${client.project}.$datasetId.${Sink.tableName(configId)}"
 
   /** Load one config's transformed frame into its destination table:
-    *  - empty input raises before any job is submitted
+    *  - empty input raises before any load job is submitted
     *    (`data_load.py:27-33`);
     *  - the destination is `{project}.{dataset}.010_warner_dl_lf_{config}`
     *    (`data_load.py:36`);

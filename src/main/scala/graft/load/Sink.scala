@@ -1,28 +1,39 @@
 package graft.load
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.types.StructType
+
+import java.io.IOException
+import java.util.UUID
+import scala.jdk.CollectionConverters._
 
 /** K1/K2 — the load stage (`/root/reference/data_load.py:27-59`).
   *
   * Reference semantics: BigQuery JSON load job with `write_disposition`
   * from env (`WRITE_APPEND`/`WRITE_TRUNCATE`), `ALLOW_FIELD_ADDITION` +
   * `autodetect=True` schema evolution, and a hard error on empty input
-  * (`data_load.py:27-33`). Offline mapping (SURVEY.md §2.7): parquet with
-  * append/overwrite + `mergeSchema` on read ([[writeParquetEvolving]] is the
-  * one parquet load path); in production [[BigQuerySink]] loads the same
-  * frame through a connector-backed [[BigQueryLoadClient]].
+  * (`data_load.py:27-33`). Offline mapping (SURVEY.md §2.7): parquet
+  * append/truncate with field addition, [[writeParquetEvolving]] being the
+  * one parquet load path. Like the reference's one load job, a load is one
+  * Spark write: schemas come from parquet footers read on the driver, and
+  * the write is staged beside the destination and committed by rename
+  * only once it succeeded. [[readMerged]] is the `mergeSchema` read of the
+  * result. In production [[BigQuerySink]] loads the same frame through a
+  * connector-backed [[BigQueryLoadClient]].
   */
 object Sink {
 
   /** Empty-input guard (K2, `/root/reference/data_load.py:27-33`). */
   final class EmptyInputException(msg: String) extends RuntimeException(msg)
 
-  sealed trait WriteDisposition { def sparkMode: String }
-  case object WriteAppend extends WriteDisposition { val sparkMode = "append" }
-  case object WriteTruncate extends WriteDisposition { val sparkMode = "overwrite" }
+  sealed trait WriteDisposition
+  case object WriteAppend extends WriteDisposition
+  case object WriteTruncate extends WriteDisposition
 
   object WriteDisposition {
     /** Env-string mapping (`/root/reference/main.py:11`, `data_load.py:44-50`). */
@@ -52,13 +63,26 @@ object Sink {
     * the destination's schema and its own — existing columns keep their
     * declared type (a type change throws), missing ones are null-filled —
     * so every new file carries the full union schema and the destination
-    * only ever grows monotonically. After the write, the on-disk merged
-    * schema is verified to equal the computed union, failing loudly
-    * instead of leaving a silently diverged table. Returns the union.
+    * only ever grows monotonically. Returns the union.
     *
-    * Only a destination that does not exist counts as empty: any other
-    * failure to read its schema (a planted file whose type conflicts, a
-    * corrupt footer) propagates before anything is written.
+    * The load is one Spark write and no other job:
+    *  - the destination's schema is merged on the driver from its parquet
+    *    footers, as a `mergeSchema` read would infer it (a conflict raises
+    *    the same `CANNOT_MERGE_SCHEMAS` error); only a destination that
+    *    does not exist, or holds no data files, counts as empty, and any
+    *    other failure to read its schema (a planted file whose type
+    *    conflicts, a corrupt footer) propagates before anything is written;
+    *  - the aligned frame is written once to a hidden sibling staging
+    *    directory, `.<dest>.staging-<uuid>`;
+    *  - the empty-input guard (K2) sums the staged footers' row counts:
+    *    zero throws [[EmptyInputException]] with the destination untouched;
+    *  - otherwise WRITE_TRUNCATE deletes the destination — only now, after
+    *    the staged write succeeded, so a failing write leaves the old table
+    *    whole — and the staged data files are renamed into it. `_SUCCESS`
+    *    stays in staging, which is deleted whatever happens;
+    *  - the merged schema of every footer now in the destination is
+    *    verified to equal the computed union, failing loudly instead of
+    *    leaving a silently diverged table.
     */
   def writeParquetEvolving(
       spark: SparkSession,
@@ -66,13 +90,11 @@ object Sink {
       path: String,
       disposition: WriteDisposition
   ): StructType = {
-    if (df.isEmpty) throw new EmptyInputException(s"no records to load into $path")
+    val dest = new Path(path)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existing: Option[StructType] = disposition match {
       case WriteTruncate => None
-      case WriteAppend =>
-        val dest = new Path(path)
-        val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Option.when(fs.exists(dest))(readMerged(spark, path).schema)
+      case WriteAppend   => if (fs.exists(dest)) FooterSchema.merge(spark, footers(fs, dest)) else None
     }
     val union = existing match {
       case None => df.schema
@@ -91,8 +113,20 @@ object Sink {
       if (df.columns.contains(f.name)) col(s"`${f.name}`")
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    aligned.write.mode(disposition.sparkMode).parquet(path)
-    val after = readMerged(spark, path).schema
+    val staging = new Path(dest.getParent, s".${dest.getName}.staging-${UUID.randomUUID()}")
+    try {
+      aligned.write.parquet(staging.toString)
+      val staged = footers(fs, staging)
+      if (staged.flatMap(_.getParquetMetadata.getBlocks.asScala).map(_.getRowCount).sum == 0L)
+        throw new EmptyInputException(s"no records to load into $path")
+      if (disposition == WriteTruncate) fs.delete(dest, true)
+      fs.mkdirs(dest)
+      staged.foreach { f =>
+        val to = new Path(dest, f.getFile.getName)
+        if (!fs.rename(f.getFile, to)) throw new IOException(s"could not move ${f.getFile} to $to")
+      }
+    } finally fs.delete(staging, true)
+    val after = FooterSchema.merge(spark, footers(fs, dest)).getOrElse(StructType(Nil))
     val got = after.fields.map(f => f.name -> f.dataType).toSet
     val want = union.fields.map(f => f.name -> f.dataType).toSet
     if (got != want)
@@ -100,4 +134,19 @@ object Sink {
         s"post-write verification failed for $path: on-disk merged schema $got != expected $want")
     union
   }
+
+  /** The footers of a directory's data files, by Spark's hidden-file rule
+    * (names starting with `_` or `.` are not data), in name order.
+    */
+  private def footers(fs: FileSystem, dir: Path): Seq[Footer] =
+    fs.listStatus(dir).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      .sortBy(_.getPath.getName)
+      .map { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+        try new Footer(st.getPath, r.getFooter) finally r.close()
+      }
 }

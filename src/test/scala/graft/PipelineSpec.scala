@@ -127,6 +127,72 @@ class PipelineSpec extends SparkSpec {
     assert(listing == before)
   }
 
+  test("sink: the footer-merged union equals the mergeSchema read, in order") {
+    val dir = Files.createTempDirectory("sink-parity").toString + "/out"
+    Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
+    Sink.writeParquetEvolving(spark, Seq((2, "b", 9.5)).toDF("k", "v", "extra"), dir, Sink.WriteAppend)
+    val union = Sink.writeParquetEvolving(spark, Seq((3, 1.5)).toDF("k", "extra"), dir, Sink.WriteAppend)
+    assert(union.fieldNames.toSeq == Seq("k", "v", "extra"))
+    assert(union.fieldNames.toSeq == Sink.readMerged(spark, dir).schema.fieldNames.toSeq)
+  }
+
+  test("sink: a failed WRITE_TRUNCATE leaves the destination whole") {
+    val dir = Files.createTempDirectory("sink-trunc-fail").toString + "/out"
+    Sink.writeParquetEvolving(spark, Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), dir, Sink.WriteAppend)
+    // the last row of the last partition fails, after the other tasks wrote
+    val failing = spark.range(0, 1000, 1, 4)
+      .select(when(col("id") === 999, raise_error(lit("boom"))).otherwise(col("id")).as("k"))
+    intercept[Exception] {
+      Sink.writeParquetEvolving(spark, failing, dir, Sink.WriteTruncate)
+    }
+    val kept = Sink.readMerged(spark, dir)
+    assert(kept.columns.toSeq == Seq("k", "v"))
+    assert(kept.select("k").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
+  }
+
+  test("sink: no staging directory is left beside the destination") {
+    val parent = Files.createTempDirectory("sink-staging")
+    val dir = parent.toString + "/out"
+    def staging = Files.list(parent).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.contains(".staging-")).toSeq
+    Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
+    assert(staging.isEmpty, staging)
+    intercept[Sink.EmptyInputException] {
+      Sink.writeParquetEvolving(spark, Seq.empty[(Int, String)].toDF("k", "v"), dir, Sink.WriteAppend)
+    }
+    assert(staging.isEmpty, staging)
+    intercept[Exception] {
+      Sink.writeParquetEvolving(
+        spark, spark.range(0, 10, 1, 2).select(raise_error(lit("boom")).as("k")), dir, Sink.WriteTruncate)
+    }
+    assert(staging.isEmpty, staging)
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("sink: an append starts only the jobs of a plain parquet write") {
+    val root = Files.createTempDirectory("sink-jobs").toString
+    val frame = spark.range(0, 1000, 1, 4).select(col("id").as("k"), (col("id") % 7).as("v"))
+    Sink.writeParquetEvolving(spark, frame, root + "/out", Sink.WriteAppend)
+    val l = new QueryListener
+    spark.sparkContext.addSparkListener(l)
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      l.reset()
+      body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      l.jobSpans.size
+    }
+    try {
+      // no isEmpty job and no schema job: the same count as writing the
+      // frame to a fresh path, whatever AQE splits that write into
+      val plain = jobsOf(frame.write.parquet(root + "/plain"))
+      val append = jobsOf(Sink.writeParquetEvolving(spark, frame, root + "/out", Sink.WriteAppend))
+      assert(plain > 0)
+      assert(append == plain, s"append ran $append jobs, a plain write $plain")
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(spark.read.parquet(root + "/out").count() == 2000)
+  }
+
   test("table naming matches the reference prefix") {
     assert(Sink.tableName("cfg1") == "010_warner_dl_lf_cfg1")
   }
