@@ -1,6 +1,5 @@
 package graft.auth
 
-import java.io.{IOException, OutputStream}
 import java.net.{HttpURLConnection, URI}
 import scala.io.Source
 
@@ -14,19 +13,15 @@ import scala.io.Source
   */
 object BearerHttp {
 
-  /** A request body. `chunked` streams it (a length unknown up front,
-    * e.g. a frame's NDJSON); otherwise the connection buffers it and
-    * sends a Content-Length.
+  /** A request body, buffered and sent with a Content-Length (the one
+    * body is a small `jobs.insert` JSON).
     */
-  final case class Body(contentType: String, chunked: Boolean, write: OutputStream => Unit)
+  final case class Body(contentType: String, bytes: Array[Byte])
 
   /** `body` is the response on a 200 and `error` the error stream's
-    * text otherwise (either may be empty). `aborted` is set when the
-    * server answered a non-200 status while the request body was still
-    * being written — it closed the stream without draining it, and the
-    * write died with a transport error.
+    * text otherwise (either may be empty).
     */
-  final case class Response(code: Int, body: String, error: String, aborted: Option[IOException]) {
+  final case class Response(code: Int, body: String, error: String) {
     def unauthorized: Boolean = code == 401 || code == 403
   }
 
@@ -47,11 +42,6 @@ object BearerHttp {
   ): Response = {
     val conn = URI.create(url).toURL.openConnection().asInstanceOf[HttpURLConnection]
     conn.setRequestMethod(method)
-    body.foreach { b =>
-      conn.setDoOutput(true)
-      if (b.chunked) conn.setChunkedStreamingMode(64 * 1024)
-      conn.setRequestProperty("Content-Type", b.contentType)
-    }
     conn.setConnectTimeout(10000)
     conn.setReadTimeout(readTimeoutMillis)
     // the reference authenticates through LF client credentials and
@@ -59,27 +49,16 @@ object BearerHttp {
     // every request
     creds.token().foreach(t => conn.setRequestProperty("Authorization", s"Bearer $t"))
     try {
-      val aborted =
-        try {
-          body.foreach { b =>
-            val out = conn.getOutputStream
-            try b.write(out)
-            finally out.close()
-          }
-          None
-        } catch {
-          case e: IOException =>
-            // a server that rejects the request up front (bad
-            // credentials, oversized body) may close the stream before
-            // draining it; if a status is already readable, report THAT
-            // so the caller's actionable message is not masked
-            val early = scala.util.Try(conn.getResponseCode).getOrElse(-1)
-            if (early <= 0 || early == 200) throw e
-            Some(e)
-        }
+      body.foreach { b =>
+        conn.setDoOutput(true)
+        conn.setRequestProperty("Content-Type", b.contentType)
+        val out = conn.getOutputStream
+        try out.write(b.bytes)
+        finally out.close()
+      }
       val code = conn.getResponseCode
-      if (code == 200) Response(code, read(conn.getInputStream), "", aborted)
-      else Response(code, "", scala.util.Try(read(conn.getErrorStream)).getOrElse(""), aborted)
+      if (code == 200) Response(code, read(conn.getInputStream), "")
+      else Response(code, "", scala.util.Try(read(conn.getErrorStream)).getOrElse(""))
     } finally conn.disconnect()
   }
 

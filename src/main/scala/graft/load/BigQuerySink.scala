@@ -3,25 +3,21 @@ package graft.load
 import org.apache.spark.sql.DataFrame
 
 /** The client half of the BigQuery load-job contract
-  * (`/root/reference/data_load.py:40-59`): what
+  * (the reference's `data_load.py:27-59`): what
   * `bigquery.Client.load_table_from_json(..., LoadJobConfig(...))` +
-  * `load_job.result()` provide. A deployment binds this to the
-  * spark-bigquery connector (`df.write.format("bigquery")` carries the
-  * disposition and schema-update options as writer options and keeps the
-  * write distributed); tests bind an in-memory double that enforces the
-  * documented load-job semantics, and [[HttpBigQueryLoadClient]] drives
-  * the full REST load-job lifecycle (multipart `jobs.insert` + `jobs.get`
-  * polling) over real HTTP against any server speaking the public v2
-  * shapes — contract-tested via a loopback stub. The connector jar is not
-  * resolvable in this sandbox (zero egress), so the distributed
-  * connector-backed implementation remains a deployment binding.
+  * `load_job.result()` provide, with the reference's empty-input guard.
+  * [[HttpBigQueryLoadClient]] drives the REST load-job lifecycle over
+  * HTTP; tests also bind an in-memory double that enforces the documented
+  * load-job semantics.
   */
 trait BigQueryLoadClient {
 
   /** Billing/default project for fully-qualified table ids. */
   def project: String
 
-  /** Submit a load job and wait for completion.
+  /** Submit a load job and wait for completion. Raises
+    * [[Sink.EmptyInputException]] before submitting any job when `df`
+    * has no rows (`data_load.py:27-33`).
     *
     * @param tableId fully qualified `project.dataset.table`
     * @param schemaUpdateOptions BigQuery `schema_update_options`; this
@@ -57,7 +53,8 @@ final class BigQuerySink(client: BigQueryLoadClient, datasetId: String) {
 
   /** Load one config's transformed frame into its destination table:
     *  - empty input raises before any load job is submitted
-    *    (`data_load.py:27-33`);
+    *    (`data_load.py:27-33`); the client's guard, so the frame is not
+    *    computed an extra time to test it;
     *  - the destination is `{project}.{dataset}.010_warner_dl_lf_{config}`
     *    (`data_load.py:36`);
     *  - the disposition passes through (append or truncate);
@@ -70,13 +67,10 @@ final class BigQuerySink(client: BigQueryLoadClient, datasetId: String) {
       df: DataFrame,
       configId: String,
       disposition: Sink.WriteDisposition
-  ): Long = {
-    if (df.isEmpty)
-      throw new Sink.EmptyInputException("No data provided to load into BigQuery.")
+  ): Long =
     client.loadTable(
       df,
       tableId(configId),
       disposition,
       Set(BigQuerySink.AllowFieldAddition))
-  }
 }

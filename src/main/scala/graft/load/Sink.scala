@@ -23,8 +23,8 @@ import scala.jdk.CollectionConverters._
   * Spark write: schemas come from parquet footers read on the driver, and
   * the write is staged beside the destination and committed by rename
   * only once it succeeded. [[readMerged]] is the `mergeSchema` read of the
-  * result. In production [[BigQuerySink]] loads the same frame through a
-  * connector-backed [[BigQueryLoadClient]].
+  * result. [[BigQuerySink]] loads the same frame into BigQuery through a
+  * [[BigQueryLoadClient]].
   */
 object Sink {
 
@@ -135,18 +135,10 @@ object Sink {
     union
   }
 
-  /** The footers of a directory's data files, by Spark's hidden-file rule
-    * (names starting with `_` or `.` are not data), in name order.
-    */
+  /** The footers of a directory's data files (see [[FooterSchema.dataFiles]]). */
   private def footers(fs: FileSystem, dir: Path): Seq[Footer] =
-    fs.listStatus(dir).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .sortBy(_.getPath.getName)
-      .map { st =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
-        try new Footer(st.getPath, r.getFooter) finally r.close()
-      }
+    FooterSchema.dataFiles(fs, dir).map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+      try new Footer(st.getPath, r.getFooter) finally r.close()
+    }
 }

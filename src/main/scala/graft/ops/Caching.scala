@@ -121,7 +121,10 @@ private[graft] object Caching {
     * frame. Reliable checkpoint FILES outlive the frame: Spark deletes
     * them only when `spark.cleaner.referenceTracking.cleanCheckpoints`
     * is true, which the engine does not set, so cleaning the directory
-    * is the caller's job.
+    * is the caller's job. One SparkContext holds one checkpoint dir for
+    * all its sessions: a session whose `spark.graft.checkpoint.dir`
+    * differs from the one the context already writes to fails here
+    * rather than writing its checkpoints somewhere else.
     */
   def eagerCheckpoint(df: DataFrame): DataFrame = {
     val ss = df.sparkSession
@@ -129,6 +132,14 @@ private[graft] object Caching {
       case Some(dir) if dir.nonEmpty =>
         val sc = ss.sparkContext
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+        // setCheckpointDir(d) stores qualified(d)/<uuid>
+        val want = new org.apache.hadoop.fs.Path(dir)
+        val wantQualified = want.getFileSystem(sc.hadoopConfiguration).makeQualified(want)
+        val have = sc.getCheckpointDir.get
+        if (new org.apache.hadoop.fs.Path(have).getParent != wantQualified)
+          throw new IllegalStateException(
+            s"spark.graft.checkpoint.dir is $wantQualified, but this SparkContext already " +
+              s"checkpoints to $have; set one checkpoint dir for every session of a context")
         df.checkpoint(eager = true)
       case _ => df.localCheckpoint(true)
     }

@@ -4,6 +4,9 @@ import graft.util.JsonLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.nio.file.{Files, Paths}
+import java.util.Comparator
+import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
 /** One registered operator: the Spark implementation plus (where
@@ -145,6 +148,32 @@ object Scratch {
       } catch {
         case NonFatal(e) => JsonLog.warning(s"scratch directory cleanup failed for $dir: $e")
       }
+    }
+  }
+
+  /** Local temp trees that a returned frame reads lazily, so they must
+    * outlive the query; one shutdown hook deletes them at JVM exit.
+    */
+  private val atExit = TrieMap.empty[String, Unit]
+  sys.addShutdownHook(atExit.keys.foreach(delete))
+
+  /** Delete the local tree at `dir` when the JVM exits. */
+  def deleteAtExit(dir: String): Unit = atExit.put(dir, ())
+
+  /** Delete the local tree at `dir` now, if it exists. A failure is
+    * logged, never thrown: one undeletable tree (a file pinned by a
+    * still-draining sink) must not stop the cleanup of the others, and
+    * the leaked path must leave a trace.
+    */
+  def delete(dir: String): Unit = {
+    atExit.remove(dir)
+    try {
+      val root = Paths.get(dir)
+      if (Files.exists(root))
+        Files.walk(root).sorted(Comparator.reverseOrder[java.nio.file.Path]())
+          .forEach(f => Files.deleteIfExists(f))
+    } catch {
+      case NonFatal(e) => JsonLog.warning(s"temp-tree cleanup failed for $dir: $e")
     }
   }
 }

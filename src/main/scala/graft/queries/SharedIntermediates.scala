@@ -1,7 +1,6 @@
 package graft.queries
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.file.Files
 
 import scala.collection.concurrent.TrieMap
 
@@ -37,22 +36,19 @@ import graft.ops.{Caching, Dedup}
   * Values are exact integers (`id_a, id_b, inter, size_a, size_b`), so
   * the roundtrip is bit-identical and every consumer hashes the same.
   *
-  * The temp dirs are deleted by a JVM shutdown hook ("released after the
-  * family"); [[clear]] exists for tests.
+  * The temp dirs are deleted at JVM exit through [[Scratch.deleteAtExit]]
+  * ("released after the family"); [[clear]] exists for tests.
   */
 object SharedIntermediates {
 
   private val memo = TrieMap.empty[(String, String), String]
-  private val created = TrieMap.empty[String, Unit]
 
-  sys.addShutdownHook {
-    created.keys.foreach(p => deleteRecursively(java.nio.file.Paths.get(p)))
+  /** A fresh temp dir for one build, deleted at JVM exit. */
+  private def tempDir(prefix: String): String = {
+    val p = Files.createTempDirectory(prefix).toString
+    Scratch.deleteAtExit(p)
+    p
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
-    }
 
   /** The canonical verified near-dup pair set over `documents` in `dir`
     * (shingleN=3, 64 hashes, 16 bands, Jaccard ≥ 4/5), built at most once
@@ -68,8 +64,7 @@ object SharedIntermediates {
   def verifiedPairs(s: SparkSession, dir: String): DataFrame = {
     val key = (s.sparkContext.applicationId, "pairs:" + dir)
     val path = memo.getOrElseUpdate(key, {
-      val p = Files.createTempDirectory("graft-shared-pairs-").toString
-      created.put(p, ())
+      val p = tempDir("graft-shared-pairs-")
       val pairs = Dedup.lshVerifiedPairsFromShingles(
         shingles(s, dir),
         numHashes = 64, bands = 16,
@@ -98,8 +93,7 @@ object SharedIntermediates {
   def shingles(s: SparkSession, dir: String): DataFrame = {
     val key = (s.sparkContext.applicationId, "shingles:" + dir)
     val path = memo.getOrElseUpdate(key, {
-      val p = Files.createTempDirectory("graft-shared-shingles-").toString
-      created.put(p, ())
+      val p = tempDir("graft-shared-shingles-")
       Dedup.shingleRows(Tables.t(s, dir, "documents"), "doc_id", "text", n = 3)
         .write.mode("overwrite").parquet(p)
       p
@@ -124,8 +118,7 @@ object SharedIntermediates {
   def spans(s: SparkSession, dir: String): DataFrame = {
     val key = (s.sparkContext.applicationId, "spans:" + dir)
     val path = memo.getOrElseUpdate(key, {
-      val p = Files.createTempDirectory("graft-shared-spans-").toString
-      created.put(p, ())
+      val p = tempDir("graft-shared-spans-")
       val (spansDf, g) = graft.ops.SpanDedup.spansPlan(
         Tables.t(s, dir, "documents"), "doc_id", "text",
         l = 4, minLen = 8, maxGramFreq = 50)
@@ -138,9 +131,7 @@ object SharedIntermediates {
 
   /** Drop every memoized build and its temp dir (test isolation). */
   def clear(): Unit = {
+    memo.values.foreach(Scratch.delete)
     memo.clear()
-    created.keys.foreach { p =>
-      deleteRecursively(java.nio.file.Paths.get(p)); created.remove(p)
-    }
   }
 }

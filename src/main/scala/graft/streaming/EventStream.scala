@@ -43,36 +43,6 @@ final case class SessionState(
 
 object EventStream {
 
-  /** Temp trees created by [[restartRunOnce]], deleted at JVM exit (the
-    * returned frame reads the sink lazily, so eager deletion would break
-    * the consumer; see SharedIntermediates for the same contract).
-    */
-  private val tempTrees = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  sys.addShutdownHook {
-    // Per-tree Try: one undeletable tree (e.g. a file pinned by a
-    // still-draining sink) must not abort cleanup of the others.
-    tempTrees.keys.foreach { p =>
-      scala.util.Try {
-        val path = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.exists(path)) {
-          java.nio.file.Files
-            .walk(path)
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        }
-      }.failed.foreach { e =>
-        // A pinned/undeletable tree must not abort the loop, but it must
-        // leave a diagnostic: the leaked path is otherwise invisible.
-        System.err.println(
-          s"[EventStream] temp-tree cleanup failed for $p: ${e.getClass.getName}: ${e.getMessage}")
-      }
-    }
-  }
-
-  private def registerForCleanup(dir: java.io.File): Unit =
-    tempTrees.put(dir.getAbsolutePath, ())
-
   /** µs-precision java.sql.Timestamp from unix microseconds (the
     * constructor alone truncates to ms; setNanos restores the full
     * sub-second fraction so session bounds round-trip exactly against
@@ -371,9 +341,8 @@ object EventStream {
     val tmp = Files.createTempDirectory("graft-restart-").toFile
     // The returned DataFrame reads the parquet sink lazily, so the tree
     // cannot be deleted here; a registered query leaks ~an events-table
-    // copy per sweep otherwise. Same shutdown-hook contract as
-    // SharedIntermediates.
-    registerForCleanup(tmp)
+    // copy per sweep otherwise.
+    graft.queries.Scratch.deleteAtExit(tmp.getAbsolutePath)
     val srcDir = new java.io.File(tmp, "src"); srcDir.mkdirs()
     val outDir = new java.io.File(tmp, "out").getAbsolutePath
     val ckpt = new java.io.File(tmp, "ckpt").getAbsolutePath
@@ -921,13 +890,7 @@ object EventStream {
       val conf = ss.sparkContext.hadoopConfiguration
       val p = new org.apache.hadoop.fs.Path(srcPath)
       val fs = p.getFileSystem(conf)
-      val files =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).filter { st =>
-            val n = st.getPath.getName
-            st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-          }
-        else Array(fs.getFileStatus(p))
+      val files = org.apache.spark.sql.graft.FooterSchema.dataFiles(fs, p)
       if (files.isEmpty || files.length > FooterCountMaxFiles) None
       else Some(files.map { st =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)

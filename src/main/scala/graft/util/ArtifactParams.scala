@@ -68,13 +68,7 @@ object ArtifactParams {
     val dirPath = new org.apache.hadoop.fs.Path(dir)
     val fs = dirPath.getFileSystem(conf)
     require(fs.exists(dirPath), s"artifact params at $dir: path does not exist")
-    val files =
-      if (fs.getFileStatus(dirPath).isDirectory)
-        fs.listStatus(dirPath).filter { st =>
-          val n = st.getPath.getName
-          st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-        }.map(_.getPath)
-      else Array(dirPath)
+    val files = org.apache.spark.sql.graft.FooterSchema.dataFiles(fs, dirPath).map(_.getPath)
     val rows = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
     files.foreach { p =>
       val reader = org.apache.parquet.hadoop.ParquetReader

@@ -13,6 +13,7 @@ import scala.collection.mutable
   * tested without a network:
   *  - fully-qualified `project.dataset.table` ids under this client's
   *    project;
+  *  - empty input raises before any job is submitted (the trait's guard);
   *  - WRITE_TRUNCATE replaces rows AND schema; WRITE_APPEND creates the
   *    table if absent;
   *  - on append, new fields are accepted only with ALLOW_FIELD_ADDITION
@@ -48,9 +49,10 @@ final class InMemoryBigQuery(val project: String) extends BigQueryLoadClient {
       case Array(p, d, t) if p == project && d.nonEmpty && t.nonEmpty => ()
       case _ => fail(s"invalid table id '$tableId' for project '$project'")
     }
-    jobLog += ((tableId, disposition, schemaUpdateOptions))
     val incomingSchema = df.schema
     val incoming = df.collect().toSeq
+    if (incoming.isEmpty) throw new Sink.EmptyInputException(s"no rows to load into $tableId")
+    jobLog += ((tableId, disposition, schemaUpdateOptions))
     val result = (tables.get(tableId), disposition) match {
       case (None, _) | (_, Sink.WriteTruncate) =>
         Table(incomingSchema, incoming)

@@ -7,9 +7,12 @@ import org.apache.spark.sql.functions._
   * checkpoint by default, RELIABLE checkpoint when
   * `spark.graft.checkpoint.dir` is set — both modes value-identical, so
   * a deployment can buy executor-loss durability without touching any
-  * operator.
+  * operator. The specs share one SparkContext, which holds one
+  * checkpoint dir, so every reliable case uses the same dir.
   */
 class CheckpointModeSpec extends SparkSpec {
+
+  private lazy val ckptDir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt").toString
 
   test("eagerCheckpoint: local and reliable modes are value-identical") {
     val df = spark.range(0, 1000).select(
@@ -17,7 +20,7 @@ class CheckpointModeSpec extends SparkSpec {
     val local = Caching.eagerCheckpoint(df)
     assert(local.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt").toString
+    val dir = ckptDir
     val ss = spark.newSession()
     ss.conf.set("spark.graft.checkpoint.dir", dir)
     val dfR = ss.range(0, 1000).select(
@@ -35,7 +38,7 @@ class CheckpointModeSpec extends SparkSpec {
   test("eagerCheckpoint: reliable mode computes the frame once") {
     // the eager checkpoint writes its files from the one job that
     // computes the frame, so no persist is needed around it
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-once").toString
+    val dir = ckptDir
     val ss = spark.newSession()
     ss.conf.set("spark.graft.checkpoint.dir", dir)
     val rows = ss.sparkContext.longAccumulator("checkpointed rows")
@@ -47,10 +50,25 @@ class CheckpointModeSpec extends SparkSpec {
   test("q_vocab_growth is identical in both checkpoint modes") {
     val fn = SparkEntry.queries("q_vocab_growth")
     val base = fn(spark, sf("sf0.001")).collect().map(_.toSeq).sortBy(_.head.toString)
-    val dir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt2").toString
+    val dir = ckptDir
     val ss = spark.newSession()
     ss.conf.set("spark.graft.checkpoint.dir", dir)
     val rel = fn(ss, sf("sf0.001")).collect().map(_.toSeq).sortBy(_.head.toString)
     assert(base.toSeq == rel.toSeq)
+  }
+
+  test("eagerCheckpoint: a second checkpoint dir on one context fails loudly") {
+    val first = spark.newSession()
+    first.conf.set("spark.graft.checkpoint.dir", ckptDir)
+    Caching.eagerCheckpoint(first.range(0, 10).toDF())
+    val other = java.nio.file.Files.createTempDirectory("graft-other-ckpt").toString
+    val second = spark.newSession()
+    second.conf.set("spark.graft.checkpoint.dir", other)
+    val e = intercept[IllegalStateException] {
+      Caching.eagerCheckpoint(second.range(0, 10).toDF())
+    }
+    assert(e.getMessage.contains("graft-other-ckpt"), e.getMessage)
+    assert(java.nio.file.Files.list(java.nio.file.Paths.get(other)).count() == 0,
+      "nothing may be written to the mismatched dir")
   }
 }

@@ -15,13 +15,14 @@ import scala.jdk.CollectionConverters._
 /** Contract spec for the HTTP BigQuery load-job client — the last
   * environment-bound seam, closed the same way the extract side's pager
   * was: a loopback `com.sun.net.httpserver` stub speaks the PUBLIC
-  * BigQuery REST v2 load-job shapes (`jobs.insert` multipart upload →
+  * BigQuery REST v2 load-job shapes (`jobs.insert` with `sourceUris` →
   * PENDING/RUNNING job, `jobs.get` polling → DONE with
-  * `statistics.load.outputRows` or `status.errorResult`), enforces the
-  * documented job semantics (truncate replaces, append unions fields
-  * only under ALLOW_FIELD_ADDITION), and the spec drives the full
+  * `statistics.load.outputRows` or `status.errorResult`), reads the rows
+  * from the staged NDJSON shards, enforces the documented job semantics
+  * (truncate replaces, append unions fields only under
+  * ALLOW_FIELD_ADDITION), and the spec drives the full
   * `BigQuerySink → HttpBigQueryLoadClient` path over real HTTP. JDK-only
-  * on both ends (`/root/reference/data_load.py:40-70` is the contract
+  * on both ends (the reference's `data_load.py:27-70` is the contract
   * source).
   */
 class HttpBigQuerySinkSpec extends SparkSpec {
@@ -53,6 +54,7 @@ class HttpBigQuerySinkSpec extends SparkSpec {
 
   override def afterAll(): Unit = {
     if (server != null) server.stop(0)
+    roots.asScala.foreach(r => graft.queries.Scratch.delete(r.toString))
     super.afterAll()
   }
 
@@ -87,31 +89,18 @@ class HttpBigQuerySinkSpec extends SparkSpec {
       val auth = ex.getRequestHeaders.getFirst("Authorization")
       authHeaders.add(if (auth == null) "<none>" else auth)
       if (auth != s"Bearer $Token") return (401, "")
-      if (ex.getRequestMethod == "POST" && path.endsWith("/jobs") && path.contains("/upload/")) {
+      if (ex.getRequestMethod == "POST" && path.endsWith("/jobs")) {
         insertJob(ex)
-      } else if (ex.getRequestMethod == "POST" && path.endsWith("/jobs")) {
-        insertJobStaged(ex)
       } else if (ex.getRequestMethod == "GET" && path.contains("/jobs/")) {
         getJob(path.substring(path.lastIndexOf('/') + 1))
       } else (404, "")
     }
 
-    private def insertJob(ex: HttpExchange): (Int, String) = {
-      val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      val boundary = ("boundary=(.+)").r
-        .findFirstMatchIn(ex.getRequestHeaders.getFirst("Content-Type")).get.group(1)
-      val parts = body.split(java.util.regex.Pattern.quote(s"--$boundary"))
-        .map(_.trim).filter(p => p.nonEmpty && p != "--")
-      val config = parts(0).substring(parts(0).indexOf("\r\n\r\n") + 4)
-      val ndjson = parts(1).substring(parts(1).indexOf("\r\n\r\n") + 4)
-      applyLoad(config, ndjson.linesIterator.filter(_.nonEmpty).map(parseNdjsonRow).toVector)
-    }
-
-    /** The GCS-staged shape: plain-JSON body IS the config; rows come
-      * from the `sourceUris` shard files (the stub resolves `file:` URIs
-      * from local disk — its bucket stand-in).
+    /** The plain-JSON body IS the config; rows come from the
+      * `sourceUris` shard files (the stub resolves `file:` URIs from
+      * local disk — its bucket stand-in).
       */
-    private def insertJobStaged(ex: HttpExchange): (Int, String) = {
+    private def insertJob(ex: HttpExchange): (Int, String) = {
       val config = new String(ex.getRequestBody.readAllBytes(), UTF_8)
       val uris = ("\"sourceUris\"\\s*:\\s*\\[([^\\]]*)\\]").r
         .findFirstMatchIn(config).map(_.group(1)).getOrElse("")
@@ -166,9 +155,20 @@ class HttpBigQuerySinkSpec extends SparkSpec {
     }
   }
 
+  /** Fresh staging roots, the local stand-in for the bucket prefix;
+    * every root is deleted after the spec.
+    */
+  private val roots = new ConcurrentLinkedQueue[java.nio.file.Path]()
+  private def newRoot(): java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory("bqstage")
+    roots.add(r)
+    r
+  }
+  private def stageRoot(): String = newRoot().toString
+
   private def freshSink(project: String = "proj", dataset: String = "ds") =
     new BigQuerySink(
-      new HttpBigQueryLoadClient(base, project, pollMillis = 5,
+      new HttpBigQueryLoadClient(base, project, stageRoot(), pollMillis = 5,
         creds = CredentialProvider.static(Token)),
       dataset)
 
@@ -210,7 +210,7 @@ class HttpBigQuerySinkSpec extends SparkSpec {
   }
 
   test("append adding a field WITHOUT the option surfaces the job errorResult") {
-    val client = new HttpBigQueryLoadClient(base, "proj", pollMillis = 5,
+    val client = new HttpBigQueryLoadClient(base, "proj", stageRoot(), pollMillis = 5,
       creds = CredentialProvider.static(Token))
     client.loadTable(df(s2, Row(1L, "a")), "proj.ds.t_noevolve", Sink.WriteTruncate, Set.empty)
     val s3 = s2.add(StructField("extra", StringType, nullable = true))
@@ -232,7 +232,7 @@ class HttpBigQuerySinkSpec extends SparkSpec {
   test("an HTTP-level failure surfaces as the LoadJobException (GoogleAPIError path)") {
     // unreachable endpoint: connection refused → wrapped, like the
     // reference's blanket RuntimeError conversion
-    val dead = new HttpBigQueryLoadClient("http://127.0.0.1:1", "proj", pollMillis = 5)
+    val dead = new HttpBigQueryLoadClient("http://127.0.0.1:1", "proj", stageRoot(), pollMillis = 5)
     intercept[BigQuerySink.LoadJobException] {
       dead.loadTable(df(s2, Row(1L, "a")), "proj.ds.t", Sink.WriteAppend, Set.empty)
     }
@@ -246,13 +246,13 @@ class HttpBigQuerySinkSpec extends SparkSpec {
   }
 
   test("missing or wrong bearer -> 401 surfaces as LoadJobException naming the seam") {
-    val unauthed = new HttpBigQueryLoadClient(base, "proj", pollMillis = 5,
+    val unauthed = new HttpBigQueryLoadClient(base, "proj", stageRoot(), pollMillis = 5,
       creds = CredentialProvider.none)
     val e1 = intercept[BigQuerySink.LoadJobException] {
       unauthed.loadTable(df(s2, Row(1L, "a")), "proj.ds.t401", Sink.WriteTruncate, Set.empty)
     }
     assert(e1.getMessage.contains("401") && e1.getMessage.contains("GRAFT_AUTH_TOKEN"))
-    val wrong = new HttpBigQueryLoadClient(base, "proj", pollMillis = 5,
+    val wrong = new HttpBigQueryLoadClient(base, "proj", stageRoot(), pollMillis = 5,
       creds = CredentialProvider.static("stale-token"))
     val e2 = intercept[BigQuerySink.LoadJobException] {
       wrong.loadTable(df(s2, Row(1L, "a")), "proj.ds.t401", Sink.WriteTruncate, Set.empty)
@@ -279,7 +279,7 @@ class HttpBigQuerySinkSpec extends SparkSpec {
     stuck.start()
     try {
       val client = new HttpBigQueryLoadClient(
-        s"http://127.0.0.1:${stuck.getAddress.getPort}", "proj",
+        s"http://127.0.0.1:${stuck.getAddress.getPort}", "proj", stageRoot(),
         pollMillis = 5, creds = CredentialProvider.static(Token), maxWaitMillis = 200)
       val e = intercept[BigQuerySink.LoadJobException] {
         client.loadTable(df(s2, Row(1L, "a")), "proj.ds.tstuck", Sink.WriteTruncate, Set.empty)
@@ -288,12 +288,11 @@ class HttpBigQuerySinkSpec extends SparkSpec {
     } finally stuck.stop(0)
   }
 
-  // ---- GCS-staged load path (stagingRoot): sourceUris jobs.insert ----
+  // ---- the staging directory: shards, sourceUris, cleanup ----
 
   private def stagedClient(root: java.nio.file.Path, creds: CredentialProvider =
       CredentialProvider.static(Token)) =
-    new HttpBigQueryLoadClient(base, "proj", pollMillis = 5,
-      creds = creds, stagingRoot = Some(root.toString))
+    new HttpBigQueryLoadClient(base, "proj", root.toString, pollMillis = 5, creds = creds)
 
   private def stageDirsUnder(root: java.nio.file.Path): Seq[String] =
     if (!java.nio.file.Files.exists(root)) Seq.empty
@@ -301,7 +300,7 @@ class HttpBigQuerySinkSpec extends SparkSpec {
       .map(_.getFileName.toString).filter(_.startsWith("graft-stage-")).toSeq
 
   test("staged load: executors write shards, jobs.insert carries sourceUris, lifecycle completes") {
-    val root = java.nio.file.Files.createTempDirectory("bqstage")
+    val root = newRoot()
     requests.clear(); configsSeen.clear()
     val sink = new BigQuerySink(stagedClient(root), "ds")
     val n = sink.load(
@@ -310,52 +309,70 @@ class HttpBigQuerySinkSpec extends SparkSpec {
     assert(n === 3)
     val t = tables("proj.ds.010_warner_dl_lf_cfg_staged")
     assert(t.rows.size === 3 && t.fields.toSet === Set("id", "name"))
-    // wire shape: a PLAIN jobs.insert (no /upload/), config carries the
-    // shard URIs and the same knobs the multipart path sends
+    // wire shape: a plain-JSON jobs.insert (no /upload/) whose config
+    // carries the shard URIs
     val post = requests.asScala.find(_.startsWith("POST")).get
     assert(!post.contains("/upload/"), post)
     val cfg = configsSeen.asScala.last
     assert(cfg.contains("\"sourceUris\":[\"file:"), cfg)
     assert(cfg.contains("WRITE_TRUNCATE") && cfg.contains("ALLOW_FIELD_ADDITION"))
     assert(cfg.contains("NEWLINE_DELIMITED_JSON") && cfg.contains("\"autodetect\":true"))
-    // the client polled the same lifecycle as multipart
+    // the client polled to DONE
     assert(requests.asScala.count(_.startsWith("GET")) >= 2)
     // staging directory is cleaned up after the job completes
     assert(stageDirsUnder(root).isEmpty, stageDirsUnder(root))
   }
 
-  test("staged zero-row frame loads successfully (0 rows) — same outcome as the multipart path") {
-    // a zero-row frame previously succeeded via multipart but could
-    // throw on the staged path; now both body paths yield a zero-row
-    // load. Spark writes at least one (empty) shard even for a
-    // zero-partition frame, so this flows through the staged body; the
-    // defensive no-shards fallback (a filesystem listing no part files)
-    // reuses the multipart body for the same zero-row outcome.
-    val root = java.nio.file.Files.createTempDirectory("bqstage")
-    requests.clear(); configsSeen.clear()
-    val zeroPart = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s2)
-    val n = stagedClient(root).loadTable(zeroPart, "proj.ds.t_staged_empty", Sink.WriteTruncate, Set.empty)
-    assert(n === 0)
-    // and the staging directory is still cleaned up
+  // the client's empty guard reads the staged shard lengths: zero bytes
+  // is zero rows, and that raises before any HTTP request
+  private def assertEmptyGuard(empty: org.apache.spark.sql.DataFrame, table: String): Unit = {
+    val root = newRoot()
+    requests.clear()
+    intercept[Sink.EmptyInputException] {
+      stagedClient(root).loadTable(empty, table, Sink.WriteTruncate, Set.empty)
+    }
+    assert(requests.isEmpty, requests)
     assert(stageDirsUnder(root).isEmpty, stageDirsUnder(root))
+    assert(!tables.contains(table))
   }
 
-  test("staged config knobs are byte-identical to the multipart path's") {
-    configsSeen.clear()
-    freshSink().load(df(s2, Row(1L, "a")), "cfg_wire", Sink.WriteAppend)
-    val multipartCfg = configsSeen.asScala.last
-    val root = java.nio.file.Files.createTempDirectory("bqstage")
-    new BigQuerySink(stagedClient(root), "ds")
-      .load(df(s2, Row(2L, "b")), "cfg_wire", Sink.WriteAppend)
-    val stagedCfg = configsSeen.asScala.last
-    // strip only the sourceUris suffix; everything else must match byte
-    // for byte (disposition, schema options, format, autodetect, table)
-    val stripped = stagedCfg.replaceFirst(",\"sourceUris\":\\[[^\\]]*\\]", "")
-    assert(stripped === multipartCfg, s"\nstaged:    $stagedCfg\nmultipart: $multipartCfg")
+  test("zero-partition frame raises before any request") {
+    val zeroPart = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s2)
+    assert(zeroPart.rdd.getNumPartitions === 0)
+    assertEmptyGuard(zeroPart, "proj.ds.t_empty_zero_part")
+  }
+
+  test("filtered-to-empty frame raises before any request") {
+    val filtered = df(s2, Row(1L, "a"), Row(2L, "b")).filter("id > 100")
+    assert(filtered.rdd.getNumPartitions === 2)
+    assertEmptyGuard(filtered, "proj.ds.t_empty_filtered")
+  }
+
+  test("a load starts the jobs of a plain NDJSON write") {
+    val frame = spark.range(0, 1000, 1, 4).toDF()
+    val l = new QueryListener
+    spark.sparkContext.addSparkListener(l)
+    def jobsOf(body: => Unit): Int = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      l.reset()
+      body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      l.jobSpans.size
+    }
+    try {
+      // nothing is computed beside the shard write: the same count as
+      // writing the frame's NDJSON to a fresh path, whatever AQE makes of it
+      var n = 0L
+      val plain = jobsOf(frame.toJSON.write.text(s"${stageRoot()}/plain"))
+      val load = jobsOf { n = freshSink().load(frame, "cfg_jobs", Sink.WriteTruncate) }
+      assert(plain > 0)
+      assert(load == plain, s"a load ran $load jobs, a plain write $plain")
+      assert(n === 1000)
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("staged append adding a field without the option surfaces the errorResult and still cleans up") {
-    val root = java.nio.file.Files.createTempDirectory("bqstage")
+    val root = newRoot()
     val client = stagedClient(root)
     client.loadTable(df(s2, Row(1L, "a")), "proj.ds.t_staged_noevolve", Sink.WriteTruncate, Set.empty)
     val s3 = s2.add(StructField("extra", StringType, nullable = true))
@@ -367,7 +384,7 @@ class HttpBigQuerySinkSpec extends SparkSpec {
   }
 
   test("staged 401 surfaces the auth guidance and leaves no table or staging litter") {
-    val root = java.nio.file.Files.createTempDirectory("bqstage")
+    val root = newRoot()
     val unauthed = stagedClient(root, creds = CredentialProvider.none)
     val e = intercept[BigQuerySink.LoadJobException] {
       unauthed.loadTable(df(s2, Row(1L, "a")), "proj.ds.t_staged_401", Sink.WriteTruncate, Set.empty)
@@ -443,7 +460,7 @@ class HttpBigQuerySinkSpec extends SparkSpec {
     reject.start()
     try {
       val client = new HttpBigQueryLoadClient(
-        s"http://127.0.0.1:${reject.getAddress.getPort}", "proj",
+        s"http://127.0.0.1:${reject.getAddress.getPort}", "proj", stageRoot(),
         pollMillis = 5, creds = CredentialProvider.static(Token))
       val e = intercept[BigQuerySink.LoadJobException] {
         client.loadTable(df(s2, Row(1L, "a")), "proj.ds.trej", Sink.WriteTruncate, Set.empty)

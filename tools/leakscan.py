@@ -57,10 +57,6 @@ ALLOWLIST = [
     ("-bearer-r12",
      "loopback-test bearer constants (HttpPagedSourceSpec/HttpBigQuerySinkSpec) — "
      "self-evidently fake fixtures asserting the Authorization header"),
-    ("gs://bucket",
-     "doc-comment PLACEHOLDER in HttpBigQueryLoadClient describing the staged-load "
-     "contract's generic `gs://bucket/prefix` shape — a literal stand-in, not a real "
-     "bucket (no host beyond the word 'bucket')"),
 ]
 
 
