@@ -71,18 +71,6 @@ private[graft] object Caching {
   def release(df: DataFrame, blocking: Boolean = true): Unit =
     checkpointRdds(df).foreach(_.unpersist(blocking))
 
-  /** Spread `df` to the session's default parallelism when its scan
-    * arrives UNDER-SPLIT — fewer physical partitions than cores (r21, opt
-    * guide §2.5 input skew / §1.2): the bench fixtures are single-file,
-    * single-row-group parquet, so a CPU-heavy projection placed directly
-    * over the scan (tokenize-in-place, shingling) runs on ONE task no
-    * matter the cluster size — parquet cannot split inside a row group.
-    * The round-robin exchange moves the rows once; every downstream
-    * per-row projection and aggregate is placement-independent, so
-    * results are unchanged (the ann_recall_at_k precedent). At real
-    * scale the scan has more splits than cores and this is the identity
-    * — nothing is re-shuffled.
-    */
   /** Stats gate for substrate materialization (r21): persisting a shared
     * substrate so N consumers read one pass instead of N re-scans only
     * pays once the substrate is big enough that the re-scans dominate
@@ -158,6 +146,18 @@ private[graft] object Caching {
     */
   val SpreadTargetSplitBytes: Long = 64L << 10
 
+  /** Spread `df` to the session's default parallelism when its scan
+    * arrives UNDER-SPLIT — fewer physical partitions than cores (r21, opt
+    * guide §2.5 input skew / §1.2): the bench fixtures are single-file,
+    * single-row-group parquet, so a CPU-heavy projection placed directly
+    * over the scan (tokenize-in-place, shingling) runs on ONE task no
+    * matter the cluster size — parquet cannot split inside a row group.
+    * The round-robin exchange moves the rows once; every downstream
+    * per-row projection and aggregate is placement-independent, so
+    * results are unchanged (the ann_recall_at_k precedent). At real
+    * scale the scan has more splits than cores and this is the identity
+    * — nothing is re-shuffled.
+    */
   def spreadToParallelism(df: DataFrame, minBytes: Long = 0L): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // minBytes: per-call-site floor for projections cheap enough that

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.util.JsonLog
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
@@ -73,12 +73,14 @@ object Tables {
     if (name == "events") normalizeTs(df) else df
   }
 
-  /** Events with a time-range predicate applied to the RAW nanosecond long
-    * column, before the µs conversion — so the range reaches the parquet
-    * scan as a pushable long comparison (row-group/page pruning at scale).
-    * Filtering after `timestamp_micros(ts div 1000)` would defeat pushdown:
-    * Catalyst cannot invert the expression. Bounds are UTC `yyyy-MM-dd`
-    * (or full timestamps); start inclusive, end exclusive.
+  /** Events with a time-range predicate applied to the RAW `ts` column,
+    * before [[normalizeTs]] — so the range reaches the parquet scan as a
+    * pushable comparison (row-group/page pruning at scale). Filtering
+    * after the conversion would defeat pushdown: Catalyst cannot invert
+    * `timestamp_micros(ts div 1000)` or the NTZ cast. The bound literal
+    * takes the raw column's encoding: nanos as long, an NTZ literal
+    * (constant-folded), or a timestamp. Bounds are UTC `yyyy-MM-dd` (or
+    * full timestamps); start inclusive, end exclusive.
     */
   def eventsRanged(
       s: SparkSession,
@@ -95,27 +97,15 @@ object Tables {
         .toInstant(java.time.ZoneOffset.UTC)
         .getEpochSecond * 1000000000L
     }
-    val ranged = raw.schema.fields.find(_.name == "ts").map(_.dataType) match {
-      case Some(LongType) =>
-        var df = raw
-        startInclusive.foreach(d => df = df.filter(col("ts") >= lit(ns(d))))
-        endExclusive.foreach(d => df = df.filter(col("ts") < lit(ns(d))))
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case Some(TimestampNTZType) =>
-        // Filter on the raw NTZ column with an NTZ literal (constant-folded
-        // → pushable scan predicate), THEN cast — same ordering rationale
-        // as the nanos branch.
-        var df = raw
-        startInclusive.foreach(d => df = df.filter(col("ts") >= to_timestamp_ntz(lit(d))))
-        endExclusive.foreach(d => df = df.filter(col("ts") < to_timestamp_ntz(lit(d))))
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ =>
-        var df = raw
-        startInclusive.foreach(d => df = df.filter(col("ts") >= lit(d).cast("timestamp")))
-        endExclusive.foreach(d => df = df.filter(col("ts") < lit(d).cast("timestamp")))
-        df
+    val bound: String => Column = raw.schema.fields.find(_.name == "ts").map(_.dataType) match {
+      case Some(LongType)         => d => lit(ns(d))
+      case Some(TimestampNTZType) => d => to_timestamp_ntz(lit(d))
+      case _                      => d => lit(d).cast("timestamp")
     }
-    withTsUs(ranged)
+    var df = raw
+    startInclusive.foreach(d => df = df.filter(col("ts") >= bound(d)))
+    endExclusive.foreach(d => df = df.filter(col("ts") < bound(d)))
+    normalizeTs(df)
   }
 }
 

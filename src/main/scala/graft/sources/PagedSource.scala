@@ -11,11 +11,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.{Map => JMap}
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 connector with the shape of the reference's LFM analytic
-  * source (`/root/reference/data_extract.py:44-92`, SURVEY.md §2.1 S1/S2):
-  * a *paged* remote analytics API whose server evaluates filters.
+  * source (`data_extract.py:44-92`, SURVEY.md §2.1 S1/S2): a *paged*
+  * remote analytics API whose server evaluates filters. Every page is one
+  * GET through [[HttpPageClient]], with the pushed filters, columns,
+  * limit and group-by serialized into the request.
   *
   * - **Pages become InputPartitions** (S2): the reference's
   *   `for page in client.async_analytic_query(...)` + `pd.concat` union is
@@ -23,25 +24,21 @@ import scala.jdk.CollectionConverters._
   *   parallel, and the union is implicit. At scale: one partition per page
   *   token, no driver-side concat, no memory cliff.
   * - **SupportsPushDownFilters** (the reference pushes its brand IN-list
-  *   and date range into the API query): pushed filters are evaluated
-  *   by the page server ([[PagedSource.page]] in generator mode, the HTTP
-  *   server otherwise) and reported back so Catalyst drops the residual
-  *   Filter node.
+  *   and date range into the API query): a filter is pushed exactly when
+  *   [[HttpPageClient.encodeFilter]] can put it on the wire; the server
+  *   evaluates it and Catalyst drops the residual Filter node.
   * - **SupportsPushDownRequiredColumns**: column pruning reaches the
   *   source (the reference requests exactly metrics ∪ dims, P1).
   *
-  * Two backing servers:
-  *  - default: a deterministic in-memory generator (offline env — zero
-  *    egress);
-  *  - `.option("endpoint", "http://…")`: a real paged HTTP API spoken
-  *    through [[HttpPageClient]] — one GET per page with the pushed
-  *    filters/columns/limit/group-by serialized into the request
-  *    (contract-tested against a loopback stub in HttpPagedSourceSpec;
-  *    a production build points it at the live service).
+  * Options: `endpoint` (required) is the page API's URL; `pageSize`
+  * (default 1000) the rows per page; `tokenFile` names a bearer-token file
+  * read executor-side (the mounted-secret shape) — without it the
+  * env/property resolver applies. Only the PATH travels through the plan,
+  * never the token.
   *
   * {{{
   * spark.read.format("graft.sources.PagedSource")
-  *   .option("rows", "10000").option("pageSize", "1000")   // generator
+  *   .option("endpoint", "http://127.0.0.1:8080/analytics").option("pageSize", "1000")
   *   .load().filter($"brand_id".isin(1, 2)).select("brand_id", "metric")
   * }}}
   */
@@ -52,7 +49,12 @@ class PagedSource extends TableProvider {
       schema: StructType,
       partitioning: Array[Transform],
       properties: JMap[String, String]
-  ): Table = new PagedTable(properties.asScala.toMap)
+  ): Table = {
+    val opts = new CaseInsensitiveStringMap(properties)
+    val endpoint = Option(opts.get("endpoint")).getOrElse(throw new IllegalArgumentException(
+      "graft.sources.PagedSource needs the `endpoint` option: the URL of the paged analytics API"))
+    new PagedTable(endpoint, opts.getInt("pageSize", 1000), Option(opts.get("tokenFile")))
+  }
 }
 
 object PagedSource {
@@ -63,15 +65,18 @@ object PagedSource {
     StructField("metric", DoubleType, nullable = false)
   ))
 
-  /** Bearer-token source for HTTP mode: an explicit `tokenFile` option
-    * wins; otherwise the env/property resolver
-    * ([[graft.auth.CredentialProvider.resolve]]) applies on whichever
-    * side (driver planning, executor reader) makes the request.
+  /** Bearer-token source: an explicit `tokenFile` option wins; otherwise
+    * the env/property resolver ([[graft.auth.CredentialProvider.resolve]])
+    * applies on whichever side (driver planning, executor reader) makes
+    * the request.
     */
   def creds(tokenFile: Option[String]): graft.auth.CredentialProvider =
     tokenFile.fold(graft.auth.CredentialProvider.resolve)(graft.auth.CredentialProvider.fromFile)
 
-  /** Deterministic row for global index i — the fake "server". */
+  /** Deterministic row for global index i — the corpus page servers
+    * (the loopback stubs, perfbench's PageStub) serve and specs check
+    * results against.
+    */
   def row(i: Long): (Long, String, Double) = {
     val brand = i % 97
     val day = (i / 97) % 28 + 1
@@ -79,10 +84,10 @@ object PagedSource {
     (brand, f"2024-01-$day%02d", metric)
   }
 
-  /** Server-side filter evaluation shared by the in-memory generator
-    * ([[page]]) and the loopback HTTP stub servers — ONE
-    * definition of what a pushed filter means, so claiming a filter in
-    * `pushFilters` can never drift from how it is evaluated.
+  /** What a pushed filter means, evaluated server-side by the page
+    * servers over [[row]]s. Every shape [[HttpPageClient.encodeFilter]]
+    * ships is matched here; IsNotNull is vacuous on this non-nullable
+    * schema.
     */
   def accept(filters: Seq[Filter], r: (Long, String, Double)): Boolean = filters.forall {
     case In("brand_id", vs)                => vs.exists(v => v.asInstanceOf[Number].longValue == r._1)
@@ -100,76 +105,17 @@ object PagedSource {
     case IsNotNull(_)                      => true
     case _                                 => true
   }
-
-  /** What one page returns, as typed values (Long, String, Double): the
-    * rows of `[page·pageSize, +pageSize)` that pass [[accept]], projected
-    * to the pruned columns and capped at the pushed limit — or, when an
-    * aggregation is pushed, the page's per-group partial count/sum/min/max
-    * in [[PushedAgg.outputSchema]] order (the server-side group-by; Spark's
-    * final aggregate merges across pages, so cross-page groups stay
-    * correct). Generator mode serves this in-process; HTTP mode gets the
-    * same values from the server ([[HttpPageClient.page]]).
-    */
-  def page(p: PagePartition, q: PageQuery): Iterator[Seq[Any]] = {
-    val start = p.page.toLong * p.pageSize
-    val end = math.min(start + p.pageSize, p.totalRows)
-    val rows = (start until end).iterator.map(row).filter(accept(q.filters, _))
-    def value(r: (Long, String, Double), c: String): Any = c match {
-      case "brand_id" => r._1
-      case "date_str" => r._2
-      case "metric"   => r._3
-    }
-    q.agg match {
-      case None =>
-        val cols = q.required.fieldNames.toSeq
-        // a partition never needs more than `limit` matching rows for a
-        // global limit — stop generating early (the paged API stops
-        // fetching)
-        q.limit.fold(rows)(rows.take).map(r => cols.map(value(r, _)))
-      case Some(a) =>
-        // (count, sum, min, max) of the metric per group, insertion-ordered;
-        // group state per page is bounded by the page's distinct groups
-        val acc = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], (Long, Double, Double, Double)]
-        rows.foreach { r =>
-          val key = a.groupCols.map(value(r, _))
-          val (c, s, mn, mx) =
-            acc.getOrElse(key, (0L, 0.0, Double.PositiveInfinity, Double.NegativeInfinity))
-          acc(key) = (c + 1, s + r._3, math.min(mn, r._3), math.max(mx, r._3))
-        }
-        acc.iterator.map { case (key, (c, s, mn, mx)) =>
-          key ++ a.aggs.map {
-            case _: CountStar | _: Count => c: Any
-            case _: Sum                  => s: Any
-            case _: Min                  => mn: Any
-            case _: Max                  => mx: Any
-            case f                       => throw new IllegalStateException(s"unsupported pushed agg $f")
-          }
-        }
-    }
-  }
 }
 
-final class PagedTable(props: Map[String, String]) extends Table with SupportsRead {
+final class PagedTable(endpoint: String, pageSize: Int, tokenFile: Option[String])
+    extends Table with SupportsRead {
   override def name(): String = "graft_paged_source"
   override def schema(): StructType = PagedSource.schema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = props ++ options.asScala
-    new PagedScanBuilder(
-      totalRows = merged.getOrElse("rows", "10000").toLong,
-      pageSize = merged.getOrElse("pageSize", "1000").toInt,
-      // `endpoint` switches the backing server from the in-memory
-      // generator to a real HTTP pager (HttpPageClient); `rows` is then
-      // ignored in favor of the server's meta answer. `tokenFile` names
-      // a bearer-token file read executor-side (the mounted-secret
-      // shape); without it the env/property resolver applies. Only the
-      // PATH travels through the plan, never the token.
-      endpoint = merged.get("endpoint"),
-      tokenFile = merged.get("tokenFile")
-    )
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new PagedScanBuilder(endpoint, pageSize, tokenFile)
 }
 
 /** Pushed-aggregation spec: group columns + per-page partial aggregates.
@@ -207,12 +153,8 @@ final case class PageQuery(
   def readSchema: StructType = agg.fold(required)(_.outputSchema)
 }
 
-final class PagedScanBuilder(
-    totalRows: Long,
-    pageSize: Int,
-    endpoint: Option[String] = None,
-    tokenFile: Option[String] = None
-) extends ScanBuilder
+final class PagedScanBuilder(endpoint: String, pageSize: Int, tokenFile: Option[String])
+    extends ScanBuilder
     with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit
@@ -268,25 +210,15 @@ final class PagedScanBuilder(
     true
   }
 
-  /** Accept the filter shapes the LFM query language supports (IN on the
-    * brand key, comparisons on the date string — P2/P3); anything else is
-    * left for Spark to evaluate as a residual. Claiming a filter the
-    * reader does not evaluate would silently return wrong results, so the
-    * column allow-list must match [[PagedSource.accept]] exactly.
+  /** Push what the page API evaluates — the filters
+    * [[HttpPageClient.encodeFilter]] can put on the wire (IN and
+    * comparisons on the brand key and date string, P2/P3), plus IsNotNull,
+    * vacuous on this non-nullable schema. Anything else stays a residual
+    * for Spark.
     */
-  private val pushableColumns = Set("brand_id", "date_str")
-
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, residual) = filters.partition {
-      case In(c, _) => pushableColumns(c)
-      case EqualTo(c, _) => pushableColumns(c)
-      case GreaterThan(c, _) => pushableColumns(c)
-      case GreaterThanOrEqual(c, _) => pushableColumns(c)
-      case LessThan(c, _) => pushableColumns(c)
-      case LessThanOrEqual(c, _) => pushableColumns(c)
-      case _: IsNotNull => true
-      case _ => false
-    }
+    val (supported, residual) =
+      filters.partition(f => f.isInstanceOf[IsNotNull] || HttpPageClient.encodeFilter(f).isDefined)
     pushed = supported
     residual
   }
@@ -297,16 +229,11 @@ final class PagedScanBuilder(
     required = requiredSchema
 
   override def build(): Scan =
-    new PagedScan(totalRows, pageSize, PageQuery(pushed.toSeq, required, limit, agg), endpoint, tokenFile)
+    new PagedScan(endpoint, pageSize, tokenFile, PageQuery(pushed.toSeq, required, limit, agg))
 }
 
-final class PagedScan(
-    totalRows: Long,
-    pageSize: Int,
-    q: PageQuery,
-    endpoint: Option[String] = None,
-    tokenFile: Option[String] = None
-) extends Scan with Batch {
+final class PagedScan(endpoint: String, pageSize: Int, tokenFile: Option[String], q: PageQuery)
+    extends Scan with Batch {
   override def readSchema(): StructType = q.readSchema
   override def toBatch: Batch = this
 
@@ -324,39 +251,34 @@ final class PagedScan(
     * bounding).
     */
   override def planInputPartitions(): Array[InputPartition] = {
-    // HTTP mode: page count comes from the server's meta answer (a
-    // single driver-side GET at planning time — the reference reads the
-    // same from its job metadata); generator mode uses the option.
-    val total =
-      endpoint.fold(totalRows)(e => new HttpPageClient(e, PagedSource.creds(tokenFile)).totalRows())
+    // the page count comes from the server's meta answer (a single
+    // driver-side GET at planning time — the reference reads the same
+    // from its job metadata)
+    val total = new HttpPageClient(endpoint, PagedSource.creds(tokenFile)).totalRows()
     val nPages = ((total + pageSize - 1) / pageSize).toInt
     val planned = q.limit match {
       case Some(l) if q.filters.isEmpty && q.agg.isEmpty =>
         math.min(nPages.toLong, (l.toLong + pageSize - 1) / pageSize).toInt
       case _ => nPages
     }
-    (0 until planned).map(p => PagePartition(p, pageSize, total): InputPartition).toArray
+    (0 until planned).map(p => PagePartition(p, pageSize): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PagedReaderFactory(q, endpoint, tokenFile)
 }
 
-final case class PagePartition(page: Int, pageSize: Int, totalRows: Long) extends InputPartition
+final case class PagePartition(page: Int, pageSize: Int) extends InputPartition
 
-/** Picks where a page's rows come from — the in-process generator or the
-  * HTTP server; either way one [[PagedReader]] turns them into rows.
-  */
-final class PagedReaderFactory(q: PageQuery, endpoint: Option[String], tokenFile: Option[String])
+/** One page fetch per partition, made executor-side. */
+final class PagedReaderFactory(q: PageQuery, endpoint: String, tokenFile: Option[String])
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[PagePartition]
-    new PagedReader(endpoint.fold(PagedSource.page(p, q))(e =>
-      new HttpPageClient(e, PagedSource.creds(tokenFile)).page(p, q)))
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new PagedReader(new HttpPageClient(endpoint, PagedSource.creds(tokenFile))
+      .page(partition.asInstanceOf[PagePartition], q))
 }
 
-/** A page's typed values ([[PagedSource.page]]) as InternalRows. */
+/** A page's typed values ([[HttpPageClient.page]]) as InternalRows. */
 final class PagedReader(rows: Iterator[Seq[Any]]) extends PartitionReader[InternalRow] {
   private var current: InternalRow = _
 

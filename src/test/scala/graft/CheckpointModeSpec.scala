@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 class CheckpointModeSpec extends SparkSpec {
 
-  private lazy val ckptDir = java.nio.file.Files.createTempDirectory("graft-reliable-ckpt").toString
+  private lazy val ckptDir = tempDir("graft-reliable-ckpt")
 
   test("eagerCheckpoint: local and reliable modes are value-identical") {
     val df = spark.range(0, 1000).select(
@@ -61,7 +61,7 @@ class CheckpointModeSpec extends SparkSpec {
     val first = spark.newSession()
     first.conf.set("spark.graft.checkpoint.dir", ckptDir)
     Caching.eagerCheckpoint(first.range(0, 10).toDF())
-    val other = java.nio.file.Files.createTempDirectory("graft-other-ckpt").toString
+    val other = tempDir("graft-other-ckpt")
     val second = spark.newSession()
     second.conf.set("spark.graft.checkpoint.dir", other)
     val e = intercept[IllegalStateException] {

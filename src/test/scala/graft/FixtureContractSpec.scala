@@ -67,10 +67,9 @@ class FixtureContractSpec extends SparkSpec {
   }
 
   test("Tables.t surfaces events.ts as TimestampType for every shipped encoding") {
-    val root = java.nio.file.Files.createTempDirectory("graft-enc-").toFile
-    root.deleteOnExit()
+    val root = tempDir("graft-enc-")
     val loaded = encodings.map { enc =>
-      val dir = writeEvents(s"${root.getAbsolutePath}/$enc", enc)
+      val dir = writeEvents(s"$root/$enc", enc)
       val df = Tables.t(spark, dir, "events")
       assert(
         df.schema("ts").dataType == TimestampType,
@@ -89,10 +88,9 @@ class FixtureContractSpec extends SparkSpec {
   }
 
   test("Tables.eventsRanged filters and normalizes under every shipped encoding") {
-    val root = java.nio.file.Files.createTempDirectory("graft-encr-").toFile
-    root.deleteOnExit()
+    val root = tempDir("graft-encr-")
     encodings.foreach { enc =>
-      val dir = writeEvents(s"${root.getAbsolutePath}/$enc", enc)
+      val dir = writeEvents(s"$root/$enc", enc)
       val df = Tables.eventsRanged(spark, dir, Some("2024-01-15"), Some("2024-01-25"))
       assert(
         df.schema("ts").dataType == TimestampType,
@@ -105,24 +103,25 @@ class FixtureContractSpec extends SparkSpec {
   test("eventsRanged pushes the range predicate to the parquet scan under NTZ encoding") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    val root = java.nio.file.Files.createTempDirectory("graft-encp-").toFile
-    root.deleteOnExit()
-    val dir = s"${root.getAbsolutePath}/ntz_us"
-    writeEvents(dir, "ntz_us")
-    val df = Tables.eventsRanged(spark, dir, Some("2024-01-15"), Some("2024-01-25"))
+    val root = tempDir("graft-encp-")
     def findScan(p: org.apache.spark.sql.execution.SparkPlan): Option[FileSourceScanExec] =
       p.collectFirst {
         case s: FileSourceScanExec => Some(s)
         case a: AdaptiveSparkPlanExec => findScan(a.executedPlan)
       }.flatten
-    val scan = findScan(df.queryExecution.executedPlan)
-      .getOrElse(fail("no FileSourceScanExec in plan"))
-    // The range must reach the scan as data filters on the RAW NTZ column
-    // (row-group/page pruning at scale); filtering after the cast would
-    // leave PushedFilters empty because Catalyst cannot invert the cast.
-    val pushed = scan.metadata.getOrElse("PushedFilters", "")
-    assert(pushed.contains("GreaterThanOrEqual(ts"), s"lower bound not pushed: $pushed")
-    assert(pushed.contains("LessThan(ts"), s"upper bound not pushed: $pushed")
+    // the NTZ column and the nanos-as-long column each take their own bound literal
+    Seq("ntz_us", "nanos").foreach { enc =>
+      val dir = writeEvents(s"$root/$enc", enc)
+      val df = Tables.eventsRanged(spark, dir, Some("2024-01-15"), Some("2024-01-25"))
+      val scan = findScan(df.queryExecution.executedPlan)
+        .getOrElse(fail(s"encoding $enc: no FileSourceScanExec in plan"))
+      // The range must reach the scan as data filters on the RAW column
+      // (row-group/page pruning at scale); filtering after the conversion
+      // would leave PushedFilters empty because Catalyst cannot invert it.
+      val pushed = scan.metadata.getOrElse("PushedFilters", "")
+      assert(pushed.contains("GreaterThanOrEqual(ts"), s"encoding $enc: lower bound not pushed: $pushed")
+      assert(pushed.contains("LessThan(ts"), s"encoding $enc: upper bound not pushed: $pushed")
+    }
   }
 
   /** Spark-read column types for every driver fixture (post-Tables.t

@@ -54,7 +54,6 @@ class HttpBigQuerySinkSpec extends SparkSpec {
 
   override def afterAll(): Unit = {
     if (server != null) server.stop(0)
-    roots.asScala.foreach(r => graft.queries.Scratch.delete(r.toString))
     super.afterAll()
   }
 
@@ -158,12 +157,7 @@ class HttpBigQuerySinkSpec extends SparkSpec {
   /** Fresh staging roots, the local stand-in for the bucket prefix;
     * every root is deleted after the spec.
     */
-  private val roots = new ConcurrentLinkedQueue[java.nio.file.Path]()
-  private def newRoot(): java.nio.file.Path = {
-    val r = java.nio.file.Files.createTempDirectory("bqstage")
-    roots.add(r)
-    r
-  }
+  private def newRoot(): java.nio.file.Path = java.nio.file.Paths.get(tempDir("bqstage"))
   private def stageRoot(): String = newRoot().toString
 
   private def freshSink(project: String = "proj", dataset: String = "ds") =

@@ -39,7 +39,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: WRITE_TRUNCATE overwrites, WRITE_APPEND accumulates (K1)") {
-    val dir = Files.createTempDirectory("sink").toString + "/out"
+    val dir = tempDir("sink") + "/out"
     val df1 = Seq((1, "a")).toDF("k", "v")
     def load(df: org.apache.spark.sql.DataFrame, disposition: String) =
       Sink.writeParquetEvolving(spark, df, dir, Sink.WriteDisposition.fromString(disposition))
@@ -55,7 +55,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: schema evolution across appends (ALLOW_FIELD_ADDITION analogue)") {
-    val dir = Files.createTempDirectory("sink-evolve").toString + "/out"
+    val dir = tempDir("sink-evolve") + "/out"
     Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
     Sink.writeParquetEvolving(spark, Seq((2, "b", 9.5)).toDF("k", "v", "extra"), dir, Sink.WriteAppend)
     val merged = Sink.readMerged(spark, dir)
@@ -72,7 +72,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: write-side evolution null-fills the union and verifies on-disk schema") {
-    val dir = Files.createTempDirectory("sink-evolve-w").toString + "/out"
+    val dir = tempDir("sink-evolve-w") + "/out"
     val u1 = Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
     assert(u1.fieldNames.toSeq == Seq("k", "v"))
     // second run adds `extra` and DROPS `v`: union keeps both, v null-filled
@@ -87,7 +87,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: write-side evolution rejects a type change on an existing column") {
-    val dir = Files.createTempDirectory("sink-evolve-t").toString + "/out"
+    val dir = tempDir("sink-evolve-t") + "/out"
     Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
     intercept[Sink.SchemaEvolutionException] {
       Sink.writeParquetEvolving(spark, Seq((2, 3.5)).toDF("k", "v"), dir, Sink.WriteAppend)
@@ -95,7 +95,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: empty input raises (K2)") {
-    val dir = Files.createTempDirectory("sink-empty").toString + "/out"
+    val dir = tempDir("sink-empty") + "/out"
     val empty = Seq.empty[(Int, String)].toDF("k", "v")
     intercept[Sink.EmptyInputException] {
       Sink.writeParquetEvolving(spark, empty, dir, Sink.WriteAppend)
@@ -109,11 +109,11 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: an unreadable destination fails the append before anything is written") {
-    val dir = Files.createTempDirectory("sink-unreadable").toString + "/out"
+    val dir = tempDir("sink-unreadable") + "/out"
     Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
     // plant a file whose `v` is BIGINT where the destination has STRING:
     // the merged schema read cannot reconcile the two
-    val planted = Files.createTempDirectory("sink-planted").toString + "/out"
+    val planted = tempDir("sink-planted") + "/out"
     Seq((2, 7L)).toDF("k", "v").write.parquet(planted)
     val part = Files.list(Paths.get(planted)).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
@@ -128,7 +128,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: the footer-merged union equals the mergeSchema read, in order") {
-    val dir = Files.createTempDirectory("sink-parity").toString + "/out"
+    val dir = tempDir("sink-parity") + "/out"
     Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
     Sink.writeParquetEvolving(spark, Seq((2, "b", 9.5)).toDF("k", "v", "extra"), dir, Sink.WriteAppend)
     val union = Sink.writeParquetEvolving(spark, Seq((3, 1.5)).toDF("k", "extra"), dir, Sink.WriteAppend)
@@ -137,7 +137,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: a failed WRITE_TRUNCATE leaves the destination whole") {
-    val dir = Files.createTempDirectory("sink-trunc-fail").toString + "/out"
+    val dir = tempDir("sink-trunc-fail") + "/out"
     Sink.writeParquetEvolving(spark, Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v"), dir, Sink.WriteAppend)
     // the last row of the last partition fails, after the other tasks wrote
     val failing = spark.range(0, 1000, 1, 4)
@@ -151,7 +151,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: no staging directory is left beside the destination") {
-    val parent = Files.createTempDirectory("sink-staging")
+    val parent = Paths.get(tempDir("sink-staging"))
     val dir = parent.toString + "/out"
     def staging = Files.list(parent).iterator().asScala.map(_.getFileName.toString)
       .filter(_.contains(".staging-")).toSeq
@@ -170,7 +170,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("sink: an append starts only the jobs of a plain parquet write") {
-    val root = Files.createTempDirectory("sink-jobs").toString
+    val root = tempDir("sink-jobs")
     val frame = spark.range(0, 1000, 1, 4).select(col("id").as("k"), (col("id") % 7).as("v"))
     Sink.writeParquetEvolving(spark, frame, root + "/out", Sink.WriteAppend)
     val l = new QueryListener
@@ -200,7 +200,7 @@ class PipelineSpec extends SparkSpec {
   test("full lifecycle: content rewrite → transform chain → evolving sink, per config") {
     import graft.extract.QueryExec
     import graft.transform.Transforms
-    val outRoot = Files.createTempDirectory("e2e").toString
+    val outRoot = tempDir("e2e")
     val facts = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .withColumn("lfm.fact.date_str", date_format(col("ts"), "yyyy-MM-dd"))
     val configs = Seq(

@@ -32,7 +32,7 @@ class RoundtripSpec extends SparkSpec {
       Row(9L, "unicode: \u00e9\u4e2d\u6587 \ud83d\ude00"))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 3), schema)
-    val dir = java.nio.file.Files.createTempDirectory("csvrt").toString
+    val dir = tempDir("csvrt")
     df.write.mode("overwrite").options(EtlQueries.csvWriteOptions).csv(dir)
     val back = spark.read.schema(schema)
       .options(EtlQueries.csvReadOptions).csv(dir)
@@ -46,7 +46,7 @@ class RoundtripSpec extends SparkSpec {
     // empty too: null -> nothing between the delimiters, "" -> `""`
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(1L, null), Row(2L, "")), 1), schema)
-    val dir = java.nio.file.Files.createTempDirectory("csvrt2")
+    val dir = java.nio.file.Paths.get(tempDir("csvrt2"))
     df.coalesce(1).write.mode("overwrite")
       .options(EtlQueries.csvWriteOptions).csv(dir.toString)
     val part = java.nio.file.Files.list(dir).iterator()

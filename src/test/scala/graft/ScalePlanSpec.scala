@@ -4,7 +4,6 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** The two cluster-scale plan behaviors the fixture queries cannot show
   * on a single parquet file: partition pruning over a partitioned layout
@@ -359,7 +358,7 @@ class ScalePlanSpec extends SparkSpec {
 
   test("spreadToParallelism: an under-split scan widens to ceil(bytes / 64 KiB), capped at the cores") {
     import graft.ops.Caching
-    val dir = Files.createTempDirectory("spread").toString
+    val dir = tempDir("spread")
     // one file of incompressible hex = one scan partition of a known size
     def scan(rows: Int): (org.apache.spark.sql.DataFrame, Long) = {
       spark.range(0, rows, 1, 1).select(sha2(col("id").cast("string"), 256).as("h"))
@@ -384,7 +383,7 @@ class ScalePlanSpec extends SparkSpec {
   }
 
   test("partition pruning: a type-partitioned layout scans only the selected partition") {
-    val dir = Files.createTempDirectory("graft_part_").toFile.getAbsolutePath
+    val dir = tempDir("graft_part_")
     graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
 

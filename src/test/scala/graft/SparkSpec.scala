@@ -4,11 +4,29 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
 /** Shared local session for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  private val tempRoots = new ConcurrentLinkedQueue[String]()
+
+  /** A fresh temp directory whose name starts with `prefix`, deleted
+    * after the spec's last test.
+    */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempRoots.add(dir)
+    dir
+  }
+
+  override def afterAll(): Unit =
+    try tempRoots.asScala.foreach(graft.queries.Scratch.delete)
+    finally super.afterAll()
 }
 
 object SparkSpec {

@@ -3,7 +3,6 @@ package graft
 import graft.streaming.{EventStream, UserSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** Structured Streaming capability (SURVEY.md §2.8: absent from the
   * reference; provided as the engine's incremental path). Verifies the
@@ -19,7 +18,7 @@ class StreamingSpec extends SparkSpec {
   test("file-stream tumbling window agg matches batch groupBy on the same data") {
     val src = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .select("ts", "event_type", "value")
-    val dir = Files.createTempDirectory("stream-src").toString
+    val dir = tempDir("stream-src")
     src.coalesce(1).write.mode("overwrite").parquet(dir)
 
     val batch = windowTriples(
@@ -38,7 +37,7 @@ class StreamingSpec extends SparkSpec {
   test("append mode with watermark emits exactly the watermark-passed windows") {
     val src = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .select("ts", "event_type", "value")
-    val dir = Files.createTempDirectory("stream-src-append").toString
+    val dir = tempDir("stream-src-append")
     src.coalesce(1).write.mode("overwrite").parquet(dir)
 
     val complete = windowTriples(
@@ -58,9 +57,9 @@ class StreamingSpec extends SparkSpec {
   test("checkpointed restart processes each file exactly once (append sink)") {
     val src = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .select("ts", "event_type", "value")
-    val srcDir = Files.createTempDirectory("eo-src").toString
-    val outDir = Files.createTempDirectory("eo-out").toString + "/sink"
-    val ckpt = Files.createTempDirectory("eo-ckpt").toString
+    val srcDir = tempDir("eo-src")
+    val outDir = tempDir("eo-out") + "/sink"
+    val ckpt = tempDir("eo-ckpt")
     val half = src.count() / 2
     src.limit(half.toInt).coalesce(1).write.mode("append").parquet(srcDir)
 
@@ -179,7 +178,7 @@ class StreamingSpec extends SparkSpec {
     // side broadcasts per micro-batch at cluster scale
     val src = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .select("ts", "event_type", "user_id", "value")
-    val dir = Files.createTempDirectory("stream-dim-src").toString
+    val dir = tempDir("stream-dim-src")
     src.coalesce(1).write.mode("overwrite").parquet(dir)
     val dim = spark.range(0, 1000)
       .select(col("id").as("user_id"), concat(lit("seg_"), col("id") % 4).as("segment"))
@@ -214,7 +213,7 @@ class StreamingSpec extends SparkSpec {
     val t0 = 1700000000000000L // unix µs
     val min = 60L * 1000000L
     val events = Seq(0L, 10L, 20L, 30L, 600L).map(m => (1L, t0 + m * min, 2.0))
-    val dir = Files.createTempDirectory("stream-restart-fix").toString
+    val dir = tempDir("stream-restart-fix")
     events.toDF("user_id", "us", "value")
       .select(col("user_id"), timestamp_micros(col("us")).as("ts"), col("value"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -246,9 +245,9 @@ class StreamingSpec extends SparkSpec {
 
     val src = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .select("ts", "event_type", "value")
-    val srcDir = Files.createTempDirectory("rocks-src").toString
-    val outDir = Files.createTempDirectory("rocks-out").toString + "/sink"
-    val ckpt = Files.createTempDirectory("rocks-ckpt").toString
+    val srcDir = tempDir("rocks-src")
+    val outDir = tempDir("rocks-out") + "/sink"
+    val ckpt = tempDir("rocks-ckpt")
     src.coalesce(1).write.mode("overwrite").parquet(srcDir)
 
     val q = spark.readStream.schema(src.schema).parquet(srcDir)
@@ -289,9 +288,9 @@ class StreamingSpec extends SparkSpec {
     // restarts the same checkpoint on a session configured with 7.
     val src = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .select("ts", "event_type", "value")
-    val srcDir = Files.createTempDirectory("resize-src").toString
-    val outDir = Files.createTempDirectory("resize-out").toString + "/sink"
-    val ckpt = Files.createTempDirectory("resize-ckpt").toString
+    val srcDir = tempDir("resize-src")
+    val outDir = tempDir("resize-out") + "/sink"
+    val ckpt = tempDir("resize-ckpt")
     val half = (src.count() / 2).toInt
     src.limit(half).coalesce(1).write.mode("append").parquet(srcDir)
 
@@ -413,7 +412,7 @@ class StreamingSpec extends SparkSpec {
     val sparkCount = graft.queries.Tables.t(spark, sf("sf0.001"), "events").count()
     assert(EventStream.footerRowCount(spark, file).contains(sparkCount))
 
-    val dir = Files.createTempDirectory("footer-count").toString
+    val dir = tempDir("footer-count")
     graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .select("user_id", "event_id").repartition(3)
       .write.mode("overwrite").parquet(dir)

@@ -4,7 +4,6 @@ import graft.ops.Cdc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** Streaming CDC-merge sink: a `foreachBatch` that upserts each
   * micro-batch into a keyed parquet target via [[Cdc.upsert]] — the
@@ -21,8 +20,8 @@ class StreamingUpsertSpec extends SparkSpec {
       // sink — duplicates within a batch collapse by version too
       .limit(400)
 
-    val srcDir = Files.createTempDirectory("upsert-src").toString
-    val tgtDir = Files.createTempDirectory("upsert-tgt").toString
+    val srcDir = tempDir("upsert-src")
+    val tgtDir = tempDir("upsert-tgt")
     // two files → at least two micro-batches with maxFilesPerTrigger=1
     val parts = events.randomSplit(Array(0.5, 0.5), seed = 7)
     parts(0).coalesce(1).write.mode("overwrite").parquet(srcDir)
@@ -54,7 +53,7 @@ class StreamingUpsertSpec extends SparkSpec {
         new java.io.File(tmp).renameTo(target)
         ()
       }
-      .option("checkpointLocation", Files.createTempDirectory("upsert-ckpt").toString)
+      .option("checkpointLocation", tempDir("upsert-ckpt"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     assert(q.awaitTermination(120000), "streaming upsert did not drain in time")
@@ -74,7 +73,7 @@ class StreamingUpsertSpec extends SparkSpec {
     // slicing-independence contract (per-doc pure fields per batch,
     // associative min-id rep over the accumulated rows) is actually
     // exercised across batch boundaries, not vacuously on one batch
-    val srcDir = Files.createTempDirectory("curation-src").toString
+    val srcDir = tempDir("curation-src")
     val parts = docs.randomSplit(Array(1.0, 1.0, 1.0), seed = 11)
     parts(0).coalesce(1).write.mode("overwrite").parquet(srcDir)
     parts(1).coalesce(1).write.mode("append").parquet(srcDir)
