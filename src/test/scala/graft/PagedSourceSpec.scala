@@ -1,76 +1,95 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 
+import graft.sources.PagedSource
+
 /** DSv2 paged source (S1/S2): pages-as-partitions, filter pushdown,
-  * column pruning.
+  * column pruning, limit and aggregate pushdown. The source reads a
+  * loopback `PageStub`; every result is checked against the corpus
+  * `PagedSource.row` evaluated over Scala collections. What reaches the
+  * wire is `HttpPagedSourceSpec`'s concern.
   */
 class PagedSourceSpec extends SparkSpec {
 
-  private def src(rows: Int = 10000, pageSize: Int = 1000) =
+  private val TotalRows = 10000L
+  private var stub: PageStub = _
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    stub = new PageStub(TotalRows, "paged-source-spec-bearer")
+  }
+
+  override def afterAll(): Unit = {
+    if (stub != null) stub.stop()
+    super.afterAll()
+  }
+
+  private def src(pageSize: Int = 1000) =
     spark.read
       .format("graft.sources.PagedSource")
-      .option("rows", rows.toString)
+      .option("endpoint", stub.endpoint)
+      .option("tokenFile", stub.tokenFile.toString)
       .option("pageSize", pageSize.toString)
       .load()
 
+  private lazy val corpus = (0L until TotalRows).map(PagedSource.row)
+
+  private def scanDescription(df: DataFrame): String =
+    df.queryExecution.optimizedPlan.collect {
+      case s: DataSourceV2ScanRelation => s.scan.description()
+    }.mkString
+
+  private def batchScan(df: DataFrame): BatchScanExec =
+    df.queryExecution.executedPlan.collectLeaves().head.asInstanceOf[BatchScanExec]
+
   test("reads all pages; page count = ceil(rows/pageSize) partitions") {
-    val df = src(rows = 2500, pageSize = 1000)
-    assert(df.count() == 2500)
+    val df = src(pageSize = 4000)
+    assert(df.count() == TotalRows)
     assert(df.rdd.getNumPartitions == 3)
   }
 
   test("brand IN-list pushdown filters inside the reader and drops the residual") {
     val df = src().filter(col("brand_id").isin(1L, 2L, 3L))
-    val expected = (0L until 10000L).map(graft.sources.PagedSource.row)
-      .count(r => Set(1L, 2L, 3L)(r._1))
-    assert(df.count() == expected)
-    // the pushed IN-list is evaluated in the reader; Catalyst must have
-    // dropped the residual Filter NODE (note: "RuntimeFilters:" text in the
-    // BatchScan line is not a Filter node)
+    assert(df.count() == corpus.count(r => Set(1L, 2L, 3L)(r._1)))
+    // the pushed IN-list is evaluated by the page server; Catalyst must
+    // have dropped the residual Filter NODE (note: "RuntimeFilters:" text
+    // in the BatchScan line is not a Filter node)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("+- Filter"), s"residual Filter node present:\n$plan")
-    val scanDesc = df.queryExecution.optimizedPlan.collect {
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => s.scan.description()
-    }.mkString
-    assert(scanDesc.contains("In(brand_id"), s"pushed filters not reported: $scanDesc")
+    assert(scanDescription(df).contains("In(brand_id"), s"pushed filters not reported: ${scanDescription(df)}")
   }
 
   test("date range pushdown (P3 shape) returns exactly the in-range rows") {
     val df = src().filter(col("date_str") >= "2024-01-10" && col("date_str") <= "2024-01-12")
-    val expected = (0L until 10000L).map(graft.sources.PagedSource.row)
-      .count(r => r._2 >= "2024-01-10" && r._2 <= "2024-01-12")
-    assert(df.count() == expected)
+    assert(df.count() == corpus.count(r => r._2 >= "2024-01-10" && r._2 <= "2024-01-12"))
   }
 
   test("column pruning reaches the source (ReadSchema only has requested cols)") {
     val df = src().select("metric")
     assert(df.schema.fieldNames.toSeq == Seq("metric"))
     val agg = df.agg(sum(col("metric").cast("decimal(18,1)")).cast("double")).collect().head.getDouble(0)
-    val expected = (0L until 10000L).map(i => graft.sources.PagedSource.row(i)._3).sum
-    assert(math.abs(agg - expected) < 1e-6)
+    assert(math.abs(agg - corpus.map(_._3).sum) < 1e-6)
   }
 
   test("limit pushdown: only the needed pages are planned; rows still exact") {
-    val limited = src(rows = 10000, pageSize = 1000).limit(1500)
+    val limited = src().limit(1500)
     assert(limited.count() == 1500)
     // unfiltered limit plans ceil(1500/1000) = 2 pages, not all 10
-    val scanned = limited.queryExecution.executedPlan.collectLeaves()
-      .head.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
+    val scanned = batchScan(limited)
     assert(scanned.inputPartitions.length == 2)
     assert(scanned.scan.description().contains("PushedLimit: 1500"))
     // with a pushed filter every page stays planned (any page may match),
     // but readers cap their output and the result is still exact
-    val filteredLimit = src(rows = 10000, pageSize = 1000)
-      .filter(col("brand_id") === 5L).limit(7)
+    val filteredLimit = src().filter(col("brand_id") === 5L).limit(7)
     assert(filteredLimit.count() == 7)
-    val fl = filteredLimit.queryExecution.executedPlan.collectLeaves()
-      .head.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
-    assert(fl.inputPartitions.length == 10)
+    assert(batchScan(filteredLimit).inputPartitions.length == 10)
   }
 
   test("aggregate pushdown: server-side partial aggs per page, Spark merges") {
-    val df = src(rows = 10000, pageSize = 1000)
+    val df = src()
       .groupBy("brand_id")
       .agg(
         sum("metric").as("s"),
@@ -78,14 +97,11 @@ class PagedSourceSpec extends SparkSpec {
         min("metric").as("mn"),
         max("metric").as("mx"))
     // AQE wraps the executed plan; read the scan from the optimized plan
-    val scan = df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
-    }.head
-    assert(scan.description().contains("PushedAggregation"), scan.description())
+    assert(scanDescription(df).contains("PushedAggregation"), scanDescription(df))
     val out = df.collect()
       .map(r => r.getLong(0) -> ((r.getDouble(1), r.getLong(2), r.getDouble(3), r.getDouble(4))))
       .toMap
-    val raw = (0L until 10000L).map(graft.sources.PagedSource.row).groupBy(_._1)
+    val raw = corpus.groupBy(_._1)
     assert(out.keySet == raw.keySet)
     raw.foreach { case (brand, rows) =>
       val (s, n, mn, mx) = out(brand)
@@ -94,11 +110,10 @@ class PagedSourceSpec extends SparkSpec {
       assert(math.abs(s - rows.map(_._3).sum) < 1e-6)
     }
     // filters compose: pushed filter applies before the pushed aggregation
-    val filtered = src(rows = 10000, pageSize = 1000)
+    val filtered = src()
       .filter(col("brand_id") === 5L)
       .groupBy("date_str").agg(count(lit(1)).as("n"))
-    val expected = (0L until 10000L).map(graft.sources.PagedSource.row)
-      .filter(_._1 == 5L).groupBy(_._2).view.mapValues(_.size.toLong).toMap
+    val expected = corpus.filter(_._1 == 5L).groupBy(_._2).view.mapValues(_.size.toLong).toMap
     assert(filtered.collect().map(r => r.getString(0) -> r.getLong(1)).toMap == expected)
   }
 
@@ -109,9 +124,16 @@ class PagedSourceSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), sum(col("metric").cast("decimal(18,1)")).cast("double").as("m"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
-    val expected = (0L until 10000L).map(graft.sources.PagedSource.row)
+    val expected = corpus
       .filter(r => r._1 == 5L || r._1 == 7L)
       .groupBy(_._1).view.mapValues(_.size.toLong).toMap
     assert(out == expected)
+  }
+
+  test("a source without endpoint fails with a message naming it") {
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft.sources.PagedSource").option("pageSize", "500").load()
+    }
+    assert(e.getMessage.contains("endpoint"), e.getMessage)
   }
 }
