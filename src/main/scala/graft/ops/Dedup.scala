@@ -86,10 +86,9 @@ object Dedup {
     ngramJaccardPairsFromShingles(
       shingleRows(df, idCol, textCol, n), thresholdNum, thresholdDen, maxShingleFreq)
 
-  /** [[ngramJaccardPairs]] over a pre-built `(sid, s)` shingle frame —
-    * the shape a shared/materialized shingle build feeds (see
-    * `SharedIntermediates.shingles`): the corpus is tokenized and
-    * shingled ONCE per pipeline run, not once per consumer.
+  /** [[ngramJaccardPairs]] over a pre-built `(sid, s)` shingle frame
+    * (see `DedupQueries.shingles`), the input every shingle-based op in
+    * the family can start from.
     */
   def ngramJaccardPairsFromShingles(
       shingles: DataFrame,
@@ -944,24 +943,11 @@ object Dedup {
       bands: Int,
       thresholdNum: Int,
       thresholdDen: Int
-  ): DataFrame =
-    lshVerifiedPairsFromShingles(
-      shingleRows(df, idCol, textCol, shingleN), numHashes, bands, thresholdNum, thresholdDen)
-
-  /** [[lshVerifiedPairs]] over a pre-built `(sid, s)` shingle frame
-    * (shared-build shape, see [[ngramJaccardPairsFromShingles]]).
-    */
-  def lshVerifiedPairsFromShingles(
-      shingles: DataFrame,
-      numHashes: Int,
-      bands: Int,
-      thresholdNum: Int,
-      thresholdDen: Int
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // ONE shingle materialization feeds both candidate generation (via
     // signatures) and exact verification
-    val sh = shingles
+    val sh = shingleRows(df, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands = candidatesFromShingles(sh, numHashes, bands)
     // the exact-verify joins and the size lookup only ever touch docs in

@@ -69,8 +69,8 @@ object Similarity {
     * `(cid, v: array<double>, nrm)`. Package-visible so a caller running
     * SEVERAL pipelines over the same corpus (the `ann_recall_at_k`
     * probe: exact + LSH + IVF + PQ) can build and persist it ONCE and
-    * pass it to the `FromBase` variants below — the SharedIntermediates
-    * pattern at plan granularity. Values are a pure deterministic
+    * pass it to the `FromBase` variants below; the reuse stays inside
+    * that one query's plan. Values are a pure deterministic
     * projection, so a shared persisted copy is bit-identical to each
     * pipeline's own build and every oracle replays unchanged.
     */

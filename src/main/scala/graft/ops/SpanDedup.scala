@@ -141,21 +141,8 @@ object SpanDedup {
       l: Int,
       minLen: Int,
       maxGramFreq: Int
-  ): DataFrame =
-    spanMassFromSpans(
-      df, idCol, textCol,
-      duplicatedSpans(df, idCol, textCol, l, minLen, maxGramFreq))
-
-  /** [[spanMass]] over a pre-built span inventory (e.g. the
-    * SharedIntermediates materialization — a curation run builds the
-    * inventory once and every downstream stage reads it).
-    */
-  def spanMassFromSpans(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      spans: DataFrame
   ): DataFrame = {
+    val spans = duplicatedSpans(df, idCol, textCol, l, minLen, maxGramFreq)
     val iv = spans
       .select(col("id_a").as("doc_id"), col("start_a").as("s"), (col("start_a") + col("span_len")).as("e"))
       .unionAll(
@@ -213,17 +200,8 @@ object SpanDedup {
       l: Int,
       minLen: Int,
       maxGramFreq: Int
-  ): DataFrame =
-    spanExciseFromSpans(df, idCol, textCol,
-      duplicatedSpans(df, idCol, textCol, l, minLen, maxGramFreq))
-
-  /** [[spanExcise]] over a pre-built span inventory. */
-  def spanExciseFromSpans(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      spans: DataFrame
   ): DataFrame = {
+    val spans = duplicatedSpans(df, idCol, textCol, l, minLen, maxGramFreq)
     val (out, toks) = excisePlan(df, idCol, textCol, spans)
     Caching.materializeAndRelease(out, toks)
   }
@@ -352,22 +330,8 @@ object SpanDedup {
       maxGramFreq: Int,
       thresholdNum: Int,
       thresholdDen: Int
-  ): DataFrame =
-    spanKeepListFromSpans(
-      df, idCol, textCol,
-      duplicatedSpans(df, idCol, textCol, l, minLen, maxGramFreq),
-      thresholdNum, thresholdDen)
-
-  /** [[spanKeepList]] over a pre-built span inventory. */
-  def spanKeepListFromSpans(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      spans: DataFrame,
-      thresholdNum: Int,
-      thresholdDen: Int
   ): DataFrame = {
-    val iv = spans
+    val iv = duplicatedSpans(df, idCol, textCol, l, minLen, maxGramFreq)
       .select(
         col("id_a"), col("id_b"),
         col("start_b").as("s"), (col("start_b") + col("span_len")).as("e"))

@@ -65,7 +65,7 @@ object CurationQueries {
     "q_split_contamination" -> QueryDef(
       (s, d) => {
         val docs = t(s, d, "documents")
-        val pairs = SharedIntermediates.verifiedPairs(s, d)
+        val pairs = DedupQueries.verifiedPairs(s, d)
         val sp = graft.ops.Sampling
           .hashSplit(docs.select("doc_id"), col("doc_id"), "graft", 80, 10)
         val sa = sp.select(col("doc_id").as("id_a"), col("split").as("split_a"))
@@ -363,7 +363,7 @@ object CurationQueries {
         val exKeep = ex.groupBy("__h").agg(min("doc_id").as("__keeper"))
         val g3 = ex.join(exKeep, "__h")
           .select(col("doc_id"), (col("doc_id") === col("__keeper")).as("g_exact"))
-        val pairs = SharedIntermediates.verifiedPairs(s, d)
+        val pairs = DedupQueries.verifiedPairs(s, d)
         val kl = Dedup.keepList(docs, "doc_id", pairs.select("id_a", "id_b"), iterations = 4)
           .select(col("doc_id"), col("is_canonical").as("g_fuzzy"))
         val flags = gq.join(clf, "doc_id").join(g3, "doc_id").join(kl, "doc_id")
@@ -515,7 +515,7 @@ object CurationQueries {
     "q_cross_source_leakage" -> QueryDef(
       (s, d) => {
         val docs = t(s, d, "documents")
-        val pairs = SharedIntermediates.verifiedPairs(s, d)
+        val pairs = DedupQueries.verifiedPairs(s, d)
         val srcA = docs.select(col("doc_id").as("id_a"), col("source").as("src_a"))
         val srcB = docs.select(col("doc_id").as("id_b"), col("source").as("src_b"))
         pairs.select("id_a", "id_b")
@@ -610,14 +610,14 @@ object CurationQueries {
     // ---- FUZZY benchmark decontamination: the near-dup complement of
     //      the exact 13-gram gate above — paraphrased/format-shifted
     //      eval leakage shares high Jaccard with a benchmark doc without
-    //      sharing any verbatim 13-gram. Reuses the ONE corpus-wide
-    //      MinHash-LSH verified-pair build (SharedIntermediates — built
-    //      once, read by eight queries) restricted to cross-(bench,
-    //      corpus) pairs; verdicts in the q_decontam_keep_list contract ----
+    //      sharing any verbatim 13-gram. The dedup family's corpus-wide
+    //      MinHash-LSH verified-pair build (DedupQueries.verifiedPairs)
+    //      restricted to cross-(bench, corpus) pairs; verdicts in the
+    //      q_decontam_keep_list contract ----
     "q_decontam_fuzzy" -> QueryDef(
       (s, d) => {
         val flags = splitDocs(s, d).select(col("doc_id"), col("is_bench"))
-        val pairs = SharedIntermediates.verifiedPairs(s, d).select("id_a", "id_b")
+        val pairs = DedupQueries.verifiedPairs(s, d).select("id_a", "id_b")
         val fa = flags.select(col("doc_id").as("id_a"), col("is_bench").as("bench_a"))
         val fb = flags.select(col("doc_id").as("id_b"), col("is_bench").as("bench_b"))
         // the corpus-side doc of every cross-split verified pair; the

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.ops.{Dedup, Sampling}
+import graft.ops.{Dedup, Sampling, SpanDedup}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Document deduplication: exact, n-gram Jaccard, MinHash/LSH, SimHash,
@@ -46,6 +47,23 @@ object DedupQueries {
        |)""".stripMargin
   }
 
+  /** The family's word-3-gram shingle frame over `documents` in `dir`:
+    * `(sid: doc_id, s: shingle)` rows, distinct per doc. Built inside
+    * each caller's own plan — no query reads another query's build.
+    */
+  def shingles(s: SparkSession, dir: String): DataFrame =
+    Dedup.shingleRows(t(s, dir, "documents"), "doc_id", "text", n = 3)
+
+  /** The family's canonical LSH-verified near-dup pair set over
+    * `documents` in `dir` (3-gram shingles, 64 hashes, 16 bands, Jaccard
+    * ≥ 4/5): `(id_a, id_b, inter, size_a, size_b)`. Like [[shingles]],
+    * each caller pays for its own build.
+    */
+  def verifiedPairs(s: SparkSession, dir: String): DataFrame =
+    Dedup.lshVerifiedPairs(
+      t(s, dir, "documents"), "doc_id", "text",
+      shingleN = 3, numHashes = 64, bands = 16, thresholdNum = 4, thresholdDen = 5)
+
   val defs: Seq[(String, QueryDef)] = Seq(
     // ---- exact dedup: hash-groupBy, one shuffle on the content hash ----
     "dedup_exact" -> QueryDef(
@@ -63,7 +81,7 @@ object DedupQueries {
       // doc's rarest (1−t)|d|+1 shingles instead of all of them.
       (s, d) =>
         Dedup.prefixJaccardPairsFromShingles(
-          SharedIntermediates.shingles(s, d),
+          shingles(s, d),
           thresholdNum = 4, thresholdDen = 5, maxShingleFreq = Some(50)
         ),
       Some("""WITH toks AS (
@@ -95,7 +113,7 @@ object DedupQueries {
     "dedup_minhash_lsh" -> QueryDef(
       (s, d) =>
         Dedup.lshCandidatePairsFromShingles(
-          SharedIntermediates.shingles(s, d), numHashes = 64, bands = 16
+          shingles(s, d), numHashes = 64, bands = 16
         ),
       Some(s"""WITH ${minhashCtes(64, 16)}
               |SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -154,11 +172,9 @@ object DedupQueries {
       (s, d) => {
         // pair build = the LSH-verified path (candidates in O(docs×bands),
         // exact integer-Jaccard verify on candidates only — oracle-equal
-        // to the full exact pair set, see dedup_minhash_verified), built
-        // ONCE per session and read from its materialized parquet — so CC
-        // does not pay for a second full inverted-index self-join, nor for
-        // a rebuild when a sibling query already materialized the pairs.
-        val pairs = SharedIntermediates.verifiedPairs(s, d)
+        // to the full exact pair set, see dedup_minhash_verified) — so CC
+        // does not pay for a full inverted-index self-join.
+        val pairs = verifiedPairs(s, d)
         Dedup.connectedComponents(pairs.select("id_a", "id_b"), iterations = 4)
       },
       Some("""WITH toks AS (
@@ -206,7 +222,7 @@ object DedupQueries {
     "dedup_keep_list" -> QueryDef(
       (s, d) => {
         val docs = t(s, d, "documents")
-        val pairs = SharedIntermediates.verifiedPairs(s, d)
+        val pairs = verifiedPairs(s, d)
         Dedup.keepList(docs, "doc_id", pairs.select("id_a", "id_b"), iterations = 4)
       },
       Some("""WITH toks AS (
@@ -259,10 +275,7 @@ object DedupQueries {
     // pairs is exact on the fixtures (candidates ⊇ exact pairs pinned in
     // DedupSpec), so the verified output equals the exact set.
     "dedup_minhash_verified" -> QueryDef(
-      // the canonical pair build is shared (built once per session, read
-      // from its materialized parquet by every family member) — see
-      // SharedIntermediates.verifiedPairs
-      (s, d) => SharedIntermediates.verifiedPairs(s, d),
+      (s, d) => verifiedPairs(s, d),
       Some("""WITH toks AS (
              |  SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS ts
              |  FROM documents
@@ -358,7 +371,7 @@ object DedupQueries {
     "dedup_minhash_est" -> QueryDef(
       (s, d) =>
         Dedup.lshCandidatePairsWithEstFromShingles(
-          SharedIntermediates.shingles(s, d), numHashes = 64, bands = 16
+          shingles(s, d), numHashes = 64, bands = 16
         ),
       Some(s"""WITH ${minhashCtes(64, 16)}, pairs AS (
               |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -408,7 +421,7 @@ object DedupQueries {
     "q_dedup_cluster_stats" -> QueryDef(
       (s, d) => {
         val docs = t(s, d, "documents")
-        val pairs = SharedIntermediates.verifiedPairs(s, d)
+        val pairs = verifiedPairs(s, d)
         val kl = Dedup.keepList(docs, "doc_id", pairs.select("id_a", "id_b"), iterations = 4)
         kl.groupBy("canonical_id").agg(count(lit(1)).as("cluster_size"))
           .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
@@ -477,7 +490,7 @@ object DedupQueries {
         // oracle unchanged. Cost at tiny scale: ~+0.5 s fixed (per-doc
         // array build) at sf0.1 — recorded in bench/r15_notes.md.
         Dedup.prefixContainmentPairsFromShingles(
-          SharedIntermediates.shingles(s, d),
+          shingles(s, d),
           thresholdNum = 4, thresholdDen = 5, maxShingleFreq = Some(50)),
       Some("""WITH toks AS (
              |  SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS ts
@@ -510,7 +523,9 @@ object DedupQueries {
     //      shared-boilerplate case every set-level method (Jaccard/
     //      MinHash/SimHash) misses at low set overlap ----
     "dedup_span" -> QueryDef(
-      (s, d) => SharedIntermediates.spans(s, d),
+      (s, d) =>
+        SpanDedup.duplicatedSpans(
+          t(s, d, "documents"), "doc_id", "text", l = 4, minLen = 8, maxGramFreq = 50),
       Some("""WITH toks AS (
              |  SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS ts
              |  FROM documents
@@ -543,9 +558,8 @@ object DedupQueries {
     //      islands) — the "drop docs >X% duplicated" curation metric ----
     "q_span_mass" -> QueryDef(
       (s, d) =>
-        graft.ops.SpanDedup.spanMassFromSpans(
-          t(s, d, "documents"), "doc_id", "text",
-          SharedIntermediates.spans(s, d)),
+        SpanDedup.spanMass(
+          t(s, d, "documents"), "doc_id", "text", l = 4, minLen = 8, maxGramFreq = 50),
       Some("""WITH toks AS (
              |  SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS ts
              |  FROM documents
@@ -605,9 +619,8 @@ object DedupQueries {
     //      a range join; intervals explode bounded by doc length ----
     "q_span_excise" -> QueryDef(
       (s, d) =>
-        graft.ops.SpanDedup.spanExciseFromSpans(
-          t(s, d, "documents"), "doc_id", "text",
-          SharedIntermediates.spans(s, d)),
+        SpanDedup.spanExcise(
+          t(s, d, "documents"), "doc_id", "text", l = 4, minLen = 8, maxGramFreq = 50),
       Some("""WITH toks AS (
              |  SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS ts
              |  FROM documents
@@ -656,9 +669,8 @@ object DedupQueries {
     //      (same keep-list contract as the set-similarity family) ----
     "dedup_span_keep_list" -> QueryDef(
       (s, d) =>
-        graft.ops.SpanDedup.spanKeepListFromSpans(
-          t(s, d, "documents"), "doc_id", "text",
-          SharedIntermediates.spans(s, d),
+        SpanDedup.spanKeepList(
+          t(s, d, "documents"), "doc_id", "text", l = 4, minLen = 8, maxGramFreq = 50,
           thresholdNum = 1, thresholdDen = 2),
       Some("""WITH toks AS (
              |  SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x <> '') AS ts

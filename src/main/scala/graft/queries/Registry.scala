@@ -4,9 +4,10 @@ import graft.util.JsonLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import java.io.IOException
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.ConcurrentHashMap
 import scala.util.control.NonFatal
 
 /** One registered operator: the Spark implementation plus (where
@@ -117,8 +118,10 @@ object Scratch {
     * or throws. The path is deterministic within a run and collision-free
     * across concurrent processes. The value `body` returns must already
     * be materialized: a lazy frame over the directory would lose its
-    * files to the delete. A `sub` directory's per-application parent is
-    * removed too once its last `sub` is gone.
+    * files to the delete. The emptied parents up to `/tmp/graft-<name>`
+    * go too, each by a non-recursive delete: one that is not empty (a
+    * concurrent application's sibling, or another `sub`) makes the
+    * delete fail and is left as it is.
     *
     * A failed cleanup is logged, never thrown: an exception escaping a
     * `finally` replaces the primary failure, and a leaked scratch
@@ -134,7 +137,10 @@ object Scratch {
       try {
         val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
         fs.delete(dir, true)
-        if (dir != appDir && fs.exists(appDir) && fs.listStatus(appDir).isEmpty) fs.delete(appDir, true)
+        try {
+          if (dir != appDir) fs.delete(appDir, false)
+          fs.delete(appDir.getParent, false)
+        } catch { case _: IOException => () } // not empty: still in use
       } catch {
         case NonFatal(e) => JsonLog.warning(s"scratch directory cleanup failed for $dir: $e")
       }
@@ -144,11 +150,11 @@ object Scratch {
   /** Local temp trees that a returned frame reads lazily, so they must
     * outlive the query; one shutdown hook deletes them at JVM exit.
     */
-  private val atExit = TrieMap.empty[String, Unit]
-  sys.addShutdownHook(atExit.keys.foreach(delete))
+  private val atExit = ConcurrentHashMap.newKeySet[String]()
+  sys.addShutdownHook(atExit.forEach(d => delete(d)))
 
   /** Delete the local tree at `dir` when the JVM exits. */
-  def deleteAtExit(dir: String): Unit = atExit.put(dir, ())
+  def deleteAtExit(dir: String): Unit = atExit.add(dir)
 
   /** Delete the local tree at `dir` now, if it exists. A failure is
     * logged, never thrown: one undeletable tree (a file pinned by a

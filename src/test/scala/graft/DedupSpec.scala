@@ -80,6 +80,37 @@ class DedupSpec extends SparkSpec {
     assert(verified == exact, "on a corpus where LSH recall is 1.0 the composed op is exact")
   }
 
+  test("every registered near-dup query pays for its own build: a rebuild runs the same jobs") {
+    val dir = sf("sf0.001")
+    val fixture = new java.io.File(dir).toURI.getPath
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def sharedDirs = tmp.list().filter(_.startsWith("graft-shared-")).toSet
+    val before = sharedDirs
+    val l = new QueryListener
+    spark.sparkContext.addSparkListener(l)
+    // jobs and rows of one forced build, the way Bench forces it
+    def build(name: String): (Int, Long, Array[String]) = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      l.reset()
+      val df = SparkEntry.queries(name)(spark, dir)
+      val rows = df.queryExecution.toRdd.count()
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      (l.jobSpans.size, rows, df.inputFiles)
+    }
+    try {
+      for (name <- Seq("dedup_minhash_verified", "dedup_ngram_jaccard", "dedup_span")) {
+        val (jobs1, rows1, files1) = build(name)
+        val (jobs2, rows2, files2) = build(name)
+        assert(rows1 > 0, s"$name found nothing on the fixture")
+        assert(rows2 == rows1, name)
+        assert(jobs2 == jobs1, s"$name: the first build ran $jobs1 jobs, the second $jobs2")
+        for (f <- files1 ++ files2)
+          assert(new java.net.URI(f).getPath.startsWith(fixture), s"$name reads $f")
+      }
+      assert(sharedDirs -- before == Set.empty[String])
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("connectedComponents: chains and singleton pairs get min-id labels") {
     // graph: 1-2, 2-3, 3-4 (chain, diameter 3) and 10-11
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")

@@ -81,4 +81,23 @@ class RoundtripSpec extends SparkSpec {
     assert(e.getMessage == "body failed")
     assert(used.nonEmpty && !new java.io.File(used).exists(), s"$used survived")
   }
+
+  test("Scratch.withDir removes its emptied /tmp/graft-<name> parents and spares a sibling") {
+    for (sub <- Seq("", "part")) {
+      val root = new java.io.File(s"/tmp/graft-test-scratch-${java.util.UUID.randomUUID()}")
+      val name = root.getName.stripPrefix("graft-")
+      val app = new java.io.File(root, spark.sparkContext.applicationId)
+      Scratch.withDir(spark, name, sub)(dir => spark.range(3).write.parquet(dir))
+      assert(!app.exists(), s"sub='$sub': $app survived")
+      assert(!root.exists(), s"sub='$sub': $root survived")
+      // a concurrent application's directory keeps the shared parent alive
+      val sibling = new java.io.File(root, "other-app")
+      assert(sibling.mkdirs())
+      try {
+        Scratch.withDir(spark, name, sub)(dir => spark.range(3).write.parquet(dir))
+        assert(!app.exists(), s"sub='$sub': $app survived beside a sibling")
+        assert(sibling.isDirectory, s"sub='$sub': the sibling was deleted")
+      } finally Scratch.delete(root.getPath)
+    }
+  }
 }

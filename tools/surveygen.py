@@ -44,7 +44,6 @@ OP_SUITES = {
     "Transforms": ["TransformSpec"],
     "TagPivot": ["TagPivotSpec"],
     "TopKAgg": ["GlobalRankSpec"],
-    "SharedIntermediates": ["SharedIntermediatesSpec"],
     "Tables": ["FixtureContractSpec"],
     "Decontam": ["DecontamSpec"],
     "Bpe": ["BpeSpec"],
