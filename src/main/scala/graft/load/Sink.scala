@@ -1,8 +1,6 @@
 package graft.load
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graft.FooterSchema
@@ -10,7 +8,6 @@ import org.apache.spark.sql.types.StructType
 
 import java.io.IOException
 import java.util.UUID
-import scala.jdk.CollectionConverters._
 
 /** K1/K2 — the load stage (`/root/reference/data_load.py:27-59`).
   *
@@ -22,9 +19,9 @@ import scala.jdk.CollectionConverters._
   * one parquet load path. Like the reference's one load job, a load is one
   * Spark write: schemas come from parquet footers read on the driver, and
   * the write is staged beside the destination and committed by rename
-  * only once it succeeded. [[readMerged]] is the `mergeSchema` read of the
-  * result. [[BigQuerySink]] loads the same frame into BigQuery through a
-  * [[BigQueryLoadClient]].
+  * only once it succeeded. A `mergeSchema` read of the destination sees
+  * the union of every load. [[BigQuerySink]] loads the same frame into
+  * BigQuery through a [[BigQueryLoadClient]].
   */
 object Sink {
 
@@ -47,10 +44,6 @@ object Sink {
     * (`/root/reference/data_load.py:36`).
     */
   def tableName(configId: String): String = s"010_warner_dl_lf_$configId"
-
-  /** Read side of ALLOW_FIELD_ADDITION: schema union across appended runs. */
-  def readMerged(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
 
   /** Field-addition evolution attempted a type CHANGE — the reference's
     * sink would reject the load job the same way (ALLOW_FIELD_ADDITION
@@ -94,7 +87,7 @@ object Sink {
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val existing: Option[StructType] = disposition match {
       case WriteTruncate => None
-      case WriteAppend   => if (fs.exists(dest)) FooterSchema.merge(spark, footers(fs, dest)) else None
+      case WriteAppend   => if (fs.exists(dest)) FooterSchema.merge(spark, FooterSchema.footers(fs, dest)) else None
     }
     val union = existing match {
       case None => df.schema
@@ -116,8 +109,8 @@ object Sink {
     val staging = new Path(dest.getParent, s".${dest.getName}.staging-${UUID.randomUUID()}")
     try {
       aligned.write.parquet(staging.toString)
-      val staged = footers(fs, staging)
-      if (staged.flatMap(_.getParquetMetadata.getBlocks.asScala).map(_.getRowCount).sum == 0L)
+      val staged = FooterSchema.footers(fs, staging)
+      if (FooterSchema.rowCount(staged) == 0L)
         throw new EmptyInputException(s"no records to load into $path")
       if (disposition == WriteTruncate) fs.delete(dest, true)
       fs.mkdirs(dest)
@@ -126,7 +119,7 @@ object Sink {
         if (!fs.rename(f.getFile, to)) throw new IOException(s"could not move ${f.getFile} to $to")
       }
     } finally fs.delete(staging, true)
-    val after = FooterSchema.merge(spark, footers(fs, dest)).getOrElse(StructType(Nil))
+    val after = FooterSchema.merge(spark, FooterSchema.footers(fs, dest)).getOrElse(StructType(Nil))
     val got = after.fields.map(f => f.name -> f.dataType).toSet
     val want = union.fields.map(f => f.name -> f.dataType).toSet
     if (got != want)
@@ -134,11 +127,4 @@ object Sink {
         s"post-write verification failed for $path: on-disk merged schema $got != expected $want")
     union
   }
-
-  /** The footers of a directory's data files (see [[FooterSchema.dataFiles]]). */
-  private def footers(fs: FileSystem, dir: Path): Seq[Footer] =
-    FooterSchema.dataFiles(fs, dir).map { st =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
-      try new Footer(st.getPath, r.getFooter) finally r.close()
-    }
 }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.util.JsonLog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.FooterSchema
 
 import java.io.IOException
 import java.nio.file.{Files, Paths}
@@ -69,9 +70,22 @@ object Tables {
     * [[normalizeTs]]).
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = open(s, s"$dir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
+  }
+
+  /** The parquet read of `path`, with nanos read as long, opened without
+    * a Spark job: the schema is the one Spark's inference would take from
+    * the first data file's footer, read here on the driver
+    * ([[FooterSchema.firstFileSchema]]). Where that does not apply, the
+    * plain read infers it (or raises its error for a path with no data).
+    */
+  private def open(s: SparkSession, path: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    FooterSchema.firstFileSchema(s, path) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None         => s.read.parquet(path)
+    }
   }
 
   /** Events with a time-range predicate applied to the RAW `ts` column,
@@ -89,8 +103,7 @@ object Tables {
       startInclusive: Option[String],
       endExclusive: Option[String]
   ): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = open(s, s"$dir/events.parquet")
     def ns(d: String): Long = {
       val str = if (d.length == 10) s"$d 00:00:00" else d
       java.time.LocalDateTime

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.FooterSchema
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -887,16 +888,11 @@ object EventStream {
     */
   private[graft] def footerRowCount(ss: SparkSession, srcPath: String): Option[Long] =
     try {
-      val conf = ss.sparkContext.hadoopConfiguration
       val p = new org.apache.hadoop.fs.Path(srcPath)
-      val fs = p.getFileSystem(conf)
-      val files = org.apache.spark.sql.graft.FooterSchema.dataFiles(fs, p)
+      val fs = p.getFileSystem(ss.sparkContext.hadoopConfiguration)
+      val files = FooterSchema.dataFiles(fs, p)
       if (files.isEmpty || files.length > FooterCountMaxFiles) None
-      else Some(files.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum)
+      else Some(FooterSchema.rowCount(files.map(FooterSchema.footer(fs, _))))
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The frame must already live on a [[stateScopedSession]] — the query

@@ -2,6 +2,9 @@ package graft.transform
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.jdk.CollectionConverters._
 
 /** F2 + A2 — nested tag parse and dynamic pivot
   * (`/root/reference/data_transform.py:48-68,102-150`).
@@ -16,9 +19,10 @@ import org.apache.spark.sql.functions._
   * higher-order functions — no UDF, fully codegen-friendly, shuffle-free.
   * Only the dynamic column set needs a driver pass (schema must be known at
   * analysis time — the same two-pass trick built-in `pivot()` uses). The
-  * distinct-keys job reads one column and aggregates to a handful of rows,
-  * so at 100 TB it is a cheap column-pruned scan; the key set is bounded by
-  * `maxKeys` with overflow retained in a map column (SURVEY.md §7.5.6).
+  * key collect reads the parsed frame's map keys and ships at most
+  * `maxKeys + 1` of them per partition, with no shuffle; the key set is
+  * bounded by `maxKeys` with overflow retained in a map column
+  * (SURVEY.md §7.5.6).
   */
 object TagPivot {
 
@@ -52,9 +56,13 @@ object TagPivot {
     )
   }
 
-  /** Two-pass dynamic pivot: job 1 collects the (bounded) distinct key set;
-    * job 2 selects one literal column per key. Keys beyond `maxKeys` stay in
-    * an overflow map column instead of exploding the schema.
+  /** Two-pass dynamic pivot over one materialization: the parsed frame is
+    * checkpointed once, the (bounded) key set is collected from it without
+    * a shuffle, and the result is a lazy projection over the checkpoint
+    * with one literal column per key, which the sink's write scans. Keys
+    * beyond `maxKeys` stay in an overflow map column instead of exploding
+    * the schema. Like every checkpoint-backed frame, the result is released
+    * with [[graft.ops.Caching.release]].
     */
   def pivotTags(
       df: DataFrame,
@@ -62,18 +70,11 @@ object TagPivot {
       maxKeys: Int = 1000
   ): DataFrame = {
     val mapCol = "__tags_map"
-    // the parsed map feeds BOTH the key-collection job and the final
-    // projection; persist so the HOF parse+fold runs once, not twice
-    val withMap = df.withColumn(mapCol, tagsToMap(col(s"`$tagsCol`"), tagsCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Driver pass 1: distinct tag keys (column-pruned scan + partial agg).
-    val keys = withMap
-      .select(explode(map_keys(col(mapCol))).as("k"))
-      .distinct()
-      .orderBy("k")
-      .limit(maxKeys + 1)
-      .collect()
-      .map(_.getString(0))
+    // keep: one materialization feeds the key collect and the write, so
+    // the input (a paged HTTP extract, say) and the parse+fold run once
+    val parsed = graft.ops.Caching.eagerCheckpoint(
+      df.withColumn(mapCol, tagsToMap(col(s"`$tagsCol`"), tagsCol)))
+    val keys = smallestKeys(parsed.select(map_keys(col(mapCol))), maxKeys + 1)
     val (kept, overflowed) = (keys.take(maxKeys), keys.length > maxKeys)
     val keep = df.columns.filter(_ != tagsCol).map(c => col(s"`$c`"))
     val tagCols = kept.map(k => try_element_at(col(mapCol), lit(k)).as(k))
@@ -81,10 +82,30 @@ object TagPivot {
       if (overflowed)
         Seq(map_filter(col(mapCol), (k, _) => !k.isin(kept.toIndexedSeq.map(lit(_)): _*)).as(s"$tagsCol.overflow"))
       else Seq.empty
-    // materialize once and release the parsed-map cache (the pivot output
-    // is terminal — it feeds the sink); see Caching for the discipline
-    graft.ops.Caching.materializeAndRelease(
-      withMap.select((keep ++ tagCols ++ overflow).toSeq: _*),
-      withMap)
+    parsed.select((keep ++ tagCols ++ overflow).toSeq: _*)
+  }
+
+  /** The `n` smallest distinct strings across the rows of `keys`' one
+    * array column, in the order `orderBy` gives strings (their UTF-8
+    * bytes, `UTF8String.compareTo`; Java's `String.compareTo` compares
+    * UTF-16 units and orders supplementary-plane characters differently).
+    * No shuffle: each partition keeps its own `n` smallest, and the
+    * global `n` smallest all lie in the union of those.
+    */
+  private def smallestKeys(keys: DataFrame, n: Int): Seq[String] = {
+    def smallest(strings: Iterator[UTF8String]): Array[UTF8String] = {
+      val set = new java.util.TreeSet[UTF8String]()
+      strings.foreach { s => set.add(s); if (set.size > n) set.pollLast() }
+      set.asScala.toArray
+    }
+    val perPartition = keys.queryExecution.toRdd.mapPartitions { rows =>
+      val strings = rows.filterNot(_.isNullAt(0)).flatMap { r =>
+        val a = r.getArray(0)
+        // copied: the string may point into a reused row buffer
+        (0 until a.numElements()).map(a.getUTF8String(_).clone())
+      }
+      Iterator.single(smallest(strings))
+    }.collect()
+    smallest(perPartition.iterator.flatten).map(_.toString).toSeq
   }
 }

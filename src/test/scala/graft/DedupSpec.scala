@@ -257,7 +257,7 @@ class DedupSpec extends SparkSpec {
   test("lshIncrementalCandidates: reloaded-index candidates = cross-split slice of the full banding") {
     val docs = graft.queries.Tables.t(spark, sf("sf0.001"), "documents")
     val isNew = graft.ops.Sampling.hashBucket(col("doc_id"), "inc", 100) >= 80
-    val dir = s"/tmp/graft-test-lshindex/${spark.sparkContext.applicationId}"
+    val dir = s"${tempDir("graft-test-lshindex-")}/index"
     try {
       val inc = Dedup.lshIncrementalCandidates(docs, "doc_id", "text", isNew, dir)
         .as[(Long, Long)].collect().toSet
@@ -285,7 +285,7 @@ class DedupSpec extends SparkSpec {
   test("lshIngestAppend: index absorbs each delta; appended index ≡ rebuilt; day-2 reaches snapshot ∪ day-1") {
     val docs = graft.queries.Tables.t(spark, sf("sf0.001"), "documents")
     val lane = graft.ops.Sampling.hashBucket(col("doc_id"), "inc2", 100)
-    val root = s"/tmp/graft-test-lshappend/${spark.sparkContext.applicationId}"
+    val root = tempDir("graft-test-lshappend-")
     val (dirA, dirB, dirC) = (s"$root/a", s"$root/b", s"$root/c")
     try {
       Dedup.lshBuildIndex(docs.filter(lane < 60), "doc_id", "text", dirA)
@@ -335,7 +335,7 @@ class DedupSpec extends SparkSpec {
       101L -> fresh,
       102L -> fresh,
       103L -> "the quick brown fox jumps over the lazy dog near the river bank")
-    val dir = s"/tmp/graft-test-lshpin/${spark.sparkContext.applicationId}"
+    val dir = s"${tempDir("graft-test-lshpin-")}/index"
     try {
       Dedup.lshBuildIndex(snapshot, "doc_id", "text", dir)
       val pairs = Dedup.lshIngestAppend(delta, "doc_id", "text", dir)

@@ -100,6 +100,76 @@ class FixtureContractSpec extends SparkSpec {
     }
   }
 
+  test("Tables.t opens every table without a Spark job, with the schema a plain read infers") {
+    val root = tempDir("graft-open-")
+    val eventDirs = encodings.map(enc => enc -> writeEvents(s"$root/$enc", enc))
+    val tables = expectedSchemas.keys.toSeq.sorted.map(n => (sf("sf0.001"), n)) ++
+      eventDirs.map { case (_, dir) => (dir, "events") }
+    val l = new QueryListener
+    spark.sparkContext.addSparkListener(l)
+    def jobsOf[T](body: => T): (T, Int) = {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      l.reset()
+      val out = body
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      (out, l.jobSpans.size)
+    }
+    try {
+      tables.foreach { case (dir, name) =>
+        val (df, jobs) = jobsOf(Tables.t(spark, dir, name))
+        assert(jobs == 0, s"$dir/$name: opening ran $jobs Spark jobs")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val plain = spark.read.parquet(s"$dir/$name.parquet")
+        val want = if (name == "events") Tables.normalizeTs(plain).schema else plain.schema
+        assert(df.schema == want, s"$dir/$name: opened as ${df.schema}, a plain read gives $want")
+      }
+      eventDirs.foreach { case (enc, dir) =>
+        val (_, jobs) = jobsOf(Tables.eventsRanged(spark, dir, Some("2024-01-15"), None))
+        assert(jobs == 0, s"encoding $enc: eventsRanged ran $jobs Spark jobs")
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("Tables.t falls back to the plain read where no first footer gives the schema") {
+    import org.apache.spark.sql.AnalysisException
+    val root = tempDir("graft-open-fallback-")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/empty/region.parquet"))
+    spark.range(4).withColumn("part", col("id") % 2).write.partitionBy("part").parquet(s"$root/parted/region.parquet")
+    def condition(body: => Any): String = intercept[AnalysisException](body).getCondition
+    for (dir <- Seq(s"$root/missing", s"$root/empty")) {
+      val want = condition(spark.read.parquet(s"$dir/region.parquet"))
+      assert(want != null)
+      assert(condition(Tables.t(spark, dir, "region")) == want, dir)
+    }
+    val parted = Tables.t(spark, s"$root/parted", "region")
+    assert(parted.schema == spark.read.parquet(s"$root/parted/region.parquet").schema)
+    assert(parted.count() == 4)
+    // a summary file is what Spark's inference reads first
+    spark.range(2).write.parquet(s"$root/summary/region.parquet")
+    spark.range(2).withColumn("extra", lit("x")).coalesce(1).write.parquet(s"$root/wide")
+    val wideFile = new java.io.File(s"$root/wide").listFiles().filter(_.getName.startsWith("part-")).head
+    java.nio.file.Files.copy(wideFile.toPath, java.nio.file.Paths.get(s"$root/summary/region.parquet/_common_metadata"))
+    val summarized = Tables.t(spark, s"$root/summary", "region")
+    assert(summarized.schema == spark.read.parquet(s"$root/summary/region.parquet").schema)
+    assert(summarized.schema.fieldNames.toSeq == Seq("id", "extra"))
+    // a session that merges schemas has its inference read every footer,
+    // not only the first (narrow) one
+    spark.range(2).coalesce(1).write.parquet(s"$root/narrow")
+    val narrowFile = new java.io.File(s"$root/narrow").listFiles().filter(_.getName.startsWith("part-")).head
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/merged/region.parquet"))
+    java.nio.file.Files.copy(narrowFile.toPath, java.nio.file.Paths.get(s"$root/merged/region.parquet/a.parquet"))
+    java.nio.file.Files.copy(wideFile.toPath, java.nio.file.Paths.get(s"$root/merged/region.parquet/b.parquet"))
+    assert(Tables.t(spark, s"$root/merged", "region").schema.fieldNames.toSeq == Seq("id"))
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try assert(Tables.t(spark, s"$root/merged", "region").schema.fieldNames.toSet == Set("id", "extra"))
+    finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    // a footer that does not read fails as the plain read fails
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/corrupt/region.parquet"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/corrupt/region.parquet/part-0.parquet"), "not parquet")
+    val plainError = intercept[Exception](spark.read.parquet(s"$root/corrupt/region.parquet"))
+    assert(intercept[Exception](Tables.t(spark, s"$root/corrupt", "region")).getClass == plainError.getClass)
+  }
+
   test("eventsRanged pushes the range predicate to the parquet scan under NTZ encoding") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -109,8 +179,8 @@ class FixtureContractSpec extends SparkSpec {
         case s: FileSourceScanExec => Some(s)
         case a: AdaptiveSparkPlanExec => findScan(a.executedPlan)
       }.flatten
-    // the NTZ column and the nanos-as-long column each take their own bound literal
-    Seq("ntz_us", "nanos").foreach { enc =>
+    // each encoding of the raw column takes its own bound literal
+    encodings.foreach { enc =>
       val dir = writeEvents(s"$root/$enc", enc)
       val df = Tables.eventsRanged(spark, dir, Some("2024-01-15"), Some("2024-01-25"))
       val scan = findScan(df.queryExecution.executedPlan)

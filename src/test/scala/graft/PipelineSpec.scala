@@ -51,24 +51,24 @@ class PipelineSpec extends SparkSpec {
     // truncate replaces the schema as well as the rows: a narrower frame
     // leaves exactly its own columns, none carried over from the old table
     load(Seq(3).toDF("k"), "WRITE_TRUNCATE")
-    assert(Sink.readMerged(spark, dir).columns.toSeq == Seq("k"))
+    assert(spark.read.option("mergeSchema", "true").parquet(dir).columns.toSeq == Seq("k"))
   }
 
   test("sink: schema evolution across appends (ALLOW_FIELD_ADDITION analogue)") {
     val dir = tempDir("sink-evolve") + "/out"
     Sink.writeParquetEvolving(spark, Seq((1, "a")).toDF("k", "v"), dir, Sink.WriteAppend)
     Sink.writeParquetEvolving(spark, Seq((2, "b", 9.5)).toDF("k", "v", "extra"), dir, Sink.WriteAppend)
-    val merged = Sink.readMerged(spark, dir)
+    val merged = spark.read.option("mergeSchema", "true").parquet(dir)
     assert(merged.columns.toSet == Set("k", "v", "extra"))
     assert(merged.filter(col("extra").isNull).count() == 1)
     // an append that drops `v` keeps the union; one that retypes `v` is
     // rejected and writes nothing
     Sink.writeParquetEvolving(spark, Seq((3, 1.5)).toDF("k", "extra"), dir, Sink.WriteAppend)
-    assert(Sink.readMerged(spark, dir).columns.sorted.toSeq == Seq("extra", "k", "v"))
+    assert(spark.read.option("mergeSchema", "true").parquet(dir).columns.sorted.toSeq == Seq("extra", "k", "v"))
     intercept[Sink.SchemaEvolutionException] {
       Sink.writeParquetEvolving(spark, Seq((4, 1)).toDF("k", "v"), dir, Sink.WriteAppend)
     }
-    assert(Sink.readMerged(spark, dir).count() == 3)
+    assert(spark.read.option("mergeSchema", "true").parquet(dir).count() == 3)
   }
 
   test("sink: write-side evolution null-fills the union and verifies on-disk schema") {
@@ -79,7 +79,7 @@ class PipelineSpec extends SparkSpec {
     val u2 = Sink.writeParquetEvolving(
       spark, Seq((2, 9.5)).toDF("k", "extra"), dir, Sink.WriteAppend)
     assert(u2.fieldNames.toSeq == Seq("k", "v", "extra"))
-    val merged = Sink.readMerged(spark, dir)
+    val merged = spark.read.option("mergeSchema", "true").parquet(dir)
     assert(merged.count() == 2)
     // the run-2 file itself carries the full union (write-side, not just
     // read-side merge): reading it alone shows all three columns
@@ -133,7 +133,7 @@ class PipelineSpec extends SparkSpec {
     Sink.writeParquetEvolving(spark, Seq((2, "b", 9.5)).toDF("k", "v", "extra"), dir, Sink.WriteAppend)
     val union = Sink.writeParquetEvolving(spark, Seq((3, 1.5)).toDF("k", "extra"), dir, Sink.WriteAppend)
     assert(union.fieldNames.toSeq == Seq("k", "v", "extra"))
-    assert(union.fieldNames.toSeq == Sink.readMerged(spark, dir).schema.fieldNames.toSeq)
+    assert(union.fieldNames.toSeq == spark.read.option("mergeSchema", "true").parquet(dir).schema.fieldNames.toSeq)
   }
 
   test("sink: a failed WRITE_TRUNCATE leaves the destination whole") {
@@ -145,7 +145,7 @@ class PipelineSpec extends SparkSpec {
     intercept[Exception] {
       Sink.writeParquetEvolving(spark, failing, dir, Sink.WriteTruncate)
     }
-    val kept = Sink.readMerged(spark, dir)
+    val kept = spark.read.option("mergeSchema", "true").parquet(dir)
     assert(kept.columns.toSeq == Seq("k", "v"))
     assert(kept.select("k").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
   }
@@ -232,7 +232,7 @@ class PipelineSpec extends SparkSpec {
     assert(summary.results.collect { case Pipeline.Failed(id, _) => id } == Seq("bad_dates"))
     // schema evolved across the two successful configs: the added metric
     // column exists and is null for the first config's rows
-    val merged = Sink.readMerged(spark, dest)
+    val merged = spark.read.option("mergeSchema", "true").parquet(dest)
     assert(merged.columns.toSet ==
       Set("lfm&fact&date_str", "sum:value", "count:event_id"))
     assert(merged.filter(col("`count:event_id`").isNull).count() > 0)

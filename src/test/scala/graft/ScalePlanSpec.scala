@@ -309,7 +309,7 @@ class ScalePlanSpec extends SparkSpec {
 
   test("ivfPqTopKWithIndex: the ADC scan broadcast-probes the RELOADED parquet index by cell id") {
     val emb = graft.queries.Tables.t(spark, sf("sf0.001"), "embeddings")
-    val dir = s"/tmp/graft-test-annindex-plan/${spark.sparkContext.applicationId}"
+    val dir = s"${tempDir("graft-test-annindex-plan-")}/index"
     val base = graft.ops.Similarity.prepBase(emb, "vec_id", "embedding")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -262,7 +262,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("persisted IVF-PQ index: build -> reload -> query equals the in-job composite path") {
     val emb = graft.queries.Tables.t(spark, sf("sf0.001"), "embeddings")
-    val dir = s"/tmp/graft-test-annindex/${spark.sparkContext.applicationId}"
+    val dir = s"${tempDir("graft-test-annindex-")}/index"
     try {
       Similarity.buildIvfPqIndex(emb, "vec_id", "embedding",
         nClusters = 8, subspaces = 16, subDim = 4, nCodes = 64, dir)
@@ -288,7 +288,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("appendToIvfPqIndex: appended index ≡ full rebuild (codes AND query results); param mismatch fails loudly") {
     val emb = graft.queries.Tables.t(spark, sf("sf0.001"), "embeddings")
-    val root = s"/tmp/graft-test-annappend/${spark.sparkContext.applicationId}"
+    val root = tempDir("graft-test-annappend-")
     val (dirA, dirB) = (s"$root/a", s"$root/b")
     // the build slice keeps the codebook prefix (vec_id < 64), so the
     // frozen books equal the full-corpus rebuild's

@@ -103,7 +103,7 @@ class TokenPackSpec extends SparkSpec {
       (2L, "new newer newest new"),
       (3L, "low new low new")).toDF("doc_id", "text")
     val (merges, symIds) = TokenPack.trainTokenizer(docs, "text", numMerges = 3)
-    val dir = s"/tmp/graft-test-tokenizer/${spark.sparkContext.applicationId}"
+    val dir = s"${tempDir("graft-test-tokenizer-")}/artifact"
     try {
       TokenPack.saveTokenizer(spark, dir, merges, symIds)
       val (m2, s2) = TokenPack.loadTokenizer(spark, dir)
@@ -127,7 +127,7 @@ class TokenPackSpec extends SparkSpec {
   test("tokenizer artifact params: byteLevel rides the artifact; tampered metadata fails loudly") {
     val docs = Seq((1L, "aa ab aa"), (2L, "ab aa ab")).toDF("doc_id", "text")
     val (merges, symIds) = TokenPack.trainTokenizer(docs, "text", numMerges = 2, byteLevel = true)
-    val dir = s"/tmp/graft-test-tokparams/${spark.sparkContext.applicationId}"
+    val dir = s"${tempDir("graft-test-tokparams-")}/artifact"
     try {
       TokenPack.saveTokenizer(spark, dir, merges, symIds, byteLevel = true)
       // the checked load returns the build-time byteLevel, and the
