@@ -17,23 +17,30 @@ import org.apache.spark.sql.functions._
 object Analytics {
 
   /** Cohort retention: group users by the day of their first event, then
-    * count distinct active users per (cohort day, day offset). Two hash
-    * aggregates plus one join, all keyed on `userCol` — the firsts frame is
-    * |users| rows (≪ events), so Spark broadcasts it when small and
-    * co-shuffles on the shared key when not.
+    * count distinct active users per (cohort day, day offset). One hash
+    * aggregate keyed on `userCol` takes each user's cohort day
+    * (`min(to_date(ts))`, equal to `to_date(min(ts))` because `to_date`
+    * is monotone) and set of active days; the exploded (user, day) rows
+    * are distinct, so a plain count per (cohort day, offset) is the
+    * distinct-user count. One scan of `events`, no join.
+    *
+    * Null users are dropped. A null `ts` is an active "day" of its own:
+    * the struct wrapper keeps it in the set (`collect_set` skips null
+    * elements, not structs holding a null), so it counts under a null
+    * offset, and a user whose every `ts` is null lands in (null, null).
     */
-  def cohortRetention(events: DataFrame, userCol: String, tsCol: String): DataFrame = {
-    val firsts = events
-      .groupBy(col(userCol))
-      .agg(to_date(min(col(tsCol))).as("__cohort_date"))
+  def cohortRetention(events: DataFrame, userCol: String, tsCol: String): DataFrame =
     events
-      .select(col(userCol), to_date(col(tsCol)).as("__day"))
-      .join(firsts, userCol)
+      .filter(col(userCol).isNotNull)
+      .groupBy(col(userCol))
+      .agg(
+        min(to_date(col(tsCol))).as("__cohort_date"),
+        collect_set(struct(to_date(col(tsCol)).as("day"))).as("__days"))
+      .select(col("__cohort_date"), explode(col("__days")).as("__d"))
       .groupBy(
         date_format(col("__cohort_date"), "yyyy-MM-dd").as("cohort_day"),
-        datediff(col("__day"), col("__cohort_date")).cast("long").as("day_offset"))
-      .agg(count_distinct(col(userCol)).as("n_users"))
-  }
+        datediff(col("__d.day"), col("__cohort_date")).cast("long").as("day_offset"))
+      .agg(count(lit(1)).as("n_users"))
 
   /** Strictly-ordered funnel: how many users reached stage i, where a user
     * advances to stage i only via an event of type `stages(i)` STRICTLY

@@ -746,7 +746,7 @@ object Similarity {
     val wideM = Caching.materializeAndRelease(
       ivfPqCodes(base, codebook, subspaces, subDim, nCodes))
     ivfPqQueryFromCodes(
-      base, wideM, centroidsDf(base, codebook),
+      base, wideM, codebook,
       k, queryPred, nProbe, subspaces, subDim, nCodes, effRerankK)
   }
 
@@ -764,13 +764,6 @@ object Similarity {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
       .sortBy(_._1)
-
-  private def centroidsDf(
-      base: DataFrame,
-      codebook: Array[(Long, Array[Double], Double)]): DataFrame =
-    base.sparkSession
-      .createDataFrame(codebook.toSeq.map { case (cid, cv, cn) => (cid, cv.toSeq, cn) })
-      .toDF("centroid_id", "cv", "cn")
 
   /** The corpus-sized IVF-PQ INDEX frame — one row per vector: cell
     * assignment + positional PQ code word per subspace (`vid,
@@ -856,7 +849,9 @@ object Similarity {
       graft.util.Par.run(
         () => graft.util.ArtifactParams.write(
           spark, s"$dir/params", ivfPqParams(nClusters, subspaces, subDim, nCodes)),
-        () => centroidsDf(base, codebook)
+        () => spark
+          .createDataFrame(codebook.toSeq.map { case (cid, cv, cn) => (cid, cv.toSeq, cn) })
+          .toDF("centroid_id", "cv", "cn")
           .coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/centroids"),
         () => spark
@@ -906,9 +901,23 @@ object Similarity {
     val subspaces = params("subspaces").toInt
     val subDim = params("sub_dim").toInt
     val nCodes = params("n_codes").toInt
-    // the two bounded artifact collects are independent — overlap them
-    // (opt guide §2.6)
-    val (codebook, pqRows) = graft.util.Par.run2(
+    val (codebook, pqRows) = frozenCodebooks(spark, dir)
+    val base = prepBase(delta, idCol, vecCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try ivfPqCodes(base, codebook, subspaces, subDim, nCodes, Some(pqRows))
+      .write.mode("append").parquet(s"$dir/codes")
+    finally base.unpersist(false)
+  }
+
+  /** The two FROZEN codebooks of a persisted IVF-PQ index, each
+    * bounded and in ascending id order: the coarse `centroids` and the
+    * `pqbook` rows. The two collects are independent — they overlap as
+    * concurrent jobs (opt guide §2.6).
+    */
+  private def frozenCodebooks(
+      spark: org.apache.spark.sql.SparkSession,
+      dir: String): (Array[(Long, Array[Double], Double)], Array[(Long, Array[Double])]) =
+    graft.util.Par.run2(
       spark.read.parquet(s"$dir/centroids")
         .select("centroid_id", "cv", "cn").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
@@ -916,12 +925,6 @@ object Similarity {
       spark.read.parquet(s"$dir/pqbook")
         .select("vid", "v").collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1))
-    val base = prepBase(delta, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try ivfPqCodes(base, codebook, subspaces, subDim, nCodes, Some(pqRows))
-      .write.mode("append").parquet(s"$dir/codes")
-    finally base.unpersist(false)
-  }
 
   /** IVF-PQ top-k against a PERSISTED index ([[buildIvfPqIndex]]): the
     * probe/LUT/ADC/re-rank pipeline runs over the RELOADED `codes` and
@@ -948,8 +951,8 @@ object Similarity {
     val base = prepBase(emb, idCol, vecCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // three independent bounded actions — params validation, the corpus
-    // count behind the adaptive re-rank depth, and the frozen-pqbook
-    // collect — overlap as concurrent jobs (opt guide §2.6). The params
+    // count behind the adaptive re-rank depth, and the frozen-codebook
+    // collects — overlap as concurrent jobs (opt guide §2.6). The params
     // check still fails loudly BEFORE any result is produced: a
     // mismatched subDim/nCodes would score the persisted codes against a
     // freshly derived (stale) codebook and silently return wrong
@@ -962,7 +965,7 @@ object Similarity {
     // the persisted codes against the wrong centroids and silently
     // degrade candidates (masked by the exact re-rank). On an unchanged
     // corpus the two books are row-identical, so results are unchanged.
-    val (_, baseCount, pqRows) = graft.util.Par.run3(
+    val (_, baseCount, (codebook, pqRows)) = graft.util.Par.run3(
       graft.util.ArtifactParams.validate(
         spark, s"$indexDir/params",
         Seq(
@@ -971,16 +974,14 @@ object Similarity {
           "sub_dim" -> subDim.toString,
           "n_codes" -> nCodes.toString)),
       base.count(),
-      spark.read.parquet(s"$indexDir/pqbook")
-        .select("vid", "v").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).sortBy(_._1))
+      frozenCodebooks(spark, indexDir))
     val effRerankK =
       if (rerankK == AdaptiveRerank) adaptiveRerankK(baseCount) else rerankK
     Caching.materializeAndRelease(
       ivfPqQueryFromCodes(
         base,
         spark.read.parquet(s"$indexDir/codes"),
-        spark.read.parquet(s"$indexDir/centroids"),
+        codebook,
         k, queryPred, nProbe, subspaces, subDim, nCodes, effRerankK,
         pqRows = Some(pqRows)),
       base)
@@ -993,7 +994,7 @@ object Similarity {
   private[graft] def ivfPqQueryFromCodes(
       base: DataFrame,
       wideM: DataFrame,
-      centroids: DataFrame,
+      codebook: Array[(Long, Array[Double], Double)],
       k: Int,
       queryPred: Column,
       nProbe: Int,
@@ -1007,18 +1008,12 @@ object Similarity {
       // construction)
       pqRows: Option[Array[(Long, Array[Double])]] = None
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // query side: probe ranking (ivfTopKFromBase convention) …
-    val wProbe = Window.partitionBy("query_id").orderBy(col("psim").desc, col("centroid_id").asc)
-    val probes = base
-      .filter(queryPred)
-      .select(col("cid").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      .crossJoin(broadcast(centroids))
-      .select(
-        col("query_id"), col("centroid_id"),
-        (fastDot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("psim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
+    // query side: the probed cells (ivfTopKFromBase's ranking) …
+    val probes = probeCells(
+      base
+        .filter(queryPred)
+        .select(col("cid").as("query_id"), col("v").as("qv"), col("nrm").as("qn")),
+      codebook, nProbe)
       .select(col("query_id"), col("centroid_id"))
     // … and the per-query ADC lookup tables (pqAdcTopKFromBase convention)
     val cbCols = (0 until subspaces).map { s =>
@@ -1075,8 +1070,8 @@ object Similarity {
     *     IVF's premise is that the coarse codebook is tiny) and folded
     *     into ONE nested-CASE projection of codegen'd dots: assignment is
     *     a pure per-row map, zero shuffle, zero joins.
-    *  2. PROBE — each query ranks the same centroids and keeps `nProbe`;
-    *     the query set is small by construction.
+    *  2. PROBE — each query ranks the same centroids and keeps `nProbe`,
+    *     sorted inside its own row ([[probeCells]]): no shuffle, no window.
     *  3. SEARCH — candidates = corpus ⋈ probes hash-joined on the cluster
     *     id (the one irreducible shuffle), exact cosine, bounded top-k.
     *
@@ -1161,18 +1156,13 @@ object Similarity {
       nClusters: Int = 8,
       nProbe: Int = 2,
       trainIterations: Int = 0
-  ): DataFrame = {
-    val base = prepBase(emb, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caching.materializeAndRelease(
-      ivfTopKFromBase(base, k, queryPred, nClusters, nProbe, trainIterations),
-      base)
-  }
+  ): DataFrame =
+    ivfTopKFromBase(prepBase(emb, idCol, vecCol), k, queryPred, nClusters, nProbe, trainIterations)
 
-  /** [[ivfTopK]]'s lazy plan over an already-PERSISTED `(cid, v, nrm)`
-    * base — the caller owns the persist/release lifecycle (the base is
-    * scanned by the codebook collect, the assignment, and the probe
-    * sides, so running it unpersisted recomputes the corpus per scan).
+  /** [[ivfTopK]]'s lazy plan over a `(cid, v, nrm)` base. The base is
+    * read by the codebook collect, by each Lloyd step and by the returned
+    * plan; a caller that runs several pipelines over one corpus
+    * (`ann_recall_at_k`) persists it once and owns its release.
     */
   private[graft] def ivfTopKFromBase(
       base: DataFrame,
@@ -1182,33 +1172,18 @@ object Similarity {
       nProbe: Int,
       trainIterations: Int
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // driver-side codebook (bounded: nClusters rows), ascending cid;
     // init = first k vectors (deterministic), optionally refined by
     // `trainIterations` Lloyd steps so the partitioning reflects the data
     // rather than an arbitrary sample
-    val init = base
-      .filter(col("cid") < nClusters)
-      .select(col("cid").as("centroid_id"), col("v").as("cv"), col("nrm").as("cn"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_._1)
+    val init = ivfCoarseCodebook(base, nClusters)
     val codebook = (1 to trainIterations).foldLeft(init)((cb, _) => lloydStep(base, cb))
-    val centroids = base.sparkSession
-      .createDataFrame(codebook.toSeq.map { case (cid, cv, cn) => (cid, cv.toSeq, cn) })
-      .toDF("centroid_id", "cv", "cn")
     val assigned = assignToCodebook(base, codebook)
-    val wProbe = Window.partitionBy("query_id").orderBy(col("psim").desc, col("centroid_id").asc)
-    val probes = base
-      .filter(queryPred)
-      .select(col("cid").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-      .crossJoin(broadcast(centroids))
-      .select(
-        col("query_id"), col("qv"), col("qn"), col("centroid_id"),
-        (fastDot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("psim"))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("qn"), col("centroid_id"))
+    val probes = probeCells(
+      base
+        .filter(queryPred)
+        .select(col("cid").as("query_id"), col("v").as("qv"), col("nrm").as("qn")),
+      codebook, nProbe)
     val joined = assigned
       .join(probes, Seq("centroid_id"))
       .filter(col("cid") =!= col("query_id"))
@@ -1217,6 +1192,32 @@ object Similarity {
         col("cid").as("neighbor_id"),
         (fastDot(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim"))
     rankTopK(joined, k)
+  }
+
+  /** The `nProbe` cells of `codebook` each query row probes: one output
+    * row per (query row, probed cell), `centroid_id` appended. A query
+    * row `(qv, qn)` scores every cell with the cosine
+    * [[assignToCodebook]] computes, `fastDot(qv, cv) / (qn · cn)`, and
+    * keeps the first `nProbe` in (sim desc, centroid_id asc) order —
+    * sorted in the projection as `struct(sim, -centroid_id)` descending,
+    * which is the order a `row_number` window over a cross join with the
+    * codebook gives, NaN (greatest) and ±0 (equal) included, with no
+    * shuffle: the codebook is a driver array.
+    */
+  private[graft] def probeCells(
+      queries: DataFrame,
+      codebook: Array[(Long, Array[Double], Double)],
+      nProbe: Int
+  ): DataFrame = {
+    val ranked = array(codebook.toIndexedSeq.map { case (cid, cv, cn) =>
+      struct(
+        (fastDot(col("qv"), typedLit(cv)) / (col("qn") * lit(cn))).as("sim"),
+        lit(-cid).as("neg_cid"))
+    }: _*)
+    queries
+      .withColumn("__probe", explode(slice(sort_array(ranked, asc = false), 1, nProbe)))
+      .withColumn("centroid_id", -col("__probe.neg_cid"))
+      .drop("__probe")
   }
 
   /** Deterministic ±1 for (plane, dim) — splitmix64-style driver-side

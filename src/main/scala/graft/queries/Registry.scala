@@ -79,8 +79,10 @@ object Tables {
     * the first data file's footer, read here on the driver
     * ([[FooterSchema.firstFileSchema]]). Where that does not apply, the
     * plain read infers it (or raises its error for a path with no data).
+    * The stream drains take their source schema from it too
+    * (`graft.streaming.EventStream`), so batch and stream open alike.
     */
-  private def open(s: SparkSession, path: String): DataFrame = {
+  private[graft] def open(s: SparkSession, path: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     FooterSchema.firstFileSchema(s, path) match {
       case Some(schema) => s.read.schema(schema).parquet(path)

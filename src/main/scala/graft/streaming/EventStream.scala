@@ -388,12 +388,12 @@ object EventStream {
     // one full query lifecycle: build from scratch (as a restarted job
     // would), drain whatever is newly available, stop
     def drainStage(stage: String): Unit = {
-      val schema = spark.read.parquet(srcDir.getAbsolutePath).schema
       // a FRESH scoped session per lifecycle, like a real restarted job;
       // both size state identically (the checkpoint pins the state-store
       // count at first start)
-      val in = stateScopedSession(spark, srcDir.getAbsolutePath).readStream
-        .schema(schema)
+      val ss = stateScopedSession(spark, srcDir.getAbsolutePath)
+      val in = ss.readStream
+        .schema(graft.queries.Tables.open(ss, srcDir.getAbsolutePath).schema)
         .parquet(srcDir.getAbsolutePath)
         .withWatermark("ts", watermarkDelay)
       val q = sessionizeStream(in, gapMs)
@@ -435,9 +435,19 @@ object EventStream {
     * same-batch dedup depends on partition arrival order (not
     * deterministic), but the surviving key set is — it equals the batch
     * DISTINCT the oracle replays.
+    *
+    * The drain is ONE micro-batch. `dropDuplicatesWithinWatermark` emits
+    * a key the first time it sees it, so the no-data batch AvailableNow
+    * would schedule after the data batch emits nothing: its only work is
+    * evicting watermark-expired keys from state stores that are dropped
+    * when the drain ends. This drain's own session turns that batch off.
+    * The other drains keep it: append-mode windows, event-time-timeout
+    * sessions and outer joins emit on eviction.
     */
   def dedupRunOnce(spark: SparkSession, srcPath: String, watermarkDelay: String): DataFrame = {
-    val in = streamEvents(stateScopedSession(spark, srcPath), srcPath)
+    val ss = stateScopedSession(spark, srcPath)
+    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    val in = streamEvents(ss, srcPath)
       .select(
         col("user_id").cast("long").as("user_id"),
         col("event_type"),
@@ -453,12 +463,12 @@ object EventStream {
     * UTC-adjusted µs — exactly like the batch loader
     * graft.queries.Tables.t; watermarks reject NTZ). The file stream
     * source only accepts directories: a single-file fixture is read via
-    * its parent + a glob pinned to the file name. The schema probe reads
-    * footers only, no data scan.
+    * its parent + a glob pinned to the file name. The schema is the batch
+    * open's (`Tables.open`: nanos read as long, the first footer read on
+    * the driver), so starting the stream runs no Spark job.
     */
-  private def streamEvents(spark: SparkSession, srcPath: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(srcPath).schema
+  private[graft] def streamEvents(spark: SparkSession, srcPath: String): DataFrame = {
+    val schema = graft.queries.Tables.open(spark, srcPath).schema
     val f = new java.io.File(srcPath)
     val reader =
       if (f.isDirectory) spark.readStream.schema(schema)
@@ -649,7 +659,8 @@ object EventStream {
       isNewCol.as("is_new"),
       isBenchCol.as("is_bench"))
     // static bounded indexes, built ONCE batch-side (never per micro-batch)
-    val all = shaped(ss.read.parquet(srcPath))
+    val raw = graft.queries.Tables.open(ss, srcPath)
+    val all = shaped(raw)
     val snapHashes = all.filter(!col("is_new"))
       .select(md5(coalesce(col("text"), lit(""))).as("h")).distinct()
       .withColumn("__in_snap", lit(true))
@@ -659,7 +670,7 @@ object EventStream {
       .localCheckpoint(true)
     val f = new java.io.File(srcPath)
     val reader0 = ss.readStream
-      .schema(ss.read.parquet(srcPath).schema)
+      .schema(raw.schema)
       // slice the source into real micro-batches where the fixture has
       // multiple files (the scaled fixtures are 32-file splittable)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
@@ -843,6 +854,11 @@ object EventStream {
     // is this one's).
     ss.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
     ss.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
+    // No-data micro-batches stay on here: the append-mode window, the
+    // sessionizer's event-time timeout and the outer join emit on state
+    // eviction, which only that batch runs. The dedup drain, which emits
+    // nothing on eviction, turns them off on its own session
+    // ([[dedupRunOnce]]).
     ss.conf.set("spark.sql.shuffle.partitions", stateParallelism(ss, srcPath).toString)
     ss
   }

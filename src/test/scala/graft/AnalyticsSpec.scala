@@ -26,6 +26,54 @@ class AnalyticsSpec extends SparkSpec {
       ("2024-01-02", 1L) -> 1L))
   }
 
+  test("cohortRetention equals the two-scan join form on null users and null timestamps") {
+    // the two-scan form cohortRetention replaced, kept here as the
+    // reference: per-user first day, joined back to every event, then a
+    // distinct-user count per (cohort day, offset)
+    def reference(events: org.apache.spark.sql.DataFrame) = {
+      val firsts = events
+        .groupBy(col("user_id"))
+        .agg(to_date(min(col("ts"))).as("__cohort_date"))
+      events
+        .select(col("user_id"), to_date(col("ts")).as("__day"))
+        .join(firsts, "user_id")
+        .groupBy(
+          date_format(col("__cohort_date"), "yyyy-MM-dd").as("cohort_day"),
+          datediff(col("__day"), col("__cohort_date")).cast("long").as("day_offset"))
+        .agg(count_distinct(col("user_id")).as("n_users"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.getString(0)), Option(r.get(1)), r.getLong(2))).toSet
+    val events = Seq[(Option[Long], Option[Timestamp])](
+      (Some(1L), Some(ts("2024-01-01 10:00:00"))),
+      (Some(1L), Some(ts("2024-01-01 11:00:00"))), // same day twice: one user
+      (Some(1L), Some(ts("2024-01-03 09:00:00"))),
+      (Some(1L), None),                            // null ts: a null offset
+      (Some(2L), Some(ts("2024-01-01 23:00:00"))),
+      (Some(2L), None),
+      (Some(3L), None),                            // every ts null: (null, null)
+      (Some(3L), None),
+      (Some(4L), None),
+      (None, Some(ts("2024-01-01 12:00:00"))),     // null user: dropped
+      (None, Some(ts("2024-01-02 12:00:00"))),
+      (None, None)
+    ).toDF("user_id", "ts")
+    val out = rows(Analytics.cohortRetention(events, "user_id", "ts"))
+    assert(out == rows(reference(events)))
+    assert(out == Set(
+      (Some("2024-01-01"), Some(0L), 2L),
+      (Some("2024-01-01"), Some(2L), 1L),
+      (Some("2024-01-01"), None, 2L),
+      (None, None, 2L)))
+  }
+
+  test("cohortRetention scans events once") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val df = SparkEntry.queries("q_cohort_retention")(spark, sf("sf0.001"))
+    val scans = df.queryExecution.optimizedPlan.collect { case r: LogicalRelation => r }
+    assert(scans.size == 1, df.queryExecution.optimizedPlan.treeString)
+  }
+
   test("funnelStages: strict ordering, same-timestamp events cannot leapfrog") {
     val events = Seq(
       // u1 completes the funnel in order

@@ -130,6 +130,25 @@ class FixtureContractSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  test("a stream drain opens its source without a Spark job, with the plain read's schema") {
+    val root = tempDir("graft-stream-open-")
+    val l = new QueryListener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      encodings.foreach { enc =>
+        val path = s"${writeEvents(s"$root/$enc", enc)}/events.parquet"
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        l.reset()
+        val stream = graft.streaming.EventStream.streamEvents(spark, path)
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        assert(l.jobSpans.isEmpty, s"encoding $enc: opening the stream ran ${l.jobSpans.size} jobs")
+        assert(stream.isStreaming)
+        val want = Tables.normalizeTs(spark.read.parquet(path)).schema
+        assert(stream.schema == want, s"encoding $enc: streamed as ${stream.schema}, a plain read gives $want")
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("Tables.t falls back to the plain read where no first footer gives the schema") {
     import org.apache.spark.sql.AnalysisException
     val root = tempDir("graft-open-fallback-")

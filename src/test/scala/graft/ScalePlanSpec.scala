@@ -284,6 +284,20 @@ class ScalePlanSpec extends SparkSpec {
     assert(bnlj <= 2, s"only the scalar pairings may nest-loop, got $bnlj:\n$plan")
   }
 
+  test("ann_ivf_topk is a lazy plan that ranks probes without a window") {
+    val df = graft.SparkEntry.queries("ann_ivf_topk")(spark, sf("sf0.001"))
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    // probes are ranked in a projection against the driver-side codebook:
+    // no cross join, no window, and the result is no checkpoint scan
+    assert(!plan.contains("Window"), plan)
+    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
+    val ivf = graft.ops.Similarity.ivfTopK(
+      graft.queries.Tables.t(spark, sf("sf0.001"), "embeddings"), "vec_id", "embedding",
+      k = 5, queryPred = col("cid") < 50, nClusters = 8, nProbe = 5)
+    assert(!ivf.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+  }
+
   test("ivfPqTopK: ADC scan is a broadcast probe by cell id — corpus codes never shuffle") {
     val base = graft.ops.Similarity
       .prepBase(
@@ -319,7 +333,10 @@ class ScalePlanSpec extends SparkSpec {
         .ivfPqQueryFromCodes(
           base,
           spark.read.parquet(s"$dir/codes"),
-          spark.read.parquet(s"$dir/centroids"),
+          spark.read.parquet(s"$dir/centroids")
+            .select("centroid_id", "cv", "cn").collect()
+            .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
+            .sortBy(_._1),
           k = 5, queryPred = col("cid") < 30, nProbe = 3,
           subspaces = 4, subDim = 16, nCodes = 8, effRerankK = 0)
         .queryExecution.executedPlan.toString

@@ -126,6 +126,51 @@ class SimilaritySpec extends SparkSpec {
     assert(ivf2a.nonEmpty)
   }
 
+  test("IVF probe ranking equals the cross-join window ranking: ties, NaN sims, zero vectors") {
+    import org.apache.spark.sql.expressions.Window
+    val nan = Double.NaN
+    // cells 0 and 1 are equidistant from query 10; cell 3's NaN
+    // coordinate gives every query a NaN sim against it
+    val codebook = Array(
+      (0L, Array(1.0, 0.0), 1.0),
+      (1L, Array(0.0, 1.0), 1.0),
+      (2L, Array(-1.0, 0.0), 1.0))
+    val withNaN = codebook :+ ((3L, Array(nan, 0.0), nan))
+    def queries(rows: (Long, Seq[Double])*) = rows.toDF("query_id", "qv")
+      .withColumn("qn", sqrt(Similarity.fastDot(col("qv"), col("qv"))))
+    // the cross-join window ranking probeCells replaced, kept here as the
+    // reference: sim desc, then centroid_id asc
+    def reference(q: org.apache.spark.sql.DataFrame, cb: Array[(Long, Array[Double], Double)], nProbe: Int) = {
+      val centroids = cb.toSeq.map { case (cid, cv, cn) => (cid, cv.toSeq, cn) }
+        .toDF("centroid_id", "cv", "cn")
+      val w = Window.partitionBy("query_id").orderBy(col("psim").desc, col("centroid_id").asc)
+      q.crossJoin(broadcast(centroids))
+        .withColumn("psim", Similarity.fastDot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= nProbe)
+        .select("query_id", "centroid_id")
+    }
+    def probed(q: org.apache.spark.sql.DataFrame, cb: Array[(Long, Array[Double], Double)], nProbe: Int) =
+      Similarity.probeCells(q, cb, nProbe).select("query_id", "centroid_id")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long)].collect().toSet
+    val q = queries(
+      10L -> Seq(1.0, 1.0),  // ties cells 0 and 1
+      11L -> Seq(0.0, 1.0),  // cell 1, then a tie of cells 0 and 2 at sim 0
+      12L -> Seq(nan, 1.0))  // NaN against every cell
+    for ((cb, nProbe) <- Seq(codebook -> 1, codebook -> 2, withNaN -> 1, withNaN -> 2, withNaN -> 9))
+      assert(pairs(probed(q, cb, nProbe)) == pairs(reference(q, cb, nProbe)), s"nProbe=$nProbe")
+    assert(pairs(probed(q, codebook, 1)) == Set(10L -> 0L, 11L -> 1L, 12L -> 0L))
+    assert(pairs(probed(q, codebook, 2)) == Set(10L -> 0L, 10L -> 1L, 11L -> 1L, 11L -> 0L, 12L -> 0L, 12L -> 1L))
+    // a NaN sim ranks above every number, as it does in the window
+    assert(pairs(probed(q, withNaN, 1)) == Set(10L -> 3L, 11L -> 3L, 12L -> 0L))
+    // a zero vector divides by a zero norm, which ANSI mode rejects in
+    // both forms
+    val zero = queries(13L -> Seq(0.0, 0.0))
+    val ref = intercept[Exception](pairs(reference(zero, codebook, 1)))
+    val got = intercept[Exception](pairs(probed(zero, codebook, 1)))
+    assert(got.getMessage.contains("DIVIDE_BY_ZERO") && ref.getMessage.contains("DIVIDE_BY_ZERO"), got)
+  }
+
   test("Lloyd-trained IVF: deterministic, and exact at full probe") {
     val df = graft.queries.Tables.t(spark, sf("sf0.001"), "embeddings")
     // training refines the partitioning, not the search math: probing

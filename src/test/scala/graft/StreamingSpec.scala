@@ -108,6 +108,52 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("dedupRunOnce drains a two-file source in one micro-batch to the batch DISTINCT") {
+    import spark.implicits._
+    val dir = tempDir("dedup-two-files")
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    // (user 1, click) is re-delivered in the second file five minutes
+    // later, inside the 10-minute watermark
+    Seq((1L, "click", ts("2024-01-01 10:00:00")), (2L, "view", ts("2024-01-01 10:01:00")))
+      .toDF("user_id", "event_type", "ts").coalesce(1).write.parquet(s"$dir/a")
+    Seq((1L, "click", ts("2024-01-01 10:05:00")), (3L, "view", ts("2024-01-01 10:02:00")))
+      .toDF("user_id", "event_type", "ts").coalesce(1).write.parquet(s"$dir/b")
+    val src = new java.io.File(s"$dir/src")
+    src.mkdirs()
+    for ((part, i) <- Seq("a", "b").zipWithIndex) {
+      val f = new java.io.File(s"$dir/$part").listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(f.toPath, new java.io.File(src, s"$part-$i.parquet").toPath)
+    }
+    val l = new QueryListener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      l.reset()
+      val out = EventStream.dedupRunOnce(spark, src.getPath, "10 minutes")
+        .as[(Long, String)].collect().toList.sorted
+      val distinct = spark.read.parquet(src.getPath).select("user_id", "event_type").distinct()
+        .as[(Long, String)].collect().toList.sorted
+      assert(out == distinct)
+      assert(out == List(1L -> "click", 2L -> "view", 3L -> "view"))
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      assert(l.batches.size == 1, l.batches.map(_.batchId))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("q_stream_dedup drains in one micro-batch") {
+    val l = new QueryListener
+    spark.sparkContext.addSparkListener(l)
+    try {
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      l.reset()
+      val rows = SparkEntry.queries("q_stream_dedup")(spark, sf("sf0.001")).count()
+      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+      assert(rows > 0)
+      val dedup = l.batches.filter(p => Option(p.name).exists(_.startsWith("stream_dedup")))
+      assert(dedup.size == 1, dedup.map(p => (p.batchId, p.numInputRows)))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("sessionizeStream closes a trailing session via event-time timeout") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
