@@ -65,30 +65,16 @@ object Dedup {
       .select("id_a", "id_b", "inter", "size_a", "size_b")
 
   /** Near-duplicate pairs by exact n-gram Jaccard ≥ num/den, via the
-    * inverted-index join. Output carries the integer evidence
-    * (intersection + set sizes) — bitwise reproducible, no FP.
+    * inverted-index join over a `(sid, s)` shingle frame ([[shingleRows]],
+    * the input every shingle-based op in the family starts from). Output
+    * carries the integer evidence (intersection + set sizes) — bitwise
+    * reproducible, no FP.
     *
     * Scale note: candidate pairs = Σ_shingle freq² — bounded by shingle
     * selectivity, not corpus². For heavy shingles (stopword n-grams) a
     * production run would drop shingles with document frequency above a
     * cap (they cannot discriminate near-dups anyway); `maxShingleFreq`
     * implements that guard.
-    */
-  def ngramJaccardPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      thresholdNum: Int,
-      thresholdDen: Int,
-      maxShingleFreq: Option[Int] = None
-  ): DataFrame =
-    ngramJaccardPairsFromShingles(
-      shingleRows(df, idCol, textCol, n), thresholdNum, thresholdDen, maxShingleFreq)
-
-  /** [[ngramJaccardPairs]] over a pre-built `(sid, s)` shingle frame
-    * (see `DedupQueries.shingles`), the input every shingle-based op in
-    * the family can start from.
     */
   def ngramJaccardPairsFromShingles(
       shingles: DataFrame,
@@ -166,23 +152,9 @@ object Dedup {
     * longer one (quotes, excerpts, page-in-page boilerplate), which
     * symmetric Jaccard misses once the size ratio grows. Emits one row
     * per (contained, container) DIRECTION that clears the threshold, so
-    * a mutually-overlapping pair can appear twice. Same inverted-index
-    * blocking and integer-exact arithmetic as [[ngramJaccardPairs]].
-    */
-  def containmentPairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      thresholdNum: Int,
-      thresholdDen: Int,
-      maxShingleFreq: Option[Int] = None
-  ): DataFrame =
-    containmentPairsFromShingles(
-      shingleRows(df, idCol, textCol, n), thresholdNum, thresholdDen, maxShingleFreq)
-
-  /** [[containmentPairs]] over a pre-built `(sid, s)` shingle frame
-    * (shared-build shape, see [[ngramJaccardPairsFromShingles]]).
+    * a mutually-overlapping pair can appear twice. Same `(sid, s)`
+    * shingle input, inverted-index blocking and integer-exact arithmetic
+    * as [[ngramJaccardPairsFromShingles]].
     */
   def containmentPairsFromShingles(
       shingles: DataFrame,
@@ -445,31 +417,6 @@ object Dedup {
     Array.tabulate(numHashes)(j => (chunk60(s"graft-minhash-a:$j") + 1, chunk60(s"graft-minhash-b:$j")))
   }
 
-  /** MinHash signatures: numHashes min-values per doc over the affine
-    * family `h_j(s) = (a_j·h(s) + b_j) mod (2^61−1)` with h the 60-bit
-    * md5 chunk of the shingle and per-lane constants from [[laneCoeffs]]
-    * (the classic universal-hash MinHash over a Mersenne-prime field).
-    * Deterministic across executors AND across engines (md5 + integer
-    * arithmetic — the DuckDB oracle replays the banding exactly with the
-    * same constants; an xxhash64 family would be marginally faster but
-    * unverifiable).
-    *
-    * Shape note: a 64-column `min` aggregate compiles to a janino class so
-    * large that codegen/JIT costs dominate (seconds of compile per query —
-    * measured). The idiomatic escape hatch is a typed groupByKey/mapGroups
-    * with a primitive accumulator: shingle hashing stays codegen'd in the
-    * projection, the shuffle carries (long, long) pairs, and the
-    * signature fold is a tight JVM loop. Id column must be integral.
-    */
-  def minhashSignatures(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int,
-      numHashes: Int
-  ): DataFrame =
-    signaturesFromShingles(shingleRows(df, idCol, textCol, shingleN), numHashes)
-
   /** The per-doc signature fold as a typed `Aggregator` (the TopKAgg
     * recipe): hashing stays a codegen'd projection, and because the
     * aggregator gets map-side PARTIAL aggregation, each map task folds
@@ -518,6 +465,16 @@ object Dedup {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   }
 
+  /** MinHash signatures: numHashes min-values per doc over the affine
+    * family `h_j(s) = (a_j·h(s) + b_j) mod (2^61−1)` with h the 60-bit
+    * md5 chunk of the shingle and per-lane constants from [[laneCoeffs]]
+    * (the classic universal-hash MinHash over a Mersenne-prime field).
+    * Deterministic across executors AND across engines (md5 + integer
+    * arithmetic — the DuckDB oracle replays the banding exactly with the
+    * same constants; an xxhash64 family would be marginally faster but
+    * unverifiable). The fold is [[MinHashAgg]]. Id column must be
+    * integral.
+    */
   private def signaturesFromShingles(shingles: DataFrame, numHashes: Int): DataFrame = {
     val sigAgg = org.apache.spark.sql.functions.udaf(new MinHashAgg(numHashes))
     shingles
@@ -527,24 +484,11 @@ object Dedup {
       .agg(sigAgg(col("h")).as("sig"))
   }
 
-  /** LSH banding: group r consecutive signature components per band, emit
-    * (band, bandKey) keys, self-join per bucket → candidate pairs.
-    * Probability a pair with Jaccard j collides: 1-(1-j^r)^b.
-    */
-  def lshCandidatePairs(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16
-  ): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    candidatesFromShingles(shingleRows(df, idCol, textCol, shingleN), numHashes, bands)
-  }
-
-  /** [[lshCandidatePairs]] over a pre-built `(sid, s)` shingle frame
-    * (shared-build shape, see [[ngramJaccardPairsFromShingles]]).
+  /** MinHash LSH candidate pairs from a `(sid, s)` shingle frame
+    * ([[shingleRows]]): [[signaturesFromShingles]], then banding — group
+    * r consecutive signature components per band, emit (band, bandKey)
+    * keys, self-join per bucket. Probability a pair with Jaccard j
+    * collides: 1-(1-j^r)^b.
     */
   def lshCandidatePairsFromShingles(
       shingles: DataFrame,
@@ -563,10 +507,6 @@ object Dedup {
     materializeAndRelease(bandedPairs(sig, numHashes, bands), sig)
   }
 
-  /** Same-bucket pairs from a persisted signature frame: band keys,
-    * bucket self-join, `id_a < id_b` dedup. Shared by the plain candidate
-    * path and the estimate-carrying path.
-    */
   /** Per-document LSH band keys from a signature frame: `(sid, band,
     * bh)` — the join-ready index rows. The band key is a fixed-width
     * 60-bit md5 chunk of the r-component tuple, not the tuple itself:
@@ -588,6 +528,10 @@ object Dedup {
       .select(col("sid"), col("bk.band").as("band"), col("bk.bh").as("bh"))
   }
 
+  /** Same-bucket pairs from a persisted signature frame: band keys,
+    * bucket self-join, `id_a < id_b` dedup. Shared by the plain candidate
+    * path and the estimate-carrying path.
+    */
   private def bandedPairs(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     // Self-join exchange dedup: measured and NOT available under AQE in
     // this Spark — ReusedExchange fires only with AQE disabled (verified
@@ -754,28 +698,15 @@ object Dedup {
     materializeAndRelease(out)
   }
 
-  /** LSH candidate pairs annotated with the MinHash Jaccard ESTIMATE —
-    * the fraction of the numHashes signature lanes on which the two
-    * documents agree. This is the sketch-only dedup scorer: at 100 TB the
-    * estimate ranks/filters candidates WITHOUT touching the documents'
-    * shingle sets again (the estimate join moves docs×numHashes longs,
-    * not the corpus), and only survivors go to the exact verifier.
-    * Estimator contract: E[matched/numHashes] = Jaccard, σ ≈
-    * sqrt(J(1−J)/numHashes) — at 64 lanes, ±0.06 at J=0.5.
-    */
-  def lshCandidatePairsWithEst(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16
-  ): DataFrame =
-    lshCandidatePairsWithEstFromShingles(
-      shingleRows(df, idCol, textCol, shingleN), numHashes, bands)
-
-  /** [[lshCandidatePairsWithEst]] over a pre-built `(sid, s)` shingle
-    * frame (shared-build shape, see [[ngramJaccardPairsFromShingles]]).
+  /** LSH candidate pairs ([[lshCandidatePairsFromShingles]]'s set)
+    * annotated with the MinHash Jaccard ESTIMATE — the fraction of the
+    * numHashes signature lanes on which the two documents agree. This is
+    * the sketch-only dedup scorer: at 100 TB the estimate ranks/filters
+    * candidates WITHOUT touching the documents' shingle sets again (the
+    * estimate join moves docs×numHashes longs, not the corpus), and only
+    * survivors go to the exact verifier. Estimator contract:
+    * E[matched/numHashes] = Jaccard, σ ≈ sqrt(J(1−J)/numHashes) — at 64
+    * lanes, ±0.06 at J=0.5.
     */
   def lshCandidatePairsWithEstFromShingles(
       shingles: DataFrame,
@@ -932,7 +863,7 @@ object Dedup {
     * pairs in O(docs × bands), then ONLY those pairs get the exact
     * integer-Jaccard verification via the inverted index. Pair-space work
     * collapses from Σ freq² to |candidates|; output schema matches
-    * ngramJaccardPairs so the verifier is a drop-in exact check.
+    * ngramJaccardPairsFromShingles so the verifier is a drop-in exact check.
     */
   def lshVerifiedPairs(
       df: DataFrame,
@@ -978,7 +909,7 @@ object Dedup {
     * exactly replayable by the DuckDB oracle (a single signed 64-bit
     * signature would need `1<<63`, which ANSI engines reject).
     *
-    * Same shape decision as minhashSignatures: token hashing is a
+    * Same shape decision as the MinHash signatures: token hashing is a
     * codegen'd projection, the 64-lane bit-count fold is a typed
     * mapGroups with a primitive array accumulator (a 64-column SQL
     * aggregate pays seconds of janino/JIT compile). One shuffle of

@@ -424,9 +424,10 @@ object Multimodal {
   }
 
   /** Hamming-band recipe over 56-bit dHashes: [[PhashBands]] bands of
-    * [[PhashBandBits]] bits. Shared by `mm_phash_dedup` and the
-    * RecallProbe `phash_band_recall` line so the probe measures the
-    * EXACT production candidate path.
+    * [[PhashBandBits]] bits, shared by `mm_phash_dedup` and
+    * `mm_audio_dedup`. Its planted-pair tail recall per Hamming distance
+    * is committed in `bench/r19_phash_band_recall.txt` and pinned by
+    * `PhashBandSpec`.
     */
   val PhashBands = 4
   val PhashBandBits = 14

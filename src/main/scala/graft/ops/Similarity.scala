@@ -29,9 +29,7 @@ object Similarity {
     */
   val ScaleGuardMarker = "exceed the validation bound"
 
-  /** SRP plane auto-scaling used by srpVerifiedPlan and mirrored by
-    * tools.RecallProbe (single definition so the probe reports the plane
-    * count the production path actually used). ceil(log2(n/250)) in
+  /** SRP plane auto-scaling used by srpVerifiedPlan. ceil(log2(n/250)) in
     * exact integer arithmetic: the FP form (Math.log ratio) sits on a
     * rounding boundary exactly at n = 250·2^k — the gate corpus
     * (2000 = 250·2^3) lands there, and a libm ulp either way would
@@ -40,7 +38,7 @@ object Similarity {
     * all integer n > 250 (2^k ≥ n/250 ⟺ 2^k ≥ ⌈n/250⌉ since 2^k is an
     * integer).
     */
-  def effPlanesFor(n: Long, requested: Int): Int =
+  private def effPlanesFor(n: Long, requested: Int): Int =
     math.max(
       requested,
       if (n <= 250) requested
@@ -487,7 +485,7 @@ object Similarity {
     * SIZE rerankK WITH THE CORPUS, not as a constant: quantization error
     * pushes true neighbors further down the ADC ranking as the corpus
     * densifies, so a fixed shortlist loses recall at scale. Measured at
-    * 64-dim/16×4/64-code (RecallProbe pqSweep, r14): recall@5 = 0.992 at
+    * 64-dim/16×4/64-code (`bench/r14_recall_sf10.txt`): recall@5 = 0.992 at
     * 2k rows with rerankK=200 (a 10% shortlist), but the SAME rerankK at
     * 200k rows (0.1%) reads 0.684; holding ≥0.8 there needs ≈500
     * (0.792 @ 400, 0.872 @ 800, 0.932 @ 1600, 0.976 @ 3200). Pass

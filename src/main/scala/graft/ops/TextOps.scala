@@ -64,11 +64,6 @@ object TextOps {
   def shingleOccurrencesFromTokens(ts: Column, n: Int): Column =
     ExprBridge.column(graft.functions.ShingleRuns(ExprBridge.expression(ts), n))
 
-  /** Convenience form for small inputs / tests; on hot paths project
-    * `tokens(c)` first and use `shinglesFromTokens` (see warning there).
-    */
-  def wordShingles(c: Column, n: Int): Column = shinglesFromTokens(tokens(c), n)
-
   /** Token statistics per document: counts only (exact integers — oracle
     * comparable with no FP drift).
     */

@@ -172,7 +172,9 @@ object AnnQueries {
       Some("""SELECT a.vec_id AS id_a, b.vec_id AS id_b
              |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
              |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) >= 0.4""".stripMargin),
-      "SRP-bucketed candidate join + exact cosine verification"
+      "SRP-bucketed candidate join + exact cosine verification; promises recall 1.0 " +
+        "against the exact all-pairs oracle (sf0.1: 920/920 pairs), pinned by the oracle " +
+        "and SimilaritySpec"
     ),
 
     // ---- the HIGH-threshold SRP dedup — the common production case
@@ -206,7 +208,9 @@ object AnnQueries {
              |SELECT a.vec_id AS id_a, b.vec_id AS id_b
              |FROM d a JOIN d b ON a.vec_id < b.vec_id
              |WHERE list_cosine_similarity(a.v, b.v) >= 0.9""".stripMargin),
-      "high-threshold SRP blocking: real candidate pruning + exact recall on planted near-dups"
+      "high-threshold SRP blocking: real candidate pruning + exact recall on planted " +
+        "near-dups; promises planted-pair recall 1.0 (sf0.1: 100/100), pinned by the oracle " +
+        "and SimilaritySpec"
     ),
 
     // ---- similarity search: brute-force exact top-k (rank output only —
@@ -263,7 +267,8 @@ object AnnQueries {
              |  SELECT query_id, neighbor_id,
              |    row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
              |  FROM cand) WHERE rank <= 5""".stripMargin),
-      "IVF probe search: shuffle-free assignment, cluster-id hash join"
+      "IVF probe search: shuffle-free assignment, cluster-id hash join; promises " +
+        "recall@5 ≥ 0.8 against exact top-5 at sf0.1 (measured 0.836), pinned by AnnRecallSpec"
     ),
 
     // ---- IVF over a TRAINED codebook: one deterministic Lloyd step
@@ -337,7 +342,9 @@ object AnnQueries {
            |${lshTopkCtes(planesPerTable = 4, tables = 12, dim = 64, k = 5, queryBound = 50)}
            |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id FROM lsh""".stripMargin
       },
-      "bucketed ANN: multi-table SRP candidate union + exact rank, both oracle-replayed"
+      "bucketed ANN: multi-table SRP candidate union + exact rank, both oracle-replayed; " +
+        "promises recall@5 ≥ 0.8 against exact top-5 at sf0.1 (measured 0.868), pinned by " +
+        "AnnRecallSpec"
     ),
 
     // ---- ANN recall observability: the integer-exact recall@k of each
@@ -473,7 +480,9 @@ object AnnQueries {
            |  ON e.query_id = m.query_id AND e.neighbor_id = m.neighbor_id
            |GROUP BY 1""".stripMargin
       },
-      "recall@k of LSH/IVF/PQ against exact brute-force top-k, integer-exact"
+      "recall@k of LSH/IVF/PQ against exact brute-force top-k, integer-exact; promises " +
+        "recall@5 ≥ 0.8 per method at sf0.1 (measured lsh 0.868, ivf 0.836, pq 0.992), " +
+        "pinned by AnnRecallSpec"
     ),
 
     // ---- embedding maintenance: normalization + int8 quantization.
@@ -757,7 +766,9 @@ object AnnQueries {
               rerankSql = pqAdaptiveRerankSql, k = 5, queryBound = 50)}
            |SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id FROM pq""".stripMargin
       },
-      "composite IVF-PQ ANN: cell-restricted ADC scan + corpus-adaptive exact re-rank"
+      "composite IVF-PQ ANN: cell-restricted ADC scan + corpus-adaptive exact re-rank; " +
+        "promises recall@5 ≥ 0.8 against ann_cosine_topk at sf0.1 (measured 0.908), pinned " +
+        "by AnnRecallSpec"
     ),
 
     // ---- persisted-index ANN (the production retrieval shape — VERDICT

@@ -800,9 +800,9 @@ object CurationQueries {
     //      single-band keys needs ≥13 bands of ≤4 bits (≤16 buckets/band
     //      → O(n²/16) candidates — all-pairs in disguise), so the
     //      operator keeps 14-bit keys (16384 buckets, linear candidates)
-    //      and documents the probabilistic tail. Empirical tail recall is
-    //      measured by RecallProbe's phash_band_recall line (planted
-    //      cross-band diffs at each Hamming 4..12); dHash bit locality
+    //      and documents the probabilistic tail. Empirical tail recall
+    //      (planted cross-band diffs at each Hamming 4..12) is committed
+    //      in bench/r19_phash_band_recall.txt; dHash bit locality
     //      (one changed cell touches ≤2 adjacent bits, so small image
     //      edits cluster in one band) keeps real-world recall far above
     //      the adversarial bound. The oracle replays the same banding, so
@@ -882,8 +882,8 @@ object CurationQueries {
     //      the image gate: guaranteed candidates at Hamming ≤ 3
     //      (pigeonhole over 4 bands); the planted near-dups perturb ≤ 6
     //      bits confined to bands 0–2, so band 3 always recovers them;
-    //      the probabilistic tail is measured by RecallProbe's
-    //      audio_band_recall mode. Candidates are Σ_buckets |bucket|² —
+    //      the probabilistic tail is committed in
+    //      bench/r20_audio_band_recall.txt. Candidates are Σ_buckets |bucket|² —
     //      NEVER all-pairs. doc_id % 10 == 5 keeps the clip set disjoint
     //      from the image gate's % 10 == 0 ----
     "mm_audio_dedup" -> QueryDef(

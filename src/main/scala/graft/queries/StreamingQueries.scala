@@ -131,7 +131,8 @@ object StreamingQueries {
     "q_stream_interval_join" -> QueryDef(
       (s, d) =>
         graft.streaming.EventStream.intervalJoinRunOnce(
-          s, s"$d/events.parquet", lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds"),
+          s, s"$d/events.parquet", lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds",
+          joinType = "inner"),
       Some("""WITH e AS (
              |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
              |)
@@ -152,8 +153,9 @@ object StreamingQueries {
     // every append drain exposes.
     "q_stream_interval_left" -> QueryDef(
       (s, d) =>
-        graft.streaming.EventStream.intervalJoinLeftRunOnce(
-          s, s"$d/events.parquet", lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds"),
+        graft.streaming.EventStream.intervalJoinRunOnce(
+          s, s"$d/events.parquet", lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds",
+          joinType = "leftOuter"),
       Some("""WITH e AS (
              |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
              |), p AS (

@@ -485,15 +485,34 @@ object EventStream {
     * own watermark + the time-range join condition — exactly the shape
     * Structured Streaming needs to bound join state in continuous
     * operation (each side's buffered rows are dropped once the other
-    * side's watermark passes the range bound). Inner-join emission does
-    * not wait for the watermark, so an AvailableNow drain yields the
-    * complete batch-equivalent pair set.
+    * side's watermark passes the range bound). `joinType` is `"inner"`
+    * or `"leftOuter"`.
+    *
+    * Inner-join emission does not wait for the watermark, so an
+    * AvailableNow drain yields the complete batch-equivalent pair set.
+    *
+    * `"leftOuter"` ALSO emits unmatched purchases (click columns null) —
+    * the semantic that makes outer streaming joins hard: a null result
+    * can only be declared once the watermark proves no matching click can
+    * still arrive, so null rows materialize on state EVICTION in a later
+    * micro-batch (AvailableNow schedules the extra state-flush batch via
+    * shouldRunAnotherBatch, exactly as the sessionization timeout path).
+    *
+    * Eviction contract (pinned by the oracle + StreamingSpec): with the
+    * join condition `c_ts ∈ [p_ts − lookback, p_ts]`, a purchase is safe
+    * once the global watermark passes `p_ts`; purchases at the stream
+    * head (p_ts ≥ final watermark) stay buffered and do NOT emit a null
+    * row — the same trailing-incompleteness every append-mode drain
+    * exposes (see [[runOnceAppend]]). Inner matches emit
+    * watermark-independently, so the left join's matched subset equals
+    * the inner join's result exactly.
     */
   def intervalJoinRunOnce(
       spark: SparkSession,
       srcPath: String,
       lookbackMs: Long,
-      watermarkDelay: String
+      watermarkDelay: String,
+      joinType: String
   ): DataFrame = {
     // ONE scoped session for both sides (a cross-session join would mix
     // SQLConfs)
@@ -517,58 +536,10 @@ object EventStream {
         clicks,
         expr(s"""p_user = c_user
                 |AND c_ts >= p_ts - INTERVAL $lookbackMs MILLISECOND
-                |AND c_ts <= p_ts""".stripMargin))
+                |AND c_ts <= p_ts""".stripMargin),
+        joinType)
       .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
     drainToTable(joined, "ivj", "append", srcPath)
-  }
-
-  /** LEFT-OUTER stream-stream interval join: like [[intervalJoinRunOnce]]
-    * but unmatched purchases ALSO emit (click columns null) — the
-    * semantic that makes outer streaming joins hard: a null result can
-    * only be declared once the watermark proves no matching click can
-    * still arrive, so null rows materialize on state EVICTION in a later
-    * micro-batch (AvailableNow schedules the extra state-flush batch via
-    * shouldRunAnotherBatch, exactly as the sessionization timeout path).
-    *
-    * Eviction contract (pinned by the oracle + StreamingSpec): with the
-    * join condition `c_ts ∈ [p_ts − lookback, p_ts]`, a purchase is safe
-    * once the global watermark passes `p_ts`; purchases at the stream
-    * head (p_ts ≥ final watermark) stay buffered and do NOT emit a null
-    * row — the same trailing-incompleteness every append-mode drain
-    * exposes (see [[runOnceAppend]]). Inner matches emit
-    * watermark-independently, so the matched subset equals
-    * [[intervalJoinRunOnce]]'s result exactly.
-    */
-  def intervalJoinLeftRunOnce(
-      spark: SparkSession,
-      srcPath: String,
-      lookbackMs: Long,
-      watermarkDelay: String
-  ): DataFrame = {
-    val ss = stateScopedSession(spark, srcPath)
-    val purchases = streamEvents(ss, srcPath)
-      .filter(col("event_type") === "purchase")
-      .select(
-        col("event_id").as("purchase_id"),
-        col("user_id").as("p_user"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", watermarkDelay)
-    val clicks = streamEvents(ss, srcPath)
-      .filter(col("event_type") === "click")
-      .select(
-        col("event_id").as("click_id"),
-        col("user_id").as("c_user"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", watermarkDelay)
-    val joined = purchases
-      .join(
-        clicks,
-        expr(s"""p_user = c_user
-                |AND c_ts >= p_ts - INTERVAL $lookbackMs MILLISECOND
-                |AND c_ts <= p_ts""".stripMargin),
-        "leftOuter")
-      .select(col("purchase_id"), col("click_id"), col("p_user").as("user_id"))
-    drainToTable(joined, "ivjl", "append", srcPath)
   }
 
   /** Streaming CDC materialization: drain the event stream through a

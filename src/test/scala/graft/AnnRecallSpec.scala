@@ -29,26 +29,18 @@ class AnnRecallSpec extends SparkSpec {
   }
 
   test("composite IVF-PQ clears the floor at the registered config") {
-    // recall of ann_ivfpq_topk (cell-restricted ADC + adaptive exact
-    // re-rank) against brute-force exact top-5 over the same 50 queries —
-    // the composition can only lose candidates the IVF probe misses, so
-    // it must hold the same 0.8 floor the standalone paths do
-    val emb = spark.read.parquet(sf("sf0.1") + "/embeddings.parquet")
-    val base = graft.ops.Similarity.prepBase(emb, "vec_id", "embedding")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val exact = graft.ops.Similarity
-        .cosineTopKFromBase(base, k = 5, queryPred = col("cid") < 50)
-        .select("query_id", "neighbor_id")
-      val got = graft.ops.Similarity
-        .ivfPqTopKFromBase(base, k = 5, queryPred = col("cid") < 50,
-          nClusters = 8, nProbe = 6, subspaces = 16, subDim = 4, nCodes = 64,
-          rerankK = graft.ops.Similarity.AdaptiveRerank)
-        .select("query_id", "neighbor_id")
-      val nExact = exact.count()
-      val hits = got.join(exact, Seq("query_id", "neighbor_id")).count()
-      val recall = hits.toDouble / nExact
-      assert(recall >= 0.8, s"IVF-PQ recall@5 = $recall < 0.8 floor")
-    } finally base.unpersist(false)
+    // recall of the registered ann_ivfpq_topk (cell-restricted ADC +
+    // adaptive exact re-rank) against the registered brute-force
+    // ann_cosine_topk over the same 50 queries at k=5 — the composition
+    // can only lose candidates the IVF probe misses, so it must hold the
+    // same 0.8 floor the standalone paths do
+    def pairs(name: String) = SparkEntry
+      .queries(name)(spark, sf("sf0.1"))
+      .select("query_id", "neighbor_id")
+    val exact = pairs("ann_cosine_topk")
+    val nExact = exact.count()
+    val hits = pairs("ann_ivfpq_topk").join(exact, Seq("query_id", "neighbor_id")).count()
+    val recall = hits.toDouble / nExact
+    assert(recall >= 0.8, s"IVF-PQ recall@5 = $recall < 0.8 floor")
   }
 }

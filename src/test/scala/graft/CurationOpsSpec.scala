@@ -13,6 +13,7 @@ class CurationOpsSpec extends SparkSpec {
 
   private def docs = Tables.t(spark, sf("sf0.001"), "documents")
   private def embs = Tables.t(spark, sf("sf0.001"), "embeddings")
+  private def shingles = Dedup.shingleRows(docs, "doc_id", "text", 3)
 
   test("gopherQuality: keep verdict is exactly the conjunction of its emitted signals") {
     val out = TextOps.gopherQuality(docs, "doc_id", "text").collect()
@@ -45,10 +46,10 @@ class CurationOpsSpec extends SparkSpec {
 
   test("lshCandidatePairsWithEst: same pair set as the plain candidate path, est in [0,1]") {
     val plain = Dedup
-      .lshCandidatePairs(docs, "doc_id", "text", shingleN = 3, numHashes = 64, bands = 16)
+      .lshCandidatePairsFromShingles(shingles, numHashes = 64, bands = 16)
       .as[(Long, Long)].collect().toSet
     val withEst = Dedup
-      .lshCandidatePairsWithEst(docs, "doc_id", "text", shingleN = 3, numHashes = 64, bands = 16)
+      .lshCandidatePairsWithEstFromShingles(shingles, numHashes = 64, bands = 16)
       .collect()
     assert(withEst.map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet == plain)
     withEst.foreach { r =>
@@ -61,11 +62,11 @@ class CurationOpsSpec extends SparkSpec {
 
   test("lshCandidatePairsWithEst: estimates are high on true >=0.8-Jaccard pairs") {
     val exact = Dedup
-      .ngramJaccardPairs(docs, "doc_id", "text", 3, 4, 5)
+      .ngramJaccardPairsFromShingles(shingles, 4, 5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty)
     val est = Dedup
-      .lshCandidatePairsWithEst(docs, "doc_id", "text", shingleN = 3, numHashes = 64, bands = 16)
+      .lshCandidatePairsWithEstFromShingles(shingles, numHashes = 64, bands = 16)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, e) => (a, b) -> e }.toMap
@@ -84,12 +85,12 @@ class CurationOpsSpec extends SparkSpec {
     // correlated family (the round-5 bug) concentrates matched at the
     // extremes and fails both.
     val exact = Dedup
-      .ngramJaccardPairs(docs, "doc_id", "text", 3, 1, 2) // J >= 0.5: wide J range
+      .ngramJaccardPairsFromShingles(shingles, 1, 2) // J >= 0.5: wide J range
       .select(col("id_a"), col("id_b"), col("inter"), col("size_a"), col("size_b"))
       .as[(Long, Long, Long, Long, Long)].collect()
       .map { case (a, b, i, sa, sb) => (a, b) -> i.toDouble / (sa + sb - i) }.toMap
     val est = Dedup
-      .lshCandidatePairsWithEst(docs, "doc_id", "text", shingleN = 3, numHashes = 64, bands = 16)
+      .lshCandidatePairsWithEstFromShingles(shingles, numHashes = 64, bands = 16)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, e) => (a, b) -> e }.toMap

@@ -11,6 +11,8 @@ class DedupSpec extends SparkSpec {
   import spark.implicits._
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+  private def shingles(df: org.apache.spark.sql.DataFrame, n: Int = 3) =
+    Dedup.shingleRows(df, "doc_id", "text", n)
 
   test("exact dedup groups identical texts, keeps min id") {
     val df = docs(1L -> "a b c", 2L -> "a b c", 3L -> "x y z")
@@ -25,7 +27,7 @@ class DedupSpec extends SparkSpec {
     val other = "completely different words compose this second document about spark engines"
     val df = docs(1L -> base, 2L -> edited, 3L -> other)
     val pairs = Dedup
-      .ngramJaccardPairs(df, "doc_id", "text", n = 3, thresholdNum = 1, thresholdDen = 2)
+      .ngramJaccardPairsFromShingles(shingles(df), thresholdNum = 1, thresholdDen = 2)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)))
   }
@@ -33,7 +35,7 @@ class DedupSpec extends SparkSpec {
   test("ngram Jaccard: integer evidence columns are consistent") {
     val df = docs(1L -> "a b c d e", 2L -> "a b c d e")
     val row = Dedup
-      .ngramJaccardPairs(df, "doc_id", "text", 3, 9, 10)
+      .ngramJaccardPairsFromShingles(shingles(df), 9, 10)
       .collect().head
     assert(row.getAs[Long]("inter") == 3) // identical: 3 trigrams shared
     assert(row.getAs[Long]("size_a") == 3 && row.getAs[Long]("size_b") == 3)
@@ -42,7 +44,7 @@ class DedupSpec extends SparkSpec {
   test("maxShingleFreq drops non-discriminative heavy shingles") {
     // shingle "a b c" appears in every doc; capped at 2 it can't join
     val df = docs(1L -> "a b c", 2L -> "a b c", 3L -> "a b c")
-    val pairs = Dedup.ngramJaccardPairs(df, "doc_id", "text", 3, 1, 2, maxShingleFreq = Some(2))
+    val pairs = Dedup.ngramJaccardPairsFromShingles(shingles(df), 1, 2, maxShingleFreq = Some(2))
     assert(pairs.count() == 0)
   }
 
@@ -55,10 +57,10 @@ class DedupSpec extends SparkSpec {
     // assert is too weak to see either on a small fixture.
     val df = graft.queries.Tables.t(spark, sf("sf0.001"), "documents")
     val exact = Dedup
-      .ngramJaccardPairs(df, "doc_id", "text", 3, 4, 5)
+      .ngramJaccardPairsFromShingles(shingles(df), 4, 5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val cands = Dedup
-      .lshCandidatePairs(df, "doc_id", "text", shingleN = 3, numHashes = 64, bands = 16)
+      .lshCandidatePairsFromShingles(shingles(df), numHashes = 64, bands = 16)
       .as[(Long, Long)].collect().toSet
     assert(exact.nonEmpty, "fixture should contain planted near-dups")
     val missed = exact -- cands
@@ -71,7 +73,7 @@ class DedupSpec extends SparkSpec {
   test("LSH+verify composed dedup equals the exact Jaccard pair set on the fixture") {
     val df = graft.queries.Tables.t(spark, sf("sf0.001"), "documents")
     val exact = Dedup
-      .ngramJaccardPairs(df, "doc_id", "text", 3, 4, 5)
+      .ngramJaccardPairsFromShingles(shingles(df), 4, 5)
       .select("id_a", "id_b", "inter", "size_a", "size_b")
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     val verified = Dedup
@@ -161,7 +163,7 @@ class DedupSpec extends SparkSpec {
 
   test("wordShingles: short docs yield empty array (no descending-sequence bug)") {
     val out = docs(1L -> "one two", 2L -> "")
-      .select(TextOps.wordShingles(col("text"), 3).as("s"))
+      .select(TextOps.shinglesFromTokens(TextOps.tokens(col("text")), 3).as("s"))
       .as[Seq[String]].collect()
     assert(out.forall(_.isEmpty))
   }
@@ -170,10 +172,10 @@ class DedupSpec extends SparkSpec {
     val short = "alpha beta gamma delta epsilon"                     // 3 shingles
     val long = short + " zeta eta theta iota kappa lambda mu nu xi" // superset + noise
     val df = docs(1L -> long, 2L -> short, 3L -> "totally different words here now")
-    val cont = Dedup.containmentPairs(df, "doc_id", "text", n = 3, 4, 5)
+    val cont = Dedup.containmentPairsFromShingles(shingles(df), 4, 5)
       .select("contained_id", "container_id").as[(Long, Long)].collect().toSet
     assert(cont == Set((2L, 1L)), cont.toString) // directional: 2 ⊂ 1 only
-    val jac = Dedup.ngramJaccardPairs(df, "doc_id", "text", n = 3, 4, 5)
+    val jac = Dedup.ngramJaccardPairsFromShingles(shingles(df), 4, 5)
       .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(jac.isEmpty, "size-skewed subset must be invisible to Jaccard >= 0.8")
   }
@@ -266,7 +268,7 @@ class DedupSpec extends SparkSpec {
       // keys are per-doc, so the split cannot change any key)
       val newIds = docs.select(col("doc_id").cast("long")).where(isNew)
         .as[Long].collect().toSet
-      val full = Dedup.lshCandidatePairs(docs, "doc_id", "text")
+      val full = Dedup.lshCandidatePairsFromShingles(shingles(docs))
         .as[(Long, Long)].collect().toSet
       val expected = full.collect {
         case (a, b) if newIds(a) && !newIds(b) => (a, b)

@@ -37,8 +37,7 @@ class GraftSessionSpec extends SparkSpec {
     } yield pkg.findFirstMatchIn(src).get.group(1) + "." +
       objectDecl.findAllMatchIn(src.take(m.start)).toList.last.group(1)
     assert(mains.sorted == List("graft.Bench", "graft.Verify", "graft.tools.EntrySmoke",
-      "graft.tools.Probe", "graft.tools.RecallProbe", "graft.tools.ScaleGen",
-      "graft.tools.SurveyDump"), mains.sorted)
+      "graft.tools.Probe", "graft.tools.ScaleGen", "graft.tools.SurveyDump"), mains.sorted)
   }
 
   test("src/main builds native expressions as Columns, never by registered name") {

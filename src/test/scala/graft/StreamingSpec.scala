@@ -189,7 +189,8 @@ class StreamingSpec extends SparkSpec {
   test("stream-stream interval join equals the batch interval join") {
     val src = sf("sf0.001") + "/events.parquet"
     val streamed = EventStream
-      .intervalJoinRunOnce(spark, src, lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds")
+      .intervalJoinRunOnce(spark, src, lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds",
+        joinType = "inner")
       .select("purchase_id", "click_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val e = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
     val p = e.filter(col("event_type") === "purchase")
@@ -207,7 +208,8 @@ class StreamingSpec extends SparkSpec {
     // state store, not inherit the caller's
     val src = sf("sf0.001") + "/events.parquet"
     def pairs(s: org.apache.spark.sql.SparkSession) = EventStream
-      .intervalJoinRunOnce(s, src, lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds")
+      .intervalJoinRunOnce(s, src, lookbackMs = 6 * 3600 * 1000L, watermarkDelay = "0 seconds",
+        joinType = "inner")
       .select("purchase_id", "click_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val hdfs = spark.newSession()
     hdfs.conf.set(
@@ -377,9 +379,9 @@ class StreamingSpec extends SparkSpec {
   test("left-outer interval join = inner matches + watermark-proven nulls only") {
     val src = sf("sf0.001") + "/events.parquet"
     val lookback = 6 * 3600 * 1000L
-    val inner = EventStream.intervalJoinRunOnce(spark, src, lookback, "0 seconds")
+    val inner = EventStream.intervalJoinRunOnce(spark, src, lookback, "0 seconds", "inner")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val left = EventStream.intervalJoinLeftRunOnce(spark, src, lookback, "0 seconds")
+    val left = EventStream.intervalJoinRunOnce(spark, src, lookback, "0 seconds", "leftOuter")
       .collect()
     val leftMatched = left.filter(!_.isNullAt(1)).map(r => (r.getLong(0), r.getLong(1))).toSet
     val leftNulls = left.filter(_.isNullAt(1)).map(_.getLong(0)).toSet

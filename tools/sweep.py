@@ -7,7 +7,7 @@ the methodology rounds 7-10 re-derived by hand each time.
     python3 tools/sweep.py r11 --scales 0.1 # just the gate sweep
 
 Produces:
-    bench/{label}_sf0.1.json      full per-query record (+ bytes line)
+    bench/{label}_sf0.1.json      full per-query record (+ bytes and recall lines)
     bench/{label}_sf1.json        10x fixture (ScaleGen into /tmp/sf1)
     bench/{label}_sf10.json       100x fixture (256 partitions, 16g heap)
     bench/{label}_scaling_sf01_to_sf1.txt / _sf10.txt
@@ -20,6 +20,7 @@ import json
 import re
 import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
@@ -91,38 +92,117 @@ def bench(scale, label, repeat=1):
     return out
 
 
+# Recall evidence is read from the registered queries' own Verify dumps:
+# the approximate queries, plus the exact top-k the composite is scored
+# against. The full O(n^2) SRP check runs only at the gate scale (the
+# exact validator's tractability bound).
+RECALL_QUERIES = ["ann_recall_at_k", "ann_cosine_topk", "ann_ivfpq_topk",
+                  "dedup_embedding_cosine_lsh_hi"]
+FULL_SRP_QUERY = "dedup_embedding_cosine_lsh"
+
+# dedup_embedding_cosine_lsh_hi's planting (every 20th vector gains a copy
+# at id + 1000000) cut to the planted pairs whose true cosine clears its
+# 0.9 threshold: O(n/20) pairs instead of the oracle's all-pairs join.
+# Where the full oracle runs, recall_lines checks the two agree.
+PLANTED_SQL = """
+WITH e AS (
+  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id % 20 = 0
+), p AS (
+  SELECT vec_id, v,
+         list_transform(generate_series(1, len(v)), i -> v[i] + 0.15 * v[1 + (i % len(v))]) AS w
+  FROM e
+)
+SELECT vec_id AS id_a, vec_id + 1000000 AS id_b FROM p
+WHERE list_cosine_similarity(v, w) >= 0.9
+"""
+
+
+def recall_lines(sf_dir, verify_dir):
+    """The round record's recall lines, one compact JSON object per line,
+    from a Verify run over RECALL_QUERIES (plus FULL_SRP_QUERY when its
+    dump is present) in `verify_dir` and the tables in `sf_dir`:
+    the ann_recall_at_k rows as they are, composite IVF-PQ recall@5
+    against ann_cosine_topk, and SRP recall (full against the query's own
+    oracle SQL, planted against PLANTED_SQL)."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{sf_dir}/embeddings.parquet'")
+    for q in RECALL_QUERIES + [FULL_SRP_QUERY]:
+        if Path(verify_dir, q).exists():
+            con.execute(f"CREATE VIEW {q} AS SELECT * FROM '{verify_dir}/{q}/*.parquet'")
+    with open(Path(verify_dir, "oracle_sql.json")) as f:
+        oracles = json.load(f)
+
+    def one(sql):
+        return con.execute(sql).fetchone()[0]
+
+    def line(**kv):
+        return json.dumps(kv, separators=(",", ":"))
+
+    def ratio(hits, total):
+        return 1.0 if total == 0 else hits / total
+
+    def srp(config, n, truth_sql):
+        exact = one(f"SELECT COUNT(*) FROM ({truth_sql})")
+        hits = one(f"SELECT COUNT(*) FROM {config} JOIN ({truth_sql}) USING (id_a, id_b)")
+        return line(probe="srp_recall", config=config, n=n, exact_pairs=exact,
+                    srp_pairs=hits, recall=ratio(hits, exact))
+
+    n = one("SELECT COUNT(*) FROM embeddings")
+    out = []
+    if Path(verify_dir, FULL_SRP_QUERY).exists():
+        out.append(srp(FULL_SRP_QUERY, n, oracles[FULL_SRP_QUERY]))
+        hi = oracles["dedup_embedding_cosine_lsh_hi"]
+        drift = one(f"SELECT COUNT(*) FROM (({hi}) EXCEPT ({PLANTED_SQL})"
+                    f" UNION ALL (({PLANTED_SQL}) EXCEPT ({hi})))")
+        if drift:
+            sys.exit(f"planted truth differs from the dedup_embedding_cosine_lsh_hi oracle "
+                     f"on {drift} pairs")
+    planted_n = n + one("SELECT COUNT(*) FROM embeddings WHERE vec_id % 20 = 0")
+    out.append(srp("dedup_embedding_cosine_lsh_hi", planted_n, PLANTED_SQL))
+    for method, returned, hits, exact, rec in con.execute(
+            "SELECT method, n_returned, n_hits, n_exact, recall FROM ann_recall_at_k"
+            " ORDER BY list_position(['lsh', 'ivf', 'pq'], method)").fetchall():
+        out.append(line(probe="ann_recall_at_k", method=method, n_returned=returned,
+                        n_hits=hits, n_exact=exact, recall=rec))
+    exact = one("SELECT COUNT(*) FROM ann_cosine_topk")
+    hits = one("SELECT COUNT(*) FROM ann_ivfpq_topk JOIN ann_cosine_topk"
+               " USING (query_id, neighbor_id)")
+    out.append(line(probe="ann_recall_at_k", method="ivfpq", n=n, n_hits=hits,
+                    n_exact=exact, recall=ratio(hits, exact)))
+    return out
+
+
 def recall(scale, label, out):
-    """Append the recall floor to the scale's bench record (VERDICT r15
-    #6): planted SRP recall + the registered ann_recall_at_k replay
-    (lsh/ivf/pq recall@5 vs exact) via graft.tools.RecallProbe, one JSON
-    line per probe appended to the record file — the same pattern as the
-    bytes line, so the recall evidence lives IN the round record instead
-    of ad-hoc side files. Full O(n^2) SRP recall only at the gate scale
-    (the exact validator's tractability bound)."""
+    """Append the recall lines (recall_lines) to the scale's bench record,
+    after the bytes line, so the recall evidence lives IN the round
+    record instead of ad-hoc side files."""
     sf_dir, _, partitions, heap = SCALES[scale]
     env = {
         "SPARK_GRAFT_CPUS": "32",
         "SPARK_GRAFT_SHUFFLE_PARTITIONS": partitions,
         "SPARK_DRIVER_MEM": heap,
     }
-    mode = "" if scale == "0.1" else " skipFull"
+    names = RECALL_QUERIES + ([FULL_SRP_QUERY] if scale == "0.1" else [])
     t0 = time.time()
-    r = run(["sbt", "-batch", f"runMain graft.tools.RecallProbe {sf_dir}{mode}"],
-            env=env, capture=True)
-    lines = []
-    for line in r.stdout.splitlines():
-        m = re.search(r'(\{"probe":.*\})', line)
-        if m:
-            lines.append(m.group(1))
-    print(f"[sweep] recall sf{scale}: rc={r.returncode} wall={time.time()-t0:.0f}s "
-          f"{len(lines)} probe lines", flush=True)
-    if r.returncode != 0 or not lines:
-        print(r.stdout[-2000:])
-        sys.exit(f"recall probe failed at sf{scale}")
+    with tempfile.TemporaryDirectory(prefix="graft-recall-") as vdir:
+        r = run(["sbt", "-batch", f"runMain graft.Verify {sf_dir} {vdir} {','.join(names)}"],
+                env=env, capture=True)
+        errors_path = Path(vdir, "errors.json")
+        errors = json.loads(errors_path.read_text()) if errors_path.exists() else None
+        missing = [q for q in names if not Path(vdir, q).exists()]
+        if r.returncode != 0 or errors is None or errors or missing:
+            print(r.stdout[-2000:])
+            sys.exit(f"recall Verify failed at sf{scale}: rc={r.returncode} "
+                     f"errors={errors} missing={missing}")
+        lines = recall_lines(sf_dir, vdir)
+    print(f"[sweep] recall sf{scale}: wall={time.time()-t0:.0f}s {len(lines)} probe lines",
+          flush=True)
     if not out.exists():
-        # fail loudly: silently skipping the append would report probe
+        # fail loudly: silently skipping the append would report recall
         # success while the round record carries no recall evidence
-        sys.exit(f"bench record {out} missing; refusing to drop recall probe lines")
+        sys.exit(f"bench record {out} missing; refusing to drop recall lines")
     with open(out, "a") as f:
         for l in lines:
             f.write(l + "\n")
@@ -182,7 +262,7 @@ def main():
     ap.add_argument("--repeat", type=int, default=1,
                     help="per-query repeats; Bench records medians (r15 sf10 protocol)")
     ap.add_argument("--no-recall", action="store_true",
-                    help="skip the per-scale recall probe (on by default; r15 verdict #6)")
+                    help="skip the per-scale recall lines (on by default; r15 verdict #6)")
     args = ap.parse_args()
     scales = [s.strip() for s in args.scales.split(",")]
     for s in scales:
