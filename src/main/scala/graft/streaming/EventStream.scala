@@ -1,24 +1,31 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FooterSchema
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured Streaming surface (SURVEY.md §2.8).
   *
   * The reference is batch-only — its incremental pattern is re-invocation
   * with WRITE_APPEND over successive date windows
   * (`/root/reference/main.py:31-33`, `data_load.py:44-50`). This module is
-  * the engine's native streaming generalization of that pattern: a file
-  * (or any) source → event-time tumbling window + watermark → append sink.
+  * the engine's native streaming generalization of that pattern: a parquet
+  * source → a stateful plan (sessions, dedup, joins, windows) or a
+  * `foreachBatch` fold → a bounded result, drained once with an
+  * AvailableNow trigger.
+  *
+  * Every drain reads through one source reader ([[streamParquet]]), runs
+  * through one start-and-wait ([[drain]]), and a drain that accumulates
+  * micro-batches folds them through one accumulator ([[fold]]). The
+  * windowed append/complete contract is pinned by StreamingSpec's two
+  * window cases, which build the aggregate inline and drain it through
+  * [[drainToTable]].
   *
   * Scale notes: watermarking bounds state (late events beyond the
   * watermark are dropped, so state size is O(active windows × keys), not
-  * O(history)); the aggregation shuffles once on (window, key) exactly
-  * like its batch shape, and checkpointing makes re-invocation exactly-once
-  * — the property the reference approximates with append dispositions.
+  * O(history)), and checkpointing makes re-invocation exactly-once — the
+  * property the reference approximates with append dispositions.
   */
 /** A closed user session: the custom-state shape the reference has no
   * analogue for (SURVEY.md §2.8) but a streaming engine must offer.
@@ -58,23 +65,12 @@ object EventStream {
   private def closedSession(user: Long, s: SessionState): UserSession =
     UserSession(user, tsFromUs(s.startUs), tsFromUs(s.lastUs), s.nEvents, s.total)
 
-  /** Event-time windowed counts over a streaming source. `watermark = None`
-    * skips withWatermark — correct for complete-mode harness runs where a
-    * watermark would be inert anyway (state is fully retained by the mode,
-    * so claiming bounded state would be false).
+  /** The sessionizer's three input columns: `user_id` as long, `ts`, and
+    * `value` pre-scaled to round(value·100), so a session sum is an
+    * order-free integer-valued double (oracle-safe).
     */
-  def windowedCounts(
-      stream: DataFrame,
-      tsCol: String,
-      keyCol: String,
-      watermark: Option[String],
-      windowLen: String
-  ): DataFrame = {
-    val in = watermark.fold(stream)(w => stream.withWatermark(tsCol, w))
-    in.groupBy(window(col(tsCol), windowLen), col(keyCol))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("ws"), col(keyCol), col("n"))
-  }
+  private val scaledValueCols =
+    Seq(col("user_id").cast("long").as("user_id"), col("ts"), round(col("value") * 100).as("value"))
 
   /** Event-time sessionization with custom state
     * (`flatMapGroupsWithState` keyed by user): a session closes when a
@@ -237,57 +233,13 @@ object EventStream {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(idCols)
 
-  /** Drain a parquet directory as a stream with Trigger.AvailableNow into
-    * an in-memory table and return the result — the batch-equivalence
-    * harness used by StreamingSpec. Complete output mode (every window is
-    * in the final table) with NO watermark: in complete mode a watermark
-    * would not prune state anyway, so this path makes no bounded-state
-    * claim. For the watermark/append semantics, see [[runOnceAppend]].
-    */
-  def runOnce(
-      spark: SparkSession,
-      srcDir: String,
-      schema: StructType,
-      windowLen: String
-  ): DataFrame =
-    runStream(spark, srcDir, schema, watermark = None, windowLen, "complete")
-
-  /** Same drain in APPEND mode with a real watermark: only windows the
-    * final watermark has passed are emitted (trailing windows stay
-    * pending, exactly the semantics a production append sink sees —
-    * spec-asserted as a prefix-subset of the complete-mode result).
-    */
-  def runOnceAppend(
-      spark: SparkSession,
-      srcDir: String,
-      schema: StructType,
-      watermark: String,
-      windowLen: String
-  ): DataFrame =
-    runStream(spark, srcDir, schema, Some(watermark), windowLen, "append")
-
-  private def runStream(
-      spark: SparkSession,
-      srcDir: String,
-      schema: StructType,
-      watermark: Option[String],
-      windowLen: String,
-      mode: String
-  ): DataFrame = {
-    val ss = stateScopedSession(spark, srcDir)
-    val stream = ss.readStream.schema(schema).parquet(srcDir)
-    val agg = windowedCounts(stream, "ts", "event_type", watermark, windowLen)
-    drainToTable(agg, "win", mode, srcDir)
-  }
-
-  /** Drain the events fixture through [[sessionizeStream]] with
-    * Trigger.AvailableNow — EventTimeTimeout end to end: in-gap events
+  /** Drain the events fixture through [[sessionizeStream]] with an
+    * AvailableNow trigger — EventTimeTimeout end to end: in-gap events
     * fold into open sessions, and once the final data batch has advanced
     * the watermark, Spark schedules the extra state-flush batch
     * (shouldRunAnotherBatch) in which every trailing session whose
     * `last event + gap` the watermark strictly passed times out and is
-    * emitted. The value column is pre-scaled to round(value·100) so the
-    * session sum is an order-free integer-valued double (oracle-safe).
+    * emitted. The value column is pre-scaled ([[scaledValueCols]]).
     *
     * `srcPath` may be a parquet file or directory; the fixture's
     * TIMESTAMP(NANOS) column is read as a long and truncated to µs,
@@ -299,11 +251,8 @@ object EventStream {
       gapMs: Long,
       watermarkDelay: String
   ): DataFrame = {
-    val in = streamEvents(stateScopedSession(spark, srcPath), srcPath)
-      .select(
-        col("user_id").cast("long").as("user_id"),
-        col("ts"),
-        round(col("value") * 100).as("value"))
+    val in = streamParquet(stateScopedSession(spark, srcPath), srcPath)
+      .select(scaledValueCols: _*)
       .withWatermark("ts", watermarkDelay)
     drainToTable(sessionizeStream(in, gapMs).toDF(), "sess", "append", srcPath)
   }
@@ -350,12 +299,6 @@ object EventStream {
 
     val ev = graft.queries.Tables
       .t(spark, new java.io.File(srcPath).getParent, "events")
-    // staged files keep the 3-column schema (ts_us stays behind: it is
-    // the loader's derived column, re-derived on re-read)
-    val full = ev.select(
-      col("user_id").cast("long").as("user_id"),
-      col("ts"),
-      round(col("value") * 100).as("value"))
     val bounds = ev.agg(min(col("ts_us")).as("lo"), max(col("ts_us")).as("hi")).head()
     val splitUs = (bounds.getLong(0) + bounds.getLong(1)) / 2
 
@@ -366,14 +309,11 @@ object EventStream {
     // the restart semantics depend only on WHEN files LAND in srcDir
     // (the move), not on when their bytes were produced — the staged dir
     // is invisible to the file source. `pred` is over the loader frame
-    // (may reference ts_us); the staged write projects it away.
+    // (may reference ts_us); the staged files keep the three session
+    // columns (ts_us is the loader's derived column, re-derived on re-read).
     def stageWrite(batchName: String, pred: org.apache.spark.sql.Column): java.io.File = {
       val stage = new java.io.File(tmp, s"stage-$batchName")
-      ev.filter(pred)
-        .select(
-          col("user_id").cast("long").as("user_id"),
-          col("ts"),
-          round(col("value") * 100).as("value"))
+      ev.filter(pred).select(scaledValueCols: _*)
         .coalesce(1).write.mode("overwrite").parquet(stage.getAbsolutePath)
       stage
     }
@@ -392,24 +332,13 @@ object EventStream {
       // both size state identically (the checkpoint pins the state-store
       // count at first start)
       val ss = stateScopedSession(spark, srcDir.getAbsolutePath)
-      val in = ss.readStream
-        .schema(graft.queries.Tables.open(ss, srcDir.getAbsolutePath).schema)
-        .parquet(srcDir.getAbsolutePath)
-        .withWatermark("ts", watermarkDelay)
-      val q = sessionizeStream(in, gapMs)
-        .toDF()
-        .writeStream
+      val in = streamParquet(ss, srcDir.getAbsolutePath).withWatermark("ts", watermarkDelay)
+      val sink = sessionizeStream(in, gapMs).toDF().writeStream
         .format("parquet")
         .option("path", outDir)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      if (!q.awaitTermination(120000)) {
-        q.stop()
-        throw new IllegalStateException(
-          s"restart drain stage $stage of $srcPath did not finish within 120 s")
-      }
+      drain(sink, "restart", s"$srcPath (stage $stage)", expectedBatches = 1)
     }
 
     arrive("a", col("ts_us") <= splitUs)
@@ -447,33 +376,37 @@ object EventStream {
   def dedupRunOnce(spark: SparkSession, srcPath: String, watermarkDelay: String): DataFrame = {
     val ss = stateScopedSession(spark, srcPath)
     ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = streamEvents(ss, srcPath)
-      .select(
-        col("user_id").cast("long").as("user_id"),
-        col("event_type"),
-        col("ts"))
+    val in = streamParquet(ss, srcPath)
+      .select(col("user_id").cast("long").as("user_id"), col("event_type"), col("ts"))
     val deduped = dedupWithinWatermark(in, "ts", watermarkDelay, Seq("user_id", "event_type"))
       .select(col("user_id"), col("event_type"))
     drainToTable(deduped, "dedup", "append", srcPath)
   }
 
-  /** Stream a parquet events fixture (file or directory; `ts` is
-    * normalized to TimestampType across all three encodings the driver
-    * has shipped — TIMESTAMP(NANOS)-as-long, naive µs (TIMESTAMP_NTZ),
-    * UTC-adjusted µs — exactly like the batch loader
-    * graft.queries.Tables.t; watermarks reject NTZ). The file stream
-    * source only accepts directories: a single-file fixture is read via
-    * its parent + a glob pinned to the file name. The schema is the batch
+  /** Stream a parquet file or directory — the one source reader of every
+    * drain. `ts` is normalized to TimestampType across all three encodings
+    * the driver has shipped — TIMESTAMP(NANOS)-as-long, naive µs
+    * (TIMESTAMP_NTZ), UTC-adjusted µs — exactly like the batch loader
+    * graft.queries.Tables.t (watermarks reject NTZ); on a table without
+    * `ts` (documents) the normalization is the identity. The file stream
+    * source only accepts directories: a single file is read via its
+    * parent + a glob pinned to the file name. The schema is the batch
     * open's (`Tables.open`: nanos read as long, the first footer read on
     * the driver), so starting the stream runs no Spark job.
+    * `filesPerTrigger` caps the files each micro-batch reads (no cap when
+    * None).
     */
-  private[graft] def streamEvents(spark: SparkSession, srcPath: String): DataFrame = {
+  private[graft] def streamParquet(
+      spark: SparkSession,
+      srcPath: String,
+      filesPerTrigger: Option[Int] = None
+  ): DataFrame = {
     val schema = graft.queries.Tables.open(spark, srcPath).schema
     val f = new java.io.File(srcPath)
-    val reader =
-      if (f.isDirectory) spark.readStream.schema(schema)
-      else spark.readStream.schema(schema).option("pathGlobFilter", f.getName)
-    val raw = reader.parquet(if (f.isDirectory) srcPath else f.getParent)
+    val glob = if (f.isDirectory) None else Some("pathGlobFilter" -> f.getName)
+    val cap = filesPerTrigger.map(n => "maxFilesPerTrigger" -> n.toString)
+    val raw = spark.readStream.schema(schema).options((glob ++ cap).toMap)
+      .parquet(if (f.isDirectory) srcPath else f.getParent)
     // Single definition of the encoding contract (works identically on
     // streaming frames): batch and streaming cannot drift.
     graft.queries.Tables.normalizeTs(raw)
@@ -503,9 +436,9 @@ object EventStream {
     * once the global watermark passes `p_ts`; purchases at the stream
     * head (p_ts ≥ final watermark) stay buffered and do NOT emit a null
     * row — the same trailing-incompleteness every append-mode drain
-    * exposes (see [[runOnceAppend]]). Inner matches emit
-    * watermark-independently, so the left join's matched subset equals
-    * the inner join's result exactly.
+    * exposes (StreamingSpec's append-mode window case pins it). Inner
+    * matches emit watermark-independently, so the left join's matched
+    * subset equals the inner join's result exactly.
     */
   def intervalJoinRunOnce(
       spark: SparkSession,
@@ -517,14 +450,14 @@ object EventStream {
     // ONE scoped session for both sides (a cross-session join would mix
     // SQLConfs)
     val ss = stateScopedSession(spark, srcPath)
-    val purchases = streamEvents(ss, srcPath)
+    val purchases = streamParquet(ss, srcPath)
       .filter(col("event_type") === "purchase")
       .select(
         col("event_id").as("purchase_id"),
         col("user_id").as("p_user"),
         col("ts").as("p_ts"))
       .withWatermark("p_ts", watermarkDelay)
-    val clicks = streamEvents(ss, srcPath)
+    val clicks = streamParquet(ss, srcPath)
       .filter(col("event_type") === "click")
       .select(
         col("event_id").as("click_id"),
@@ -551,39 +484,19 @@ object EventStream {
     * impossible and the result is independent of micro-batch slicing
     * (max-version merge is associative and commutative). Each merged
     * generation is eagerly checkpointed and the superseded one's blocks
-    * released — the same bounded-footprint discipline as the CC loop.
-    * Value is pre-scaled to round(value·100) (order-free integer double).
+    * released — the same bounded-footprint discipline as the CC loop
+    * ([[fold]]). Value is pre-scaled ([[scaledValueCols]]).
     */
   def upsertRunOnce(spark: SparkSession, srcPath: String): DataFrame = {
-    val in = streamEvents(stateScopedSession(spark, srcPath), srcPath)
-      .select(
-        col("user_id").cast("long").as("user_id"),
-        col("ts"),
-        round(col("value") * 100).as("value"),
-        col("event_id").cast("long").as("event_id"))
-    var target: DataFrame = null
-    val q = in.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    val in = streamParquet(stateScopedSession(spark, srcPath), srcPath)
+      .select(scaledValueCols :+ col("event_id").cast("long").as("event_id"): _*)
+    val latest = fold(in, "upsert", srcPath, expectedBatches = 1)(
+      { batch =>
         val b = batch.withColumn("__ver", struct(col("ts"), col("event_id")))
-        val incoming = graft.ops.Cdc.upsert(b, b.limit(0), "user_id", "__ver")
-        target =
-          if (target == null) incoming.localCheckpoint(true)
-          else {
-            val merged = graft.ops.Cdc.upsert(target, incoming, "user_id", "__ver")
-              .localCheckpoint(true)
-            graft.ops.Caching.release(target)
-            merged
-          }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    if (!q.awaitTermination(120000)) {
-      q.stop()
-      throw new IllegalStateException(s"stream upsert drain of $srcPath did not finish within 120 s")
-    }
-    require(target != null, s"stream upsert drain of $srcPath produced no batches")
-    target.select(
+        graft.ops.Cdc.upsert(b, b.limit(0), "user_id", "__ver")
+      },
+      graft.ops.Cdc.upsert(_, _, "user_id", "__ver"))
+    latest.select(
       col("user_id"),
       col("ts").as("last_ts"),
       col("value").as("last_value"))
@@ -610,17 +523,21 @@ object EventStream {
     * hash, an associative/commutative merge resolved over the accumulated
     * verdict rows after the drain (the CDC upsert discipline: were it
     * resolved per batch, a later batch carrying a smaller id would
-    * silently flip an emitted verdict). Each batch's rows are eagerly
-    * checkpointed and the superseded accumulation released — bounded
-    * footprint, the upsert/CC-loop discipline.
+    * silently flip an emitted verdict). The accumulation is eagerly
+    * checkpointed per batch and the superseded one released ([[fold]]).
+    *
+    * The stream reads ONE file per trigger ([[CurationFilesPerTrigger]]):
+    * that is what makes the drain run real micro-batches on the
+    * multi-file fixtures (the scaled fixtures are 32-file splittable), so
+    * the funnel ships verdicts per batch and the slicing-independence
+    * contract is exercised rather than vacuous. Decontamination matches
+    * exact 13-grams ([[CurationGramN]]), the n the oracle hard-codes.
     */
   def curationRunOnce(
       spark: SparkSession,
       srcPath: String,
       isNewCol: org.apache.spark.sql.Column,
-      isBenchCol: org.apache.spark.sql.Column,
-      gramN: Int = 13,
-      maxFilesPerTrigger: Int = 1
+      isBenchCol: org.apache.spark.sql.Column
   ): DataFrame = {
     import graft.ops.{Caching, Decontam, TextOps}
     val ss = stateScopedSession(spark, srcPath)
@@ -630,88 +547,50 @@ object EventStream {
       isNewCol.as("is_new"),
       isBenchCol.as("is_bench"))
     // static bounded indexes, built ONCE batch-side (never per micro-batch)
-    val raw = graft.queries.Tables.open(ss, srcPath)
-    val all = shaped(raw)
+    val all = shaped(graft.queries.Tables.open(ss, srcPath))
     val snapHashes = all.filter(!col("is_new"))
       .select(md5(coalesce(col("text"), lit(""))).as("h")).distinct()
       .withColumn("__in_snap", lit(true))
       .localCheckpoint(true)
     val benchGrams = Decontam.benchmarkGrams(
-      Decontam.gramRows(all.filter(col("is_bench")), "doc_id", "text", lit(true), gramN))
+      Decontam.gramRows(all.filter(col("is_bench")), "doc_id", "text", lit(true), CurationGramN))
       .localCheckpoint(true)
-    val f = new java.io.File(srcPath)
-    val reader0 = ss.readStream
-      .schema(raw.schema)
-      // slice the source into real micro-batches where the fixture has
-      // multiple files (the scaled fixtures are 32-file splittable)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-    val reader = if (f.isDirectory) reader0 else reader0.option("pathGlobFilter", f.getName)
-    val docsStream = shaped(reader.parquet(if (f.isDirectory) srcPath else f.getParent))
+    val docsStream = shaped(streamParquet(ss, srcPath, Some(CurationFilesPerTrigger)))
       .filter(col("is_new"))
-    var target: DataFrame = null
-    val q = docsStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the per-batch funnel: gopher → dedup-vs-snapshot → decontam
-        val quality = batch.select("doc_id")
-          .join(
-            TextOps.gopherQuality(batch, "doc_id", "text")
-              .select(col("doc_id"), col("keep").as("__qk")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("__qk"), lit(false)).as("quality_pass"))
-        val hashed = batch
-          .select(col("doc_id"), col("is_bench"), md5(coalesce(col("text"), lit(""))).as("h"))
-          .join(snapHashes, Seq("h"), "left")
-          .select(
-            col("doc_id"), col("is_bench"), col("h"),
-            coalesce(col("__in_snap"), lit(false)).as("in_snap"))
-        // benchmark-flagged delta docs are held out, not "contaminated"
-        // by their own grams — the batch funnel's contaminatedDocs rule
-        val hits = Decontam.gramRows(batch, "doc_id", "text", col("is_bench"), gramN)
-          .filter(!col("is_bench"))
-          .join(broadcast(benchGrams), "gh")
-          .select("doc_id").distinct()
-          .withColumn("__hit", lit(true))
-        val inc = hashed
-          .join(quality, "doc_id")
-          .join(hits, Seq("doc_id"), "left")
-          .select(
-            col("doc_id"), col("is_bench"), col("quality_pass"),
-            coalesce(col("__hit"), lit(false)).as("contaminated"),
-            col("h"), col("in_snap"))
-          .localCheckpoint(true)
-        target =
-          if (target == null) inc
-          else {
-            val merged = target.unionByName(inc).localCheckpoint(true)
-            Caching.release(target)
-            Caching.release(inc)
-            merged
-          }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // Timeout scales with the micro-batch count: the sf10 gate default
-    // (maxFilesPerTrigger=1 over a 32-file fixture) already measures
-    // ~80 s on a host with documented 20-35% contention bands, so a flat
-    // 120 s (the cheap drains' precedent) left no headroom — a
-    // contention burst would fail an entire sweep (r20 advice). 120 s
-    // base + 15 s per expected micro-batch.
-    val srcFiles = {
-      val fl = f.isDirectory match {
-        case true  => Option(f.listFiles()).map(_.count(_.getName.endsWith(".parquet"))).getOrElse(1)
-        case false => 1
-      }
-      math.max(1, fl)
+    // the per-batch funnel: gopher → dedup-vs-snapshot → decontam
+    def verdicts(batch: DataFrame): DataFrame = {
+      val quality = batch.select("doc_id")
+        .join(
+          TextOps.gopherQuality(batch, "doc_id", "text")
+            .select(col("doc_id"), col("keep").as("__qk")),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("__qk"), lit(false)).as("quality_pass"))
+      val hashed = batch
+        .select(col("doc_id"), col("is_bench"), md5(coalesce(col("text"), lit(""))).as("h"))
+        .join(snapHashes, Seq("h"), "left")
+        .select(
+          col("doc_id"), col("is_bench"), col("h"),
+          coalesce(col("__in_snap"), lit(false)).as("in_snap"))
+      // benchmark-flagged delta docs are held out, not "contaminated"
+      // by their own grams — the batch funnel's contaminatedDocs rule
+      val hits = Decontam.gramRows(batch, "doc_id", "text", col("is_bench"), CurationGramN)
+        .filter(!col("is_bench"))
+        .join(broadcast(benchGrams), "gh")
+        .select("doc_id").distinct()
+        .withColumn("__hit", lit(true))
+      hashed
+        .join(quality, "doc_id")
+        .join(hits, Seq("doc_id"), "left")
+        .select(
+          col("doc_id"), col("is_bench"), col("quality_pass"),
+          coalesce(col("__hit"), lit(false)).as("contaminated"),
+          col("h"), col("in_snap"))
     }
-    val drainTimeoutMs =
-      120000L + 15000L * ((srcFiles + maxFilesPerTrigger - 1) / maxFilesPerTrigger)
-    if (!q.awaitTermination(drainTimeoutMs)) {
-      q.stop()
-      throw new IllegalStateException(
-        s"stream curation drain of $srcPath did not finish within ${drainTimeoutMs / 1000} s")
-    }
-    require(target != null, s"stream curation drain of $srcPath produced no batches")
+    // one micro-batch per source file
+    val f = new java.io.File(srcPath)
+    val srcFiles = Option(f.listFiles()).fold(1)(_.count(_.getName.endsWith(".parquet")).max(1))
+    val target = fold(docsStream, "curation", srcPath, expectedBatches = srcFiles)(
+      verdicts, _.unionByName(_))
     // within-delta representative resolution over the ACCUMULATED rows
     // (associative min — slicing-independent; see the contract above)
     val reps = target.groupBy("h").agg(min(col("doc_id")).as("__rep"))
@@ -726,6 +605,12 @@ object EventStream {
         !col("is_bench") && col("quality_pass") && !col("dup") && !col("contaminated"))
     Caching.materializeAndRelease(out, target, snapHashes, benchGrams)
   }
+
+  /** Files each curation micro-batch reads — see [[curationRunOnce]]. */
+  private val CurationFilesPerTrigger = 1
+
+  /** Decontamination gram length of [[curationRunOnce]]. */
+  private val CurationGramN = 13
 
   /** Stream-static enrichment: the streaming events join a BROADCAST
     * static dimension (per-type totals computed batch-side once) before a
@@ -746,7 +631,7 @@ object EventStream {
     // one scoped session for the stream AND the static dim (single-session
     // join)
     val ss = stateScopedSession(spark, srcPath)
-    val ev = streamEvents(ss, srcPath)
+    val ev = streamParquet(ss, srcPath)
     val static = graft.queries.Tables
       .t(ss, new java.io.File(srcPath).getParent, "events")
       .groupBy("event_type")
@@ -791,14 +676,13 @@ object EventStream {
     * e.g. ann_recall_at_k's futures). `newSession()` shares the
     * SparkContext and cached data but isolates SQLConf; it starts from
     * the context's SparkConf rather than the parent's RUNTIME conf, so
-    * the confs a drain depends on are carried over explicitly.
+    * the time zone is carried over explicitly (the nanos-as-long read
+    * conf is set on this session by the drain's own `Tables.open`).
     */
-  private def stateScopedSession(spark: SparkSession, srcPath: String): SparkSession = {
+  private[graft] def stateScopedSession(spark: SparkSession, srcPath: String): SparkSession = {
     val ss = spark.newSession()
-    Seq(
-      "spark.sql.session.timeZone",
-      "spark.sql.legacy.parquet.nanosAsLong"
-    ).foreach(k => spark.conf.getOption(k).foreach(ss.conf.set(k, _)))
+    val tz = "spark.sql.session.timeZone"
+    spark.conf.getOption(tz).foreach(ss.conf.set(tz, _))
     // The state store is the drain's own choice, not the caller's: the two
     // settings below are RocksDB-only, so a registered streaming query
     // must run on any session a caller builds — including one left on (or
@@ -852,18 +736,10 @@ object EventStream {
   private def stateParallelism(ss: SparkSession, srcPath: String): Int = {
     val cap = ss.sparkContext.defaultParallelism
     val rows = footerRowCount(ss, srcPath).getOrElse {
-      // fallback: the distributed count (needs the same nanos
-      // normalization the stream read uses — save/restore so the session
-      // keeps whatever value was copied from the parent)
-      val key = "spark.sql.legacy.parquet.nanosAsLong"
-      val prev = ss.conf.getOption(key)
-      ss.conf.set(key, "true")
-      try ss.read.parquet(srcPath).count()
+      // fallback: the distributed count, through the same open as the
+      // drain's source read
+      try graft.queries.Tables.open(ss, srcPath).count()
       catch { case scala.util.control.NonFatal(_) => return cap }
-      finally prev match {
-        case Some(v) => ss.conf.set(key, v)
-        case None    => ss.conf.unset(key)
-      }
     }
     math.min(cap.toLong, math.max(4L, rows / 32768L)).toInt
   }
@@ -882,28 +758,71 @@ object EventStream {
       else Some(FooterSchema.rowCount(files.map(FooterSchema.footer(fs, _))))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The frame must already live on a [[stateScopedSession]] — the query
-    * reads shuffle/state sizing from `out.sparkSession`, and the memory
-    * sink registers its table there too.
+  /** Drain `out` into an in-memory table and return it. The frame must
+    * already live on a [[stateScopedSession]] — the query reads
+    * shuffle/state sizing from `out.sparkSession`, and the memory sink
+    * registers its table there too.
     */
-  private def drainToTable(
+  private[graft] def drainToTable(
       out: DataFrame,
       kind: String,
       mode: String,
       src: String
   ): DataFrame = {
-    val name = s"stream_${kind}_${System.nanoTime()}"
-    val q = out.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // a timed-out drain would silently return a partial table — fail loud
-    if (!q.awaitTermination(120000)) {
-      q.stop()
-      throw new IllegalStateException(s"stream drain of $src did not finish within 120 s")
-    }
+    val sink = out.writeStream.format("memory").outputMode(mode)
+    val name = drain(sink, kind, src, expectedBatches = 1)
     out.sparkSession.table(name)
+  }
+
+  /** Eagerly fold a stream's micro-batches into one checkpointed frame
+    * through `foreachBatch`: batch 1 keeps `perBatch(b)`, each later batch
+    * keeps `merge(target, perBatch(b))`, and the superseded target's
+    * blocks are released, so the footprint is one generation (the CC-loop
+    * discipline). `perBatch` stays lazy: its one consumer is the merge
+    * checkpoint in the same call.
+    */
+  private def fold(stream: DataFrame, kind: String, src: String, expectedBatches: Int)(
+      perBatch: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame
+  ): DataFrame = {
+    var target: DataFrame = null
+    val sink = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      target =
+        if (target == null) perBatch(batch).localCheckpoint(true)
+        else {
+          val merged = merge(target, perBatch(batch)).localCheckpoint(true)
+          graft.ops.Caching.release(target)
+          merged
+        }
+      ()
+    }
+    drain(sink, kind, src, expectedBatches)
+    require(target != null, s"stream $kind drain of $src produced no batches")
+    target
+  }
+
+  /** Run one drain to completion: start the query as `stream_<kind>_<nanos>`
+    * with an AvailableNow trigger, wait, and return its name. A timed-out
+    * drain would silently leave a partial result, so it is stopped and
+    * fails loud. The timeout is 120 s plus 15 s per expected micro-batch
+    * after the first: a flat 120 s left a throttled drain (the sf10
+    * curation, one file per trigger over 32 files, ~80 s on a host with
+    * 20-35% contention bands) no headroom.
+    */
+  private def drain(
+      writer: DataStreamWriter[Row],
+      kind: String,
+      src: String,
+      expectedBatches: Int
+  ): String = {
+    val name = s"stream_${kind}_${System.nanoTime()}"
+    val q = writer.queryName(name).trigger(Trigger.AvailableNow()).start()
+    val timeoutMs = 120000L + 15000L * (expectedBatches - 1)
+    if (!q.awaitTermination(timeoutMs)) {
+      q.stop()
+      throw new IllegalStateException(
+        s"stream $kind drain of $src did not finish within ${timeoutMs / 1000} s")
+    }
+    name
   }
 }

@@ -139,7 +139,7 @@ class FixtureContractSpec extends SparkSpec {
         val path = s"${writeEvents(s"$root/$enc", enc)}/events.parquet"
         org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
         l.reset()
-        val stream = graft.streaming.EventStream.streamEvents(spark, path)
+        val stream = graft.streaming.EventStream.streamParquet(spark, path)
         org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
         assert(l.jobSpans.isEmpty, s"encoding $enc: opening the stream ran ${l.jobSpans.size} jobs")
         assert(stream.isStreaming)

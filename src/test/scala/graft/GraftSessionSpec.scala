@@ -24,7 +24,7 @@ class GraftSessionSpec extends SparkSpec {
     assert(offenders == List("src/main/scala/graft/GraftSession.scala"), offenders)
   }
 
-  test("src/main has exactly the seven mains: Bench, Verify and five tools") {
+  test("src/main has exactly the six mains: Bench, Verify and four tools") {
     // one-off probe mains outlived the question they answered; a new
     // diagnostic belongs in Probe, not in another main
     val pkg = """(?m)^package\s+([\w.]+)""".r

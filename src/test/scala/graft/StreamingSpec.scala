@@ -15,6 +15,21 @@ class StreamingSpec extends SparkSpec {
   private def windowTriples(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
 
+  /** Hourly event counts streamed from `dir` on a scoped session and
+    * drained: complete mode with no watermark (a watermark would not prune
+    * complete-mode state), or append mode with `watermark`.
+    */
+  private def streamedWindows(dir: String, watermark: Option[String]) = {
+    val ss = EventStream.stateScopedSession(spark, dir)
+    val stream = EventStream.streamParquet(ss, dir)
+    val agg = watermark.fold(stream)(stream.withWatermark("ts", _))
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("window.start").as("ws"), col("event_type"), col("n"))
+    val mode = if (watermark.isEmpty) "complete" else "append"
+    windowTriples(EventStream.drainToTable(agg, "win", mode, dir))
+  }
+
   test("file-stream tumbling window agg matches batch groupBy on the same data") {
     val src = graft.queries.Tables.t(spark, sf("sf0.001"), "events")
       .select("ts", "event_type", "value")
@@ -27,8 +42,7 @@ class StreamingSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("ws"), col("event_type"), col("n")))
 
-    val streamed = windowTriples(
-      EventStream.runOnce(spark, dir, src.schema, windowLen = "1 hour"))
+    val streamed = streamedWindows(dir, watermark = None)
 
     assert(streamed == batch)
     assert(streamed.nonEmpty)
@@ -40,10 +54,8 @@ class StreamingSpec extends SparkSpec {
     val dir = tempDir("stream-src-append")
     src.coalesce(1).write.mode("overwrite").parquet(dir)
 
-    val complete = windowTriples(
-      EventStream.runOnce(spark, dir, src.schema, windowLen = "1 hour"))
-    val appended = windowTriples(
-      EventStream.runOnceAppend(spark, dir, src.schema, watermark = "2 hours", windowLen = "1 hour"))
+    val complete = streamedWindows(dir, watermark = None)
+    val appended = streamedWindows(dir, watermark = Some("2 hours"))
 
     // append = the subset of complete whose window end the final watermark
     // passed; trailing windows stay pending by design
@@ -140,17 +152,33 @@ class StreamingSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  test("q_stream_dedup drains in one micro-batch") {
+  test("every registered drain runs its pinned micro-batch count") {
+    // (query, drain kind, micro-batches at sf0.001). Drains that emit on
+    // state eviction run a data batch plus the no-data flush batch;
+    // q_stream_restart runs two lifecycles of that shape; the dedup drain
+    // turns the flush batch off; the folds and the complete-mode window
+    // read the single fixture file in one batch.
+    val pinned = Seq(
+      ("q_sessionize_stream", "sess", 2),
+      ("q_stream_restart", "restart", 4),
+      ("q_stream_interval_join", "ivj", 2),
+      ("q_stream_interval_left", "ivj", 2),
+      ("q_stream_upsert", "upsert", 1),
+      ("q_stream_dedup", "dedup", 1),
+      ("q_stream_enrich", "enrich", 1),
+      ("q_stream_curation", "curation", 1))
     val l = new QueryListener
     spark.sparkContext.addSparkListener(l)
     try {
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-      l.reset()
-      val rows = SparkEntry.queries("q_stream_dedup")(spark, sf("sf0.001")).count()
-      org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
-      assert(rows > 0)
-      val dedup = l.batches.filter(p => Option(p.name).exists(_.startsWith("stream_dedup")))
-      assert(dedup.size == 1, dedup.map(p => (p.batchId, p.numInputRows)))
+      for ((q, kind, want) <- pinned) {
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        l.reset()
+        val rows = SparkEntry.queries(q)(spark, sf("sf0.001")).count()
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        assert(rows > 0, q)
+        val got = l.batches.filter(p => Option(p.name).exists(_.startsWith(s"stream_${kind}_")))
+        assert(got.size == want, s"$q: ${got.map(p => (p.name, p.batchId, p.numInputRows))}")
+      }
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -362,8 +390,8 @@ class StreamingSpec extends SparkSpec {
     src.exceptAll(src.limit(half)).coalesce(1).write.mode("append").parquet(srcDir)
     drain("7") // restarted lifecycle under a different conf
     // the two-lifecycle output must equal the watermark-passed subset of
-    // the single-run complete aggregation (same assertion family as
-    // runOnceAppend)
+    // the single-run complete aggregation (same assertion family as the
+    // append-mode window case)
     val got = windowTriples(spark.read.parquet(outDir)
       .select(col("ws"), col("event_type"), col("n")))
     val complete = windowTriples(

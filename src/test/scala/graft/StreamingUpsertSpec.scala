@@ -69,7 +69,7 @@ class StreamingUpsertSpec extends SparkSpec {
   test("curationRunOnce: multi-micro-batch drain converges to the batch incremental funnel") {
     val docs = graft.queries.Tables.t(spark, sf("sf0.001"), "documents")
       .select("doc_id", "text")
-    // three files → three micro-batches with maxFilesPerTrigger=1, so the
+    // three files → three micro-batches at one file per trigger, so the
     // slicing-independence contract (per-doc pure fields per batch,
     // associative min-id rep over the accumulated rows) is actually
     // exercised across batch boundaries, not vacuously on one batch
@@ -81,9 +81,20 @@ class StreamingUpsertSpec extends SparkSpec {
     val isNew = graft.ops.Sampling.hashBucket(col("doc_id"), "sinc", 100) >= 70
     val isBench = graft.ops.Sampling.hashBucket(col("doc_id"), "sbench", 100) < 10
     def key(r: org.apache.spark.sql.Row) = r.getLong(0)
-    val streamed = graft.streaming.EventStream
-      .curationRunOnce(spark, srcDir, isNew, isBench, maxFilesPerTrigger = 1)
-      .collect().map(r => key(r) -> r.toSeq).toMap
+    val l = new QueryListener
+    spark.sparkContext.addSparkListener(l)
+    val streamed =
+      try {
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        l.reset()
+        val out = graft.streaming.EventStream.curationRunOnce(spark, srcDir, isNew, isBench)
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        // the fold checkpoints each later micro-batch's merge once, with
+        // the batch's verdicts computed inside it
+        assert(l.batches.size == 3, l.batches.map(_.batchId))
+        assert(l.jobSpans.size == 35, l.jobSpans.map(_.desc))
+        out.collect().map(r => key(r) -> r.toSeq).toMap
+      } finally spark.sparkContext.removeSparkListener(l)
     val batch = graft.ops.Curation
       .incrementalVerdicts(docs, "doc_id", "text", isNew, isBench)
       .collect().map(r => key(r) -> r.toSeq).toMap
